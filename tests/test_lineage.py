@@ -3,6 +3,7 @@ assert identical final table and no duplicate lineage rows (SURVEY.md §5.5)."""
 
 import os
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -55,6 +56,35 @@ def test_resume_after_partial_commit(spark, pts, tmp_path):
     r3 = L.run_resumable(spark, pts, out, "tile_y", keys, batch_size=2)
     assert r3["written_keys"] == [] and r3["batches"] == 0
     assert L.read_lineage(spark, out).count() == len(keys)
+
+
+def test_crash_between_data_and_manifest(spark, pts, tmp_path):
+    """A batch whose data landed but whose manifest did not is uncommitted:
+    the next run rewrites (never duplicates) its partitions, records each
+    key once, and its observed n_rows equal what DuckDB reads back from each
+    partition directory.  The session's overwrite mode is left untouched."""
+    out = str(tmp_path / "job")
+    data = os.path.join(out, L.DATA_DIR)
+    keys = sorted(_keys(pts))
+    orphan = keys[:2]
+    pts.where(F.col("tile_y").isin(orphan)).write.partitionBy("tile_y").parquet(data)
+    assert L.committed_keys(spark, out) == set()
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(conf)
+    res = L.run_resumable(spark, pts, out, "tile_y", keys, batch_size=2)
+    assert res["written_keys"] == keys and res["skipped_keys"] == []
+    assert spark.conf.get(conf) == mode
+
+    want = {r.tile_y: r["count"] for r in pts.groupBy("tile_y").count().collect()}
+    on_disk = {
+        k: duckdb.sql(f"SELECT count(*) FROM read_parquet('{data}/tile_y={k}/*.parquet')").fetchone()[0]
+        for k in keys
+    }
+    assert on_disk == want
+    lin = L.read_lineage(spark, out).toPandas()
+    assert sorted(lin.pkey) == keys and lin.pkey.is_unique
+    assert {int(r.pkey): int(r.n_rows) for _, r in lin.iterrows()} == on_disk
 
 
 def test_north_star_end_to_end(spark, tmp_path):

@@ -1,13 +1,16 @@
 """Point-in-polygon join: Spark pipeline vs independent numpy brute force,
 plus the invariants demanded by FIXTURES.md (partition invariance, holes)."""
 
+import re
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from whitebox_geospatial_analysis_tools_spark.functions.geometry import PipIndex
-from whitebox_geospatial_analysis_tools_spark.operators.spatial_join import pip_join
+from whitebox_geospatial_analysis_tools_spark.operators.spatial_join import pip_join, pip_semi
 from whitebox_geospatial_analysis_tools_spark.sources.pages import points_from_documents
 from whitebox_geospatial_analysis_tools_spark.sources.polygons import make_polygon_layer
 
@@ -98,3 +101,30 @@ def test_text_passthrough_byte_identical(spark):
         .count()
     )
     assert diff == 0
+
+
+def test_left_join_single_pass(spark):
+    """Spatial left join = inner pairs + anti-joined points with null poly_id
+    (as a multiset), never multiplies duplicated input keys, and scans the
+    points once: one parquet scan under a broadcast LEFT OUTER join, no
+    shuffle and no sort-merge join."""
+    pts = points_from_documents(spark, SF)
+    left = pip_join(pts, spark, keep=("doc_id",), how="left")
+    assert left.columns == [*pts.columns, "poly_id"]
+    got = Counter(map(tuple, left.select("doc_id", "poly_id").collect()))
+    inner = pip_join(pts, spark, keep=("doc_id",)).select("doc_id", "poly_id").collect()
+    anti = pip_semi(pts, spark, "doc_id", negate=True).select("doc_id").collect()
+    want = Counter(map(tuple, inner)) + Counter((r.doc_id, None) for r in anti)
+    assert anti and got == want
+
+    plan = left._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1
+    assert "SortMergeJoin" not in plan
+    assert not re.search(r"(?<!Broadcast)Exchange ", plan)
+    assert re.search(r"BroadcastHashJoin .*LeftOuter, BuildRight", plan)
+
+    dup = pts.unionByName(pts.where(F.col("doc_id") % 7 == 0))
+    got_dup = Counter(
+        map(tuple, pip_join(dup, spark, keep=("doc_id",), how="left")
+            .select("doc_id", "poly_id").collect()))
+    assert got_dup == got + Counter({k: n for k, n in got.items() if k[0] % 7 == 0})

@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from whitebox_geospatial_analysis_tools_spark.session import get_spark  # noqa: E402
+from whitebox_geospatial_analysis_tools_spark.session import cpus, get_spark  # noqa: E402
 from whitebox_geospatial_analysis_tools_spark.operators import clump as clump_mod  # noqa: E402
 from whitebox_geospatial_analysis_tools_spark.operators import condense  # noqa: E402
 from whitebox_geospatial_analysis_tools_spark.operators import hydro  # noqa: E402
@@ -49,7 +49,7 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=2_000_000)
     args = ap.parse_args()
 
-    spark = get_spark(master="local[32]", shuffle_partitions=64)
+    spark = get_spark(shuffle_partitions=2 * cpus())
     n_cells = args.rows * args.cols
     print(f"SOAK dem {args.rows}x{args.cols} = {n_cells / 1e6:.1f}M cells; "
           f"docs = {args.docs / 1e6:.1f}M", flush=True)
@@ -173,8 +173,7 @@ def resume_worker(out_dir: str, docs: int) -> None:
 
     from whitebox_geospatial_analysis_tools_spark.plans import lineage
 
-    spark = get_spark(app="wgs-soak-resume", master="local[32]",
-                      shuffle_partitions=64)
+    spark = get_spark(app="wgs-soak-resume", shuffle_partitions=2 * cpus())
     res = _resume_result(spark, docs).persist()
     res.count()
     summary = lineage.run_resumable(
@@ -198,7 +197,7 @@ def ann_soak(n_vecs: int) -> None:
     query gets exactly k re-ranked neighbors."""
     from whitebox_geospatial_analysis_tools_spark.operators import simsearch
 
-    spark = get_spark(master="local[32]", shuffle_partitions=64)
+    spark = get_spark(shuffle_partitions=2 * cpus())
     n_clusters = max(1, n_vecs // 10)
     # center component ~ U(-1, 1) per (cluster, dim); member = center + 5%
     # noise -> within-cluster cosine >> SEMDEDUP_TAU, so prunes must occur
@@ -281,8 +280,7 @@ def kill_resume(docs: int) -> None:
     wall2 = time.perf_counter() - t1
 
     # verify: identical final table, full key coverage, no duplicate lineage
-    spark = get_spark(app="wgs-soak-verify", master="local[32]",
-                      shuffle_partitions=64)
+    spark = get_spark(app="wgs-soak-verify", shuffle_partitions=2 * cpus())
     exp = _resume_result(spark, docs)
     got = spark.read.parquet(os.path.join(out_dir, "data")).select(
         "doc_id", "n_blocks", "n_dup_blocks", "kept_chars", "kept_md5", "pkey")

@@ -14,7 +14,6 @@ Python (BASELINE.json input_hint).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from ..sources.polygons import PolygonLayer, make_polygon_layer
 
@@ -97,74 +96,6 @@ class PipIndex:
         return res
 
 
-def make_pip_refine_udf(layer: PolygonLayer | None = None):
-    """pandas_udf (px, py, poly_id) -> bool, Arrow-batched, JVM<->numpy only."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    # Build the index lazily on each executor (tiny layer; cached per process)
-    state: dict = {}
-
-    @F.pandas_udf(T.BooleanType())
-    def pip_contains(px: pd.Series, py: pd.Series, poly_id: pd.Series) -> pd.Series:
-        if "idx" not in state:
-            state["idx"] = PipIndex(layer)
-        m = state["idx"].contains_pairs(
-            px.to_numpy(np.float64), py.to_numpy(np.float64), poly_id.to_numpy(np.int64)
-        )
-        return pd.Series(m)
-
-    return pip_contains
-
-
-# ---------------------------------------------------------------------------
-# covering cells: polygon bbox -> list of candidate cell ids (driver-side;
-# the polygon layer is the SMALL broadcast side). Conservative: bbox cover.
-# ---------------------------------------------------------------------------
-def covering_cells(size: float, cols: int, layer: PolygonLayer | None = None):
-    """Yield (cell_id, poly_id) for every grid cell intersecting each bbox."""
-    layer = layer or make_polygon_layer()
-    pairs = []
-    for i in range(layer.n):
-        xmin, ymin, xmax, ymax = layer.bbox[i]
-        cx0, cx1 = int(np.floor(xmin / size)), int(np.floor(xmax / size))
-        cy0, cy1 = int(np.floor(ymin / size)), int(np.floor(ymax / size))
-        pid = int(layer.poly_id[i])
-        for cy in range(cy0, cy1 + 1):
-            for cx in range(cx0, cx1 + 1):
-                pairs.append((cy * cols + cx, pid))
-    return pairs
-
-
-def _segs_intersect_rect(x1, y1, x2, y2, rx0, ry0, rx1, ry1) -> np.ndarray:
-    """(E,) bool: does each segment intersect the closed rectangle?
-
-    Liang-Barsky parametric clip, vectorized over the edge table.  Exact up
-    to IEEE rounding; callers expand the rect by an epsilon so borderline
-    edges classify as 'boundary' (safe: boundary cells get the exact
-    ray-cast refinement anyway).
-    """
-    dx, dy = x2 - x1, y2 - y1
-    t0 = np.zeros_like(x1)
-    t1 = np.ones_like(x1)
-    ok = np.ones(len(x1), dtype=bool)
-    for p, q in (
-        (-dx, x1 - rx0),
-        (dx, rx1 - x1),
-        (-dy, y1 - ry0),
-        (dy, ry1 - y1),
-    ):
-        par = p == 0.0
-        ok &= ~(par & (q < 0.0))  # parallel and fully outside this side
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = q / p
-        ent = ~par & (p < 0.0)
-        ext = ~par & (p > 0.0)
-        t0 = np.where(ent, np.maximum(t0, t), t0)
-        t1 = np.where(ext, np.minimum(t1, t), t1)
-    return ok & (t0 <= t1)
-
-
 def classified_cells(size: float, cols: int, layer: PolygonLayer | None = None):
     """Covering cells with interior/boundary classification.
 
@@ -244,12 +175,6 @@ _CLASSIFIED_CACHE: dict = {}
 # ---------------------------------------------------------------------------
 # shape metrics (GISTools Area/Perimeter/Centroid semantics on vector rings)
 # ---------------------------------------------------------------------------
-def shoelace_area(ring: np.ndarray) -> float:
-    x, y = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x, -1), np.roll(y, -1)
-    return float(np.sum(x * y2 - x2 * y) / 2.0)
-
-
 def perimeter(ring: np.ndarray) -> float:
     d = np.roll(ring, -1, axis=0) - ring
     return float(np.sum(np.sqrt(d[:, 0] ** 2 + d[:, 1] ** 2)))

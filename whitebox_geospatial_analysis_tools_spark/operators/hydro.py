@@ -244,19 +244,6 @@ def stream_link_slope(pointers: DataFrame, dem_cells: DataFrame,
     )
 
 
-def pointer_edges(pointers: DataFrame) -> DataFrame:
-    """(id, nid): flat-id edge per cell toward its D8 target (code>0)."""
-    dr = F.expr("element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)")
-    dc = F.expr("element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)")
-    return (
-        pointers.where(F.col("code") > 0)
-        .select(
-            (F.col("row") * F.lit(1_000_000) + F.col("col")).alias("id"),
-            ((F.col("row") + dr) * F.lit(1_000_000) + (F.col("col") + dc)).alias("nid"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # tile-local flow solve (shared by flow_accum and watershed)
 # ---------------------------------------------------------------------------

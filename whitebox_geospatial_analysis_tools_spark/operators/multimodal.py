@@ -113,14 +113,3 @@ def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
             )
 
     return media.mapInPandas(kernel, out_schema)
-
-
-def html_features(pages: DataFrame) -> DataFrame:
-    """REAL html byte-feature extraction — pure Catalyst (no decode stub
-    needed for byte stats): length, tag count, text ratio."""
-    return pages.select(
-        "url",
-        F.expr("octet_length(html)").alias("html_bytes"),
-        F.expr("size(split(cast(html as string), '<')) - 1").alias("n_tags"),
-        F.expr("octet_length(text)").alias("text_bytes"),
-    )

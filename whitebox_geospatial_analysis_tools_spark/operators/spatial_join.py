@@ -7,14 +7,13 @@ Semantics from the reference:
     (VectorTools/src/plugins/IsolateVectorFeaturesByLocation.java:240-737)
 
 Physical design for 10^12 rows (NOT the reference's nested loop):
-  1. points carry a grid cell id (narrow map, codegen, no shuffle);
-  2. the polygon layer is tiny -> its covering-cell index is a BROADCAST map
-     (cell_id -> candidate poly_id);  the join is map-side, zero shuffle of
-     the big side;
-  3. a bbox prefilter (plain Column predicate, codegen) drops most candidate
-     pairs before Python is ever involved;
-  4. exact even-odd refinement runs as ONE Arrow-batched pandas_udf over the
-     surviving pairs (the only Python in the pipeline).
+  1. points carry a res-9 grid cell id (narrow map, codegen, no shuffle);
+  2. the polygon layer is tiny -> its classified covering-cell index
+     (cell_id -> poly_id, interior flag, boundary edge list) is a BROADCAST
+     map;  the join is map-side, zero shuffle of the big side;
+  3. interior cells resolve containment outright; boundary cells run the
+     exact even-odd ray-cast as a Catalyst array aggregate inside the join
+     condition (whole-stage codegen, no Python anywhere in the join).
 
 The aggregate (counts per polygon) is a partial-aggregated groupBy over ~100
 keys — negligible shuffle.  Skewed hot cells don't skew this join (broadcast
@@ -28,25 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import exprs
-from ..functions.geometry import classified_cells, covering_cells, make_pip_refine_udf
-from ..sources.polygons import make_polygon_layer, polygons_df
+from ..functions.geometry import classified_cells
+from ..sources.polygons import make_polygon_layer
 
 # refinement-index resolution: res-9 cells (2/3 deg).  Small enough that most
 # matched points land in interior cells (pure-JVM containment), big enough
 # that the classified index stays a few-MB broadcast at 100 polygons.
 _REFINE_RES = 9
-
-
-def polygon_cell_index(spark: SparkSession, size: float = exprs.TILE_SIZE,
-                       cols: int = exprs.TILE_COLS) -> DataFrame:
-    """Small (cell_id, poly_id, bbox) candidate map — the broadcast side."""
-    layer = make_polygon_layer()
-    pairs = covering_cells(size, cols, layer)
-    bbox = {int(p): tuple(map(float, b)) for p, b in zip(layer.poly_id, layer.bbox)}
-    rows = [(c, p, *bbox[p]) for c, p in pairs]
-    return spark.createDataFrame(
-        rows, "cell_id long, poly_id long, xmin double, ymin double, xmax double, ymax double"
-    )
 
 
 def classified_cell_index(spark: SparkSession, res: int = _REFINE_RES) -> DataFrame:
@@ -107,28 +94,34 @@ def pip_join(points: DataFrame, spark: SparkSession, *,
     """Exact point-in-polygon join: points(lon,lat) x polygon layer.
 
     Physical shape (the 100 TB design): ONE broadcast equi-join on the res-9
-    cell id against the classified (interior/boundary) polygon index, then a
-    single codegen filter ``interior OR odd(crossings)`` where the crossing
-    count is a Catalyst array-aggregate over the broadcast edge list.  The
-    big side is touched once, never shuffled, and never crosses into Python
-    (the vectorized numpy ray-cast kernel remains in functions/geometry.py
-    as the oracle for tests).  Skewed hot cells cost nothing here: the build
-    side is replicated, so no key-based repartitioning of points occurs.
+    cell id against the classified (interior/boundary) polygon index, with
+    ``interior OR odd(crossings)`` as the join's extra condition, where the
+    crossing count is a Catalyst array-aggregate over the broadcast edge
+    list.  The big side is touched once, never shuffled, and never crosses
+    into Python (the vectorized numpy ray-cast kernel remains in
+    functions/geometry.py as the oracle for tests).  Skewed hot cells cost
+    nothing here: the build side is replicated, so no key-based
+    repartitioning of points occurs.
 
-    Returns one row per (point, containing polygon).  ``how='left'`` keeps
-    unmatched points with null poly_id (spatial left join); 'inner' default.
+    ``how='inner'`` (default) returns one row per (point, containing
+    polygon) with columns ``keep + (lon, lat, tile_id, poly_id)``.
+    ``how='left'`` is the spatial left join: the same condition in a
+    broadcast LEFT OUTER join, so the plan is one scan of ``points`` and a
+    ``BroadcastHashJoin LeftOuter BuildRight`` with no Exchange.  It returns
+    every column of ``points`` plus ``poly_id``, one row per containing
+    polygon and one null-``poly_id`` row for a point in no polygon; input
+    rows are never multiplied by repeated key values (``keep`` is unused).
     """
-    idx = classified_cell_index(spark)
-    cell9 = F.expr(exprs.cell_expr("lon", "lat", _REFINE_RES))
-    pts = points.withColumn("_c9", cell9)
-    cand = pts.join(F.broadcast(idx), pts["_c9"] == idx["cell_id"], "inner")
-    out_cols = [F.col(c) for c in dict.fromkeys(list(keep) + ["lon", "lat", "tile_id", "poly_id"])]
-    hits = cand.where(F.col("interior") | F.expr(_PARITY)).select(*out_cols)
     if how == "inner":
-        return hits
-    if how == "left":
-        return points.join(hits.select(*keep, "poly_id"), list(keep), "left")
-    raise ValueError(f"unsupported how={how!r}")
+        cols = list(dict.fromkeys([*keep, "lon", "lat", "tile_id", "poly_id"]))
+    elif how == "left":
+        cols = [*points.columns, "poly_id"]
+    else:
+        raise ValueError(f"unsupported how={how!r}")
+    idx = classified_cell_index(spark)
+    pts = points.withColumn("_c9", F.expr(exprs.cell_expr("lon", "lat", _REFINE_RES)))
+    hit = (pts["_c9"] == idx["cell_id"]) & (F.col("interior") | F.expr(_PARITY))
+    return pts.join(F.broadcast(idx), hit, how).select(*cols)
 
 
 def pip_counts(points: DataFrame, spark: SparkSession, key: str = "doc_id") -> DataFrame:

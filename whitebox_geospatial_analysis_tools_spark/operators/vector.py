@@ -249,8 +249,8 @@ def convex_hull_edges(spark: SparkSession, prefilter: bool = True) -> DataFrame:
     the equivalence test.  Returns (poly_id, ax, ay, bx, by)."""
     from ..sources.polygons import polygons_df
 
-    v = shell_vertices(spark)
-    vc = hull_boundary_candidates_rows(polygons_df(spark)) if prefilter else v
+    vc = (hull_boundary_candidates_rows(polygons_df(spark)) if prefilter
+          else shell_vertices(spark))
     a = vc.select("poly_id", F.col("vi").alias("ai"), F.col("x").alias("ax"),
                   F.col("y").alias("ay"))
     b = vc.select("poly_id", F.col("vi").alias("bi"), F.col("x").alias("bx"),

@@ -30,13 +30,6 @@ def flagship_synthetic(spark: SparkSession, n_pages: int) -> DataFrame:
     return pairs.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n_pages"))
 
 
-def tile_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-page tile + res 7-9 cell assignment table (the second north-star
-    output: 'per-tile cell assignments')."""
-    pts = with_cells(points_from_documents(spark, sf_dir))
-    return pts.select("doc_id", "tile_id", "cell7", "cell8", "cell9")
-
-
 def run_north_star(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """The complete north-star job as one resumable, lineage-tracked run:
 

@@ -7,9 +7,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app: str = "wgs-engine", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or f"local[{cpus()}]"
     b = (
         SparkSession.builder.appName(app)
         .master(master)
@@ -23,7 +28,7 @@ def get_spark(app: str = "wgs-engine", master: str | None = None,
         # slower, observed).  Our derived columns are never null by
         # construction, so the inferred filters are pure downside.
         .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus()))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
