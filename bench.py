@@ -1,14 +1,15 @@
 """Benchmark harness (driver contract).
 
 Default mode: runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
+``SF_DIR`` below) on ``local[N]``, N = ``session.cpus()``
+($SPARK_GRAFT_CPUS, else the CPU affinity count), and prints ONE JSON
 line ``{"metric", "value", "unit", "queries", "sf", ...}``.
 
 ``--scaling`` mode: the north-rule evidence run — the SAME flagship job
 (synthetic pages -> geocode -> cell assign -> broadcast PIP join -> counts)
-at two parallelism levels (local[8] and local[32] standing in for N and 4N
-executors), reporting throughput at both plus scaling efficiency
-(thr_32 / (4 x thr_8)).  Results land in BENCH/BASELINE.md.
+at two parallelism levels, local[N/4] and local[N] with N =
+``session.cpus()``, reporting throughput at both plus scaling efficiency
+(thr_N / ((N / lo) x thr_lo)).  Results land in BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -20,8 +21,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from whitebox_geospatial_analysis_tools_spark.session import cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = cpus()
 
 # headline set: north-star spatial pipeline + one representative per family
 HEADLINE = [
@@ -135,19 +138,20 @@ def run_headline() -> dict:
         "per_query": "min_of_2",
         "queries": times,
         "sf": SF_DIR,
-        "cpus": int(CPUS),
+        "cpus": CPUS,
         "pip_pages_per_sec": pages_sec,
         "flagship_synthetic_pages_per_sec": flagship_pps,
         "flagship_synthetic_n": n_flag,
         # same-run host context: per-core ALU throughput varies up to ~2x
         # hour-to-hour on this box (BENCH/BASELINE.md control ladders), so
-        # every absolute reading above carries its own hardware scale
-        "alu_control_mops_32": _alu_control(),
+        # every absolute reading above carries its own hardware scale;
+        # the control runs one process per CPU (``cpus`` above)
+        "alu_control_mops": _alu_control(),
     }
 
 
 def _alu_control(dur: float = 1.5) -> float:
-    """32-process integer-LCG busy-loop throughput (M ops/s) — the
+    """One-process-per-CPU integer-LCG busy-loop throughput (M ops/s) — the
     tools/hw_controls.py pure-ALU control, sized down to ~2 s so every
     bench JSON records the host's same-run compute ceiling."""
     import multiprocessing as mp
@@ -162,7 +166,7 @@ def _alu_control(dur: float = 1.5) -> float:
         out.put(n / (time.time() - t0))
 
     q: mp.Queue = mp.Queue()
-    procs = [mp.Process(target=worker, args=(q,)) for _ in range(32)]
+    procs = [mp.Process(target=worker, args=(q,)) for _ in range(CPUS)]
     for p in procs:
         p.start()
     tot = sum(q.get() for _ in procs)
@@ -194,16 +198,19 @@ def _flagship_throughput(master: str, n_pages: int) -> float:
 
 
 def run_scaling(n_pages: int = 512_000_000) -> dict:
-    thr8 = _flagship_throughput("local[8]", n_pages)
-    thr32 = _flagship_throughput("local[32]", n_pages)
-    eff = thr32 / (4.0 * thr8)
+    lo, hi = max(1, CPUS // 4), CPUS
+    thr_lo = _flagship_throughput(f"local[{lo}]", n_pages)
+    thr_hi = _flagship_throughput(f"local[{hi}]", n_pages)
+    eff = thr_hi / ((hi / lo) * thr_lo)
     return {
-        "metric": "scaling_efficiency_8_to_32",
+        "metric": "scaling_efficiency",
         "value": round(eff, 3),
         "unit": "ratio",
         "n_pages": n_pages,
-        "throughput_local8_pages_sec": round(thr8, 1),
-        "throughput_local32_pages_sec": round(thr32, 1),
+        "cpus_lo": lo,
+        "cpus_hi": hi,
+        "throughput_lo_pages_sec": round(thr_lo, 1),
+        "throughput_hi_pages_sec": round(thr_hi, 1),
     }
 
 

@@ -3,6 +3,8 @@ wrong #4: convex_hull_edges was O(V^3) per feature)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -50,3 +52,21 @@ def test_candidates_degenerate_geometry(spark):
                 endpoints.add(ai)
                 endpoints.add(bi)
     assert endpoints <= cand
+
+
+def test_duplicated_vertex_gives_no_zero_length_edge(spark):
+    """A coordinate repeated at two vertex indices (here a doubled corner of
+    a notched square) must not pair with itself into a zero-length edge, nor
+    double the real edges it ends: both the candidate and the exhaustive
+    support test return exactly the four square edges, once each."""
+    ring = [[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [4.0, 4.0], [0.0, 4.0], [2.0, 1.0]]
+    polys = spark.createDataFrame(
+        [(1, [ring])], "poly_id long, rings array<array<array<double>>>")
+    verts = spark.createDataFrame(
+        [(1, vi, x, y) for vi, (x, y) in enumerate(ring)],
+        "poly_id long, vi int, x double, y double")
+    square = Counter([(1, 0.0, 0.0, 4.0, 0.0), (1, 4.0, 0.0, 4.0, 4.0),
+                      (1, 4.0, 4.0, 0.0, 4.0), (1, 0.0, 4.0, 0.0, 0.0)])
+    for vc in (vector.hull_boundary_candidates_rows(polys), verts):
+        got = Counter(map(tuple, vector.hull_support_edges(vc).collect()))
+        assert got == square

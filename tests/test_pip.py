@@ -9,12 +9,15 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from whitebox_geospatial_analysis_tools_spark.functions.geometry import PipIndex
-from whitebox_geospatial_analysis_tools_spark.operators.spatial_join import pip_join, pip_semi
+from whitebox_geospatial_analysis_tools_spark.functions.geometry import PipIndex, classified_cells
+from whitebox_geospatial_analysis_tools_spark.operators.spatial_join import (
+    classified_cell_index, pip_join, pip_semi,
+)
 from whitebox_geospatial_analysis_tools_spark.sources.pages import points_from_documents
 from whitebox_geospatial_analysis_tools_spark.sources.polygons import make_polygon_layer
 
 SF = "/root/testdata/sf0.001"
+_REFINE_SIZE, _REFINE_COLS = 2.0 / 3.0, 540  # res-9 cells, the index default
 
 
 def _brute_pairs(px, py, ids):
@@ -128,3 +131,27 @@ def test_left_join_single_pass(spark):
         map(tuple, pip_join(dup, spark, keep=("doc_id",), how="left")
             .select("doc_id", "poly_id").collect()))
     assert got_dup == got + Counter({k: n for k, n in got.items() if k[0] % 7 == 0})
+
+
+def test_classified_cell_index_arrow_build(spark):
+    """The Arrow-built index equals, row for row, the plain-Python
+    construction: each classified_cells triple, boundary rows holding their
+    polygon's edges in layer order and interior rows holding []; its cached
+    relation sits on a LocalTableScan (no pickled RDD), and a second call
+    returns the memoized DataFrame."""
+    idx = classified_cell_index(spark)
+    assert classified_cell_index(spark) is idx
+
+    layer = make_polygon_layer()
+    edges_of = {}
+    for p, *e in zip(layer.edge_poly, layer.x1, layer.y1, layer.x2, layer.y2):
+        edges_of.setdefault(int(p), []).append(tuple(map(float, e)))
+    want = [(c, p, i, [] if i else edges_of[p])
+            for c, p, i in classified_cells(_REFINE_SIZE, _REFINE_COLS)]
+    got = [(r.cell_id, r.poly_id, r.interior, [tuple(e) for e in r.edges])
+           for r in idx.collect()]
+    assert got == want
+
+    plan = idx._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan and "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan

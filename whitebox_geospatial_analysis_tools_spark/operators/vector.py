@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.polygons import make_polygon_layer, polygons_df
+from ..sources.polygons import edge_table, polygons_df
 
 # shoelace cross-term sum over one ring (vertices in array order; the closing
 # edge pairs the last vertex with the first)
@@ -93,12 +93,8 @@ def dissolve_stats(spark: SparkSession) -> DataFrame:
 
 
 def edges_df(spark: SparkSession) -> DataFrame:
-    layer = make_polygon_layer()
-    rows = [
-        (int(p), float(x1), float(y1), float(x2), float(y2))
-        for p, x1, y1, x2, y2 in zip(layer.edge_poly, layer.x1, layer.y1, layer.x2, layer.y2)
-    ]
-    return spark.createDataFrame(rows, "poly_id long, x1 double, y1 double, x2 double, y2 double")
+    """(poly_id, x1, y1, x2, y2) — the layer's edge table, one Arrow table."""
+    return spark.createDataFrame(edge_table())
 
 
 # exact point-to-segment squared distance (clamped projection) — identical
@@ -149,8 +145,6 @@ def points_within_distance(points: DataFrame, spark: SparkSession,
 
 def shell_vertices(spark: SparkSession) -> DataFrame:
     """(poly_id, vi, x, y) — ring-0 vertices of the polygon layer."""
-    from ..sources.polygons import polygons_df
-
     return polygons_df(spark).select(
         "poly_id", F.posexplode(F.expr("rings[0]")).alias("vi", "p")
     ).select("poly_id", "vi", F.expr("p[0]").alias("x"), F.expr("p[1]").alias("y"))
@@ -247,20 +241,27 @@ def convex_hull_edges(spark: SparkSession, prefilter: bool = True) -> DataFrame:
     "min over weak-boundary >= 0" iff "min over all vertices >= 0" — a
     half-plane is convex.  prefilter=False keeps the exhaustive form for
     the equivalence test.  Returns (poly_id, ax, ay, bx, by)."""
-    from ..sources.polygons import polygons_df
-
     vc = (hull_boundary_candidates_rows(polygons_df(spark)) if prefilter
           else shell_vertices(spark))
-    a = vc.select("poly_id", F.col("vi").alias("ai"), F.col("x").alias("ax"),
-                  F.col("y").alias("ay"))
-    b = vc.select("poly_id", F.col("vi").alias("bi"), F.col("x").alias("bx"),
-                  F.col("y").alias("by"))
+    return hull_support_edges(vc)
+
+
+def hull_support_edges(vc: DataFrame) -> DataFrame:
+    """The support test over a (poly_id, vi, x, y) vertex table: one row
+    (poly_id, ax, ay, bx, by) per distinct directed coordinate pair with
+    every vertex left-of-or-on line(a, b).  Pairs are formed over
+    coordinates, not vertex indices: a coordinate repeated at two indices
+    would otherwise pair with itself into a zero-length "edge" (cross = 0
+    for every witness) and duplicate each real edge it ends."""
+    a = vc.select("poly_id", F.col("x").alias("ax"), F.col("y").alias("ay"))
+    b = vc.select("poly_id", F.col("x").alias("bx"), F.col("y").alias("by"))
     w = vc.select("poly_id", F.col("x").alias("wx"), F.col("y").alias("wy"))
     cross = F.expr("(bx - ax) * (wy - ay) - (by - ay) * (wx - ax)")
     return (
-        a.join(b, "poly_id").where(F.col("ai") != F.col("bi"))
+        a.join(b, "poly_id")
+        .where((F.col("ax") != F.col("bx")) | (F.col("ay") != F.col("by")))
         .join(w, "poly_id")
-        .groupBy("poly_id", "ai", "bi", "ax", "ay", "bx", "by")
+        .groupBy("poly_id", "ax", "ay", "bx", "by")
         .agg(F.min(cross).alias("_mc"))
         .where(F.col("_mc") >= 0)
         .select("poly_id", "ax", "ay", "bx", "by")

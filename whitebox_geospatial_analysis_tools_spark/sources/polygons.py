@@ -19,6 +19,7 @@ from dataclasses import dataclass
 from functools import lru_cache
 
 import numpy as np
+import pyarrow as pa
 
 EXTENT = (0.0, 0.0, 360.0, 180.0)
 N_POLYS = 100
@@ -103,6 +104,18 @@ def make_polygon_layer() -> PolygonLayer:
         y2=np.concatenate(e_y2),
         rings=rings_all,
     )
+
+
+def edge_table() -> pa.Table:
+    """The flat edge table as one Arrow table ``(poly_id, x1, y1, x2, y2)``,
+    sorted by polygon; the sort is stable, so each polygon's edges keep
+    their layer (ring) order."""
+    layer = make_polygon_layer()
+    order = np.argsort(layer.edge_poly, kind="stable")
+    return pa.table({
+        "poly_id": layer.edge_poly[order],
+        **{c: getattr(layer, c)[order] for c in ("x1", "y1", "x2", "y2")},
+    })
 
 
 def edges_sql_values() -> str:
