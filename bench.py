@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from whitebox_geospatial_analysis_tools_spark.session import cpus  # noqa: E402
+from whitebox_geospatial_analysis_tools_spark.session import best_of, cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = cpus()
@@ -109,12 +109,7 @@ def run_headline() -> dict:
     times: dict[str, float] = {}
     for name in HEADLINE:
         fn = qs[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            _force(fn(spark, SF_DIR))
-            best = min(best, time.time() - t0)
-        times[name] = round(best, 3)
+        times[name] = round(best_of(lambda: _force(fn(spark, SF_DIR)), 2), 3)
     total = round(sum(times.values()), 3)
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     pages_sec = round(n_docs / max(times["pip_counts"], 1e-9), 1)
@@ -124,11 +119,7 @@ def run_headline() -> dict:
 
     n_flag = 64_000_000
     flagship_synthetic(spark, n_flag).count()
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        flagship_synthetic(spark, n_flag).count()
-        best = min(best, time.time() - t0)
+    best = best_of(lambda: flagship_synthetic(spark, n_flag).count(), 2)
     flagship_pps = round(n_flag / best, 1)
     spark.stop()
     return {
@@ -187,11 +178,7 @@ def _flagship_throughput(master: str, n_pages: int) -> float:
         # honest scaling measure (cold-start constants would otherwise mask
         # the parallel fraction at sandbox scale).
         flagship_synthetic(spark, n_pages).count()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            flagship_synthetic(spark, n_pages).count()
-            best = min(best, time.time() - t0)
+        best = best_of(lambda: flagship_synthetic(spark, n_pages).count(), 3)
     finally:
         spark.stop()
     return n_pages / best

@@ -38,8 +38,19 @@ def _both(op, monkeypatch, guard_attr=("_MAX_DRIVER_ROWS",), guard_val=8):
     return want, got
 
 
-def test_flow_accum_distributed(spark, ptr, monkeypatch):
-    want, got = _both(lambda: hydro.flow_accum(ptr, tile=16), monkeypatch)
+@pytest.mark.parametrize("w0", [
+    None,
+    lambda r, c: (r + 2 * c) % 3 - 1,  # signed weights in {-1, 0, 1}
+    lambda r, c: F.lit(2 ** 56) + (7 * r + c) % 5,  # past double's 2^53
+], ids=["flow_accum", "signed_w0", "w0_near_2pow56"])
+def test_flow_accum_distributed(spark, ptr, monkeypatch, w0):
+    """Both tiers agree exactly; weighted sums stay long in each."""
+    if w0 is None:
+        op = lambda: hydro.flow_accum(ptr, tile=16)  # noqa: E731
+    else:
+        w = ptr.select("row", "col", w0(F.col("row"), F.col("col")).alias("w0"))
+        op = lambda: hydro.weighted_flow_accum(ptr, w, tile=16)  # noqa: E731
+    want, got = _both(op, monkeypatch)
     assert len(want) == len(got) > 0
     assert want.equals(got)
 

@@ -12,6 +12,8 @@ import urllib.request
 
 from pyspark.sql import SparkSession, functions as F
 
+from whitebox_geospatial_analysis_tools_spark.session import SQL_CONF
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -21,11 +23,9 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.appName("wgs-diag")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(map=SQL_CONF)
         .config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
+        .config("spark.ui.enabled", "true")  # the REST metrics below need it
         .getOrCreate()
     )
     from whitebox_geospatial_analysis_tools_spark.operators import textops

@@ -12,31 +12,26 @@ assume away.  Measures
 
 and prints ONE line ``WGS_RESULT {...json...}`` for the orchestrator.
 
-Master / executor topology comes from spark-submit; the SQL confs below
-mirror whitebox_geospatial_analysis_tools_spark.session.get_spark so wall
-times are comparable with the local[*] bench.
+Master / executor topology comes from spark-submit; the SQL confs are
+session.SQL_CONF, the ones get_spark uses, so wall times are comparable with
+the local[*] bench.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import time
 
 from pyspark.sql import SparkSession
+
+from whitebox_geospatial_analysis_tools_spark.session import SQL_CONF, best_of
 
 
 def build_spark() -> SparkSession:
     return (
         SparkSession.builder.appName("wgs-standalone-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.constraintPropagation.enabled", "false")
+        .config(map=SQL_CONF)
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
 
@@ -64,10 +59,7 @@ def main() -> None:
         # identical protocol to bench.py --scaling so the local[*] ladder and
         # the standalone ladder are the same measurement with diff. executors.
         flagship_synthetic(spark, args.n_pages).count()
-        for _ in range(3):
-            t0 = time.time()
-            flagship_synthetic(spark, args.n_pages).count()
-            best = min(best, time.time() - t0)
+        best = best_of(lambda: flagship_synthetic(spark, args.n_pages).count(), 3)
 
     para_wall = None
     if args.para_docs > 0:
@@ -79,26 +71,18 @@ def main() -> None:
                 F.col("id").alias("doc_id"),
                 F.expr("array_join(transform(sequence(id * 2, id * 2 + 39), "
                        "j -> concat('tok', j % 1000000)), ' ')").alias("text"))
-        textops.paragraph_dedup(_docs()).agg(F.sum("n_dup_blocks")).collect()
-        para_wall = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            r = textops.paragraph_dedup(_docs()).agg(
+        def _dups():
+            return textops.paragraph_dedup(_docs()).agg(
                 F.sum("n_dup_blocks").alias("d")).collect()[0]["d"]
-            para_wall = min(para_wall, time.time() - t0)
-        assert r > 0
+        assert _dups() > 0  # the warm call
+        para_wall = best_of(_dups, 2)
 
     qs = Q.all_queries()
     walls = {}
     for name in [q for q in args.queries.split(",") if q]:
         fn = qs[name]
         fn(spark, args.sf).count()  # warm, then min of 2 timed runs
-        best_q = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, args.sf).count()
-            best_q = min(best_q, time.time() - t0)
-        walls[name] = round(best_q, 3)
+        walls[name] = round(best_of(lambda: fn(spark, args.sf).count(), 2), 3)
 
     out = {
         "metric": "standalone_cluster_bench",

@@ -2,18 +2,22 @@
 
 The hydro/clump operators condense their grid problems to boundary-sized
 graphs (entry cells, stream links, label equivalences) and solve those on
-the driver behind a size guard.  This module is the documented cluster-scale
-fallback: when the condensed graph exceeds the guard, the SAME solve runs
+the driver behind a size guard.  This module holds the cluster-scale tier:
+when the condensed graph exceeds the guard, the SAME solve runs
 distributed —
 
-  graph_masses     recursive super-tile condensation for the functional
-                   mass/max DAG of flow_accum / upslope_max_length: each
+  graph_masses     the one condensed solver of the D8 accumulations
+                   (flow_accum, weighted_flow_accum, upslope_max_length),
+                   owning BOTH tiers and the single Kahn kernel (sum or
+                   max-plus).  Under the driver guard it collects the edge
+                   rows once and runs that kernel as one group on the
+                   driver; past it, recursive super-tile condensation: each
                    level groups nodes by a fanout-times-larger spatial cell,
-                   solves the in-group subgraph with the same vectorized
-                   Kahn kernel, and forwards cross-group carries to a graph
-                   ~fanout-times smaller (entry nodes sit on group
-                   perimeters), recursing until the driver guard is met —
-                   O(log_fanout) levels, two passes per level.
+                   solves the in-group subgraph with the same kernel, and
+                   forwards cross-group carries to a graph ~fanout-times
+                   smaller (entry nodes sit on group perimeters), recursing
+                   until the guard is met — O(log_fanout) levels, two passes
+                   per level.
   chase_paths      weighted pointer jumping (path doubling) over a
                    functional forest: per node, the terminal cell and the
                    accumulated path weight — watershed labels and
@@ -37,14 +41,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import _scratch
 
-_OUT_SCHEMA = (
-    "row long, col long, t_row long, t_col long, val double, w double, kind int"
+_EDGE_SCHEMA = (
+    "row long, col long, x_row long, x_col long, val {}, w double, kind int"
 )
+_WHOLE_GRID = 1 << 62  # group cell that puts every node in one group
 _MAX_LEVELS = 24
 _MAX_ROUNDS = 64
 
@@ -53,36 +59,39 @@ _MAX_ROUNDS = 64
 # recursive mass/max solve over a functional spatial DAG
 # ---------------------------------------------------------------------------
 def _group_kernel(group_cell: int, is_max: bool):
-    """Per-super-group solve over condensed nodes (row, col, base, f_row,
-    f_col, w[, ext]).  Emits kind 0 = per-node through value, kind 1 =
-    cross-group carry into (row, col), kind 2 = transit (where each node's
-    in-group chain exits the group, with accumulated chain weight)."""
+    """Per-super-group solve over the group's edge rows (graph_masses
+    format).  Nodes are the carry targets, base = their carries' sum (max).
+    Emits kind 0 = per-node through value, kind 1 = carry across the group
+    boundary, kind 2 = transit of each node on an inner group perimeter (where
+    its in-group chain exits the group, with accumulated chain weight)."""
+    g = group_cell
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        gr, gc = int(key[0]), int(key[1])
-        n = len(pdf)
-        rr = pdf["row"].to_numpy(np.int64)
-        cc = pdf["col"].to_numpy(np.int64)
-        base = pdf["base"].to_numpy(np.float64)
-        ext = (
-            pdf["ext"].fillna(0.0).to_numpy(np.float64)
-            if "ext" in pdf.columns else np.zeros(n)
+        kind = pdf["kind"].to_numpy()
+        nodes = (
+            pdf[kind == 1].groupby(["x_row", "x_col"])["val"]
+            .agg("max" if is_max else "sum")
+            .rename_axis(["row", "col"]).reset_index()
+            .merge(pdf.loc[kind == 2, ["row", "col", "x_row", "x_col", "w"]],
+                   on=["row", "col"], how="left")
         )
-        fr = pdf["f_row"].to_numpy(np.int64)
-        fc = pdf["f_col"].to_numpy(np.int64)
-        w = pdf["w"].to_numpy(np.float64)
+        n = len(nodes)
+        rr = nodes["row"].to_numpy(np.int64)
+        cc = nodes["col"].to_numpy(np.int64)
+        thr = nodes["val"].to_numpy(np.float64 if is_max else np.int64).copy()
+        fr = nodes["x_row"].fillna(-1).to_numpy(np.int64)
+        fc = nodes["x_col"].fillna(-1).to_numpy(np.int64)
+        w = nodes["w"].fillna(0.0).to_numpy(np.float64)
         has = fr >= 0
-        ing = has & (fr // group_cell == gr) & (fc // group_cell == gc)
-        idx = {(int(r), int(c)): i for i, (r, c) in enumerate(zip(rr, cc))}
-        tgt = np.full(n, -1, dtype=np.int64)
-        for i in np.flatnonzero(ing):
-            tgt[i] = idx.get((int(fr[i]), int(fc[i])), -1)
+        ing = has & (fr // g == rr // g) & (fc // g == cc // g)
+        at = pd.MultiIndex.from_arrays([rr, cc]).get_indexer(
+            pd.MultiIndex.from_arrays([fr, fc]))
+        tgt = np.where(ing, at, -1)
         internal = tgt >= 0
         cross = has & ~internal
 
-        # local Kahn over internal edges (sum or max aggregation)
+        # local Kahn over internal edges (sum or max-plus aggregation)
         indeg = np.bincount(tgt[internal], minlength=n)
-        thr = np.maximum(base, ext) if is_max else base + ext
         processed = np.zeros(n, dtype=bool)
         frontier = np.flatnonzero(indeg == 0)
         while frontier.size:
@@ -114,124 +123,105 @@ def _group_kernel(group_cell: int, is_max: bool):
         chain_w = dd + wout[dest]
         exits = cross[dest]
         null = np.int64(-1)
+        # a carry target is D8-adjacent to a cell of another group, so only
+        # nodes on a perimeter facing another group can be next-level nodes
+        ps = np.flatnonzero(
+            ((rr % g == 0) & (rr > 0)) | (rr % g == g - 1)
+            | ((cc % g == 0) & (cc > 0)) | (cc % g == g - 1)
+        )
 
         parts = [pd.DataFrame({
             "row": rr, "col": cc,
-            "t_row": np.full(n, null), "t_col": np.full(n, null),
+            "x_row": np.full(n, null), "x_col": np.full(n, null),
             "val": thr, "w": np.zeros(n),
             "kind": np.zeros(n, dtype=np.int32),
         })]
         xs = np.flatnonzero(cross)
         if xs.size:
             parts.append(pd.DataFrame({
-                "row": fr[xs], "col": fc[xs],
-                "t_row": np.full(xs.size, null), "t_col": np.full(xs.size, null),
+                "row": rr[xs], "col": cc[xs], "x_row": fr[xs], "x_col": fc[xs],
                 "val": thr[xs] + w[xs] if is_max else thr[xs],
                 "w": np.zeros(xs.size),
                 "kind": np.full(xs.size, 1, dtype=np.int32),
             }))
         parts.append(pd.DataFrame({
-            "row": rr, "col": cc,
-            "t_row": np.where(exits, fr[dest], null),
-            "t_col": np.where(exits, fc[dest], null),
-            "val": np.zeros(n), "w": chain_w,
-            "kind": np.full(n, 2, dtype=np.int32),
+            "row": rr[ps], "col": cc[ps],
+            "x_row": np.where(exits, fr[dest], null)[ps],
+            "x_col": np.where(exits, fc[dest], null)[ps],
+            "val": np.zeros(ps.size, dtype=thr.dtype), "w": chain_w[ps],
+            "kind": np.full(ps.size, 2, dtype=np.int32),
         }))
         return pd.concat(parts, ignore_index=True)
 
     return kernel
 
 
-def _driver_masses(spark, pdf: pd.DataFrame, is_max: bool) -> DataFrame:
-    """Base case: Kahn over the (now guard-sized) condensed graph."""
-    base: dict[tuple[int, int], float] = {}
-    fwd: dict[tuple[int, int], tuple] = {}
-    for r, c, b, frr, fcc, ww in zip(
-        pdf["row"], pdf["col"], pdf["base"], pdf["f_row"], pdf["f_col"], pdf["w"]
-    ):
-        k = (int(r), int(c))
-        base[k] = float(b)
-        fwd[k] = (((int(frr), int(fcc)) if frr >= 0 else None), float(ww))
-    mass = dict(base)
-    indeg = {k: 0 for k in base}
-    for k in base:
-        t, _ = fwd[k]
-        if t is not None and t in indeg:
-            indeg[t] += 1
-    stack = [k for k in base if indeg[k] == 0]
-    while stack:
-        e = stack.pop()
-        t, ww = fwd[e]
-        if t is not None and t in indeg:
-            if is_max:
-                cand = mass[e] + ww
-                if cand > mass[t]:
-                    mass[t] = cand
-            else:
-                mass[t] += mass[e]
-            indeg[t] -= 1
-            if indeg[t] == 0:
-                stack.append(t)
-    rows = [(r, c, m) for (r, c), m in mass.items()]
-    return spark.createDataFrame(rows, "row long, col long, mass double")
+def _grouped(edges: DataFrame, g: int) -> DataFrame:
+    """Key each edge row by the group of the node it describes: a carry by
+    its target's group, a transit by its own."""
+    kr = F.when(F.col("kind") == 1, F.col("x_row")).otherwise(F.col("row"))
+    kc = F.when(F.col("kind") == 1, F.col("x_col")).otherwise(F.col("col"))
+    return edges.groupBy((kr / g).cast("long"), (kc / g).cast("long"))
 
 
-def graph_masses(nodes: DataFrame, *, group_cell: int, driver_max: int,
+def graph_masses(edges: DataFrame, *, group_cell: int, driver_max: int,
                  is_max: bool = False, fanout: int = 8,
                  _level: int = 0) -> DataFrame:
     """Through-value per node of a functional spatial DAG.
 
-    nodes: (row, col, base double, f_row, f_col, w double) — f_row = -1 for
-    terminal nodes; w is the forwarding path weight (ignored for sum mode).
-    Returns (row, col, mass double) with
+    edges: (row, col, x_row, x_col, val, w, kind) —
+      kind 1: a carry of val from (row, col) into node (x_row, x_col);
+      kind 2: node (row, col) forwards to (x_row, x_col) with path weight w
+              (x_row = -1 for terminal nodes; w is ignored in sum mode).
+    Nodes are the carry targets, base = the sum (max) of their carries, and
+    a forward target is D8-adjacent to a cell of the forwarding node's group.
+    val is long in sum mode (exact integer sums) and double in max mode.
+    Returns (row, col, mass) with
       sum mode:  mass[t] = base[t] + sum of predecessors' mass
       max mode:  mass[t] = max(base[t], max of predecessors' mass + edge w)
-    Recursion: solve per spatial super-group, forward cross-group carries to
-    a ~fanout-times-smaller graph, recurse; driver Kahn once under guard.
+
+    Both tiers run the same vectorized Kahn kernel.  Edge rows under the
+    driver guard are collected once and solved as one group on the driver
+    into a local table (no further Spark job).  Past the guard: solve per
+    spatial super-group, forward cross-group carries to a ~fanout-times
+    smaller graph, recurse until the guard is met, then rerun each group
+    with the solved external inflow as one more carry.
     """
-    spark = nodes.sparkSession
-    tag = f"condense{_level}"
-    _scratch.release(spark, tag)
-    nodes = _scratch.track(spark, nodes.persist(), tag)
-    head = nodes.limit(driver_max + 1).toPandas()
+    spark = edges.sparkSession
+    head = edges.limit(driver_max + 1).toPandas()
     if len(head) <= driver_max:
-        out = _driver_masses(spark, head, is_max)
-        _scratch.release(spark, tag)
-        return out
+        out = _group_kernel(_WHOLE_GRID, is_max)(None, head)
+        out = out.loc[out["kind"] == 0, ["row", "col", "val"]]
+        # via Arrow so that an empty result is a local table too
+        return spark.createDataFrame(pa.Table.from_pandas(
+            out, preserve_index=False).rename_columns(["row", "col", "mass"]))
     if _level >= _MAX_LEVELS:
         raise RuntimeError("graph_masses: condensation failed to shrink")
 
+    tag = f"condense{_level}"
+    _scratch.release(spark, tag)
     g = int(group_cell)
-    grouped = nodes.withColumn("_gr", (F.col("row") / g).cast("long")) \
-                   .withColumn("_gc", (F.col("col") / g).cast("long"))
+    schema = _EDGE_SCHEMA.format("double" if is_max else "long")
     pass_a = _scratch.track(
         spark,
-        grouped.groupBy("_gr", "_gc").applyInPandas(
-            _group_kernel(g, is_max), _OUT_SCHEMA
-        ).persist(),
+        _grouped(edges, g).applyInPandas(_group_kernel(g, is_max), schema)
+        .persist(),
         tag,
     )
-    k1 = pass_a.where(F.col("kind") == 1)
-    agg = F.max("val") if is_max else F.sum("val")
-    base2 = k1.groupBy("row", "col").agg(agg.alias("base"))
-    k2 = pass_a.where(F.col("kind") == 2).select(
-        "row", "col",
-        F.col("t_row").alias("f_row"), F.col("t_col").alias("f_col"), "w",
-    )
-    nodes2 = base2.join(k2, ["row", "col"], "left").select(
-        "row", "col", "base",
-        F.coalesce("f_row", F.lit(-1)).alias("f_row"),
-        F.coalesce("f_col", F.lit(-1)).alias("f_col"),
-        F.coalesce("w", F.lit(0.0)).alias("w"),
-    )
     mass2 = graph_masses(
-        nodes2, group_cell=g * fanout, driver_max=driver_max,
-        is_max=is_max, fanout=fanout, _level=_level + 1,
+        pass_a.where(F.col("kind") >= 1), group_cell=g * fanout,
+        driver_max=driver_max, is_max=is_max, fanout=fanout, _level=_level + 1,
     )
-    ext = mass2.select("row", "col", F.col("mass").alias("ext"))
-    pass_b = grouped.join(ext, ["row", "col"], "left").groupBy(
-        "_gr", "_gc"
-    ).applyInPandas(_group_kernel(g, is_max), _OUT_SCHEMA)
+    null = F.lit(-1).cast("long")
+    inflow = mass2.select(
+        null.alias("row"), null.alias("col"),
+        F.col("row").alias("x_row"), F.col("col").alias("x_col"),
+        F.col("mass").alias("val"), F.lit(0.0).alias("w"),
+        F.lit(1).alias("kind"),
+    )
+    pass_b = _grouped(edges.unionByName(inflow), g).applyInPandas(
+        _group_kernel(g, is_max), schema
+    )
     return pass_b.where(F.col("kind") == 0).select(
         "row", "col", F.col("val").alias("mass")
     )

@@ -28,13 +28,19 @@ transitive-closure doubling of round 1 — VERDICT wrong-list #1):
   phase 2  the condensed inflow graph lives on entry cells only (targets of
            cross-tile edges — O(N / tile) rows, the grid-graph analogue of a
            √N boundary): a functional DAG where each entry's mass forwards
-           to exactly one downstream entry.  Solved on the driver by Kahn's
-           algorithm (size-guarded; at cluster scale the same solve is a
-           log-round propagation over this tiny graph).
-  phase 3  entry masses broadcast back; the SAME tile kernel reruns with
-           per-cell weight = 1 + external inflow, giving exact global
-           accumulation.  Total: 2 Spark passes, independent of flow-path
-           length — O(V) state instead of O(Σ path²) closure pairs.
+           to exactly one downstream entry.  Solved by ONE
+           condense.graph_masses call, which owns both tiers: a vectorized
+           Kahn on the driver under _MAX_DRIVER_ROWS, recursive super-tile
+           condensation past it.
+  phase 3  entry masses join back (broadcast in the driver tier); the SAME
+           tile kernel reruns with per-cell weight = 1 + external inflow,
+           giving exact global accumulation.  Total: 2 Spark passes,
+           independent of flow-path length — O(V) state instead of
+           O(Σ path²) closure pairs.
+
+  flow_accum, weighted_flow_accum (seed w0 instead of 1) and
+  upslope_max_length (max-plus instead of sum) are this one body
+  (_d8_accum) over the one tile kernel (_tile_flow_kernel).
 
 Direction codes here are 2^j over the fixed neighbor order
 (NW,N,NE,W,E,SW,S,SE); j differs from the reference's rosette layout but the
@@ -50,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import _scratch
+from .condense import graph_masses
 from .raster import NODATA, _assemble_pad, _halo_contributions
 
 _SQRT2 = 1.4142135623730951
@@ -245,12 +252,14 @@ def stream_link_slope(pointers: DataFrame, dem_cells: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# tile-local flow solve (shared by flow_accum and watershed)
+# tile-local flow solve (shared by the D8 accumulations, watershed and
+# flowpath_length)
 # ---------------------------------------------------------------------------
 _FLOW_SCHEMA = (
     "row long, col long, acc long, x_row long, x_col long, "
     "p_row long, p_col long, pdist double, kind int"
 )
+# acc is long in sum mode and double in max mode (longest upstream path).
 # kind 0: per-cell row — acc = tile-local accumulation; (p_row,p_col) = the
 #         pit this cell drains to when its path TERMINATES in-tile, else
 #         (x_row,x_col) = the out-of-tile cell its path crosses into.
@@ -266,7 +275,15 @@ def _decode_targets(rr, cc, code):
     return has, rr + np.where(has, _D8_DR[j], 0), cc + np.where(has, _D8_DC[j], 0)
 
 
-def _tile_flow_kernel(tile: int):
+def _tile_flow_kernel(tile: int, is_max: bool = False):
+    """Tile-local D8 solve with external inflow ``ext``.  Sum mode counts
+    1 + ext per cell; max mode is the max-plus Kahn of the LONGEST upstream
+    path (step 1 / sqrt(2)), so its kind-1 value is the path length up to
+    the entry cell across the tile edge.  Because a D8 cell has one
+    outflow, all flow entering at a border cell follows a single path, and
+    the condensed entry DAG carries both modes."""
+    vdt = np.float64 if is_max else np.int64
+
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tr, tc = int(key[0]), int(key[1])
         r0, c0 = tr * tile, tc * tile
@@ -274,8 +291,8 @@ def _tile_flow_kernel(tile: int):
         cc = pdf["col"].to_numpy(np.int64)
         code = pdf["code"].to_numpy(np.int64)
         ext = (
-            pdf["ext"].fillna(0).to_numpy(np.int64)
-            if "ext" in pdf.columns else np.zeros(len(rr), dtype=np.int64)
+            pdf["ext"].fillna(0).to_numpy(vdt)
+            if "ext" in pdf.columns else np.zeros(len(rr), dtype=vdt)
         )
         n = len(rr)
         lr, lc = rr - r0, cc - c0
@@ -298,10 +315,14 @@ def _tile_flow_kernel(tile: int):
             cross = cross & ~stop
             tgt = np.where(stop, -1, tgt)
 
+        step = np.where(
+            has, np.where((t_r != rr) & (t_c != cc), _SQRT2, 1.0), 0.0
+        )
+
         # --- tile-local accumulation: Kahn wavefronts (the reference's own
         # upstream-count scheduling, FlowAccumD8.java:282-330, vectorized)
         indeg = np.bincount(tgt[internal], minlength=n)
-        accum = 1 + ext
+        accum = ext.copy() if is_max else 1 + ext
         processed = np.zeros(n, dtype=bool)
         frontier = np.flatnonzero(indeg == 0)
         while frontier.size:
@@ -309,7 +330,10 @@ def _tile_flow_kernel(tile: int):
             fe = frontier[internal[frontier]]
             if fe.size:
                 t = tgt[fe]
-                np.add.at(accum, t, accum[fe])
+                if is_max:
+                    np.maximum.at(accum, t, accum[fe] + step[fe])
+                else:
+                    np.add.at(accum, t, accum[fe])
                 indeg = indeg - np.bincount(t, minlength=n)
                 frontier = np.flatnonzero((indeg == 0) & ~processed)
             else:
@@ -317,9 +341,6 @@ def _tile_flow_kernel(tile: int):
 
         # --- terminal of each cell's within-tile path + path distance:
         # weighted pointer jumping (terminals are zero-weight self-loops)
-        step = np.where(
-            has, np.where((t_r != rr) & (t_c != cc), _SQRT2, 1.0), 0.0
-        )
         nxt = np.arange(n, dtype=np.int64)
         nxt[internal] = tgt[internal]
         dd = np.where(internal, step, 0.0)
@@ -354,11 +375,13 @@ def _tile_flow_kernel(tile: int):
             "pdist": pdist,
             "kind": np.zeros(n, dtype=np.int32),
         }))
-        # kind 1: cross-tile out-edges with tile-local mass
+        # kind 1: cross-tile out-edges with tile-local mass (max mode: the
+        # longest path up to the target cell)
         xs = np.flatnonzero(cross)
         if xs.size:
             parts.append(pd.DataFrame({
-                "row": rr[xs], "col": cc[xs], "acc": accum[xs],
+                "row": rr[xs], "col": cc[xs],
+                "acc": accum[xs] + step[xs] if is_max else accum[xs],
                 "x_row": t_r[xs], "x_col": t_c[xs],
                 "p_row": np.full(xs.size, null), "p_col": np.full(xs.size, null),
                 "pdist": np.zeros(xs.size),
@@ -371,7 +394,7 @@ def _tile_flow_kernel(tile: int):
             be = cross[bd]
             parts.append(pd.DataFrame({
                 "row": rr[bs], "col": cc[bs],
-                "acc": np.zeros(bs.size, dtype=np.int64),
+                "acc": np.zeros(bs.size, dtype=vdt),
                 "x_row": np.where(be, t_r[bd], null),
                 "x_col": np.where(be, t_c[bd], null),
                 "p_row": np.where(be, null, rr[bd]),
@@ -390,107 +413,64 @@ def _with_tiles(pointers: DataFrame, tile: int) -> DataFrame:
     ).withColumn("_tc", (F.col("col") / tile).cast("long"))
 
 
-def _solve_entry_masses(xedges: pd.DataFrame, transit: pd.DataFrame) -> dict:
-    """Kahn over the condensed entry-cell DAG -> {(row, col): inflow mass}.
+def _tile_pass(cells: DataFrame, tile: int, is_max: bool = False) -> DataFrame:
+    """One _tile_flow_kernel pass over _with_tiles cells."""
+    schema = _FLOW_SCHEMA.replace("acc long", "acc double") if is_max else _FLOW_SCHEMA
+    return cells.groupBy("_tr", "_tc").applyInPandas(
+        _tile_flow_kernel(tile, is_max), schema
+    )
 
-    Entry cells are cross-edge targets; each entry's mass forwards along its
-    tile's transit map to exactly one downstream entry (functional DAG —
-    acyclic because global D8 flow strictly descends)."""
-    base: dict[tuple[int, int], int] = {}
-    for xr, xc, acc in zip(xedges["x_row"], xedges["x_col"], xedges["acc"]):
-        k = (int(xr), int(xc))
-        base[k] = base.get(k, 0) + int(acc)
-    fwd = {
-        (int(r), int(c)): ((int(xr), int(xc)) if xr >= 0 else None)
-        for r, c, xr, xc in zip(
-            transit["row"], transit["col"], transit["x_row"], transit["x_col"]
-        )
-    }
-    entries = list(base)
-    indeg = {e: 0 for e in entries}
-    for e in entries:
-        t = fwd.get(e)
-        if t is not None and t in indeg:
-            indeg[t] += 1
-    mass = dict(base)
-    stack = [e for e in entries if indeg[e] == 0]
-    while stack:
-        e = stack.pop()
-        t = fwd.get(e)
-        if t is not None and t in indeg:
-            mass[t] = mass.get(t, 0) + mass[e]
-            indeg[t] -= 1
-            if indeg[t] == 0:
-                stack.append(t)
-    return mass
+
+def _d8_accum(pointers: DataFrame, tile: int, guard: int, out: str, *,
+              weights: DataFrame | None = None, is_max: bool = False) -> DataFrame:
+    """Shared body of the D8 accumulations (module docstring): tile pass A,
+    ONE condense.graph_masses solve over its cross edges and border
+    transits (driver or distributed tier, chosen there against `guard`),
+    then pass B with each entry cell's solved external inflow as ``ext``.
+    Sum mode stays long end to end; max mode is double."""
+    spark = pointers.sparkSession
+    _scratch.release(spark, out)
+    cells = _with_tiles(pointers, tile)
+    if weights is not None:  # the kernel seeds 1 + ext, so ext = w0 - 1
+        cells = cells.join(
+            weights.select("row", "col", "w0"), ["row", "col"], "left"
+        ).withColumn(
+            "ext", F.coalesce(F.col("w0") - F.lit(1), F.lit(0)).cast("long")
+        ).drop("w0")
+    pass_a = _scratch.track(
+        spark, _tile_pass(cells, tile, is_max).persist(), out
+    )
+    mass = graph_masses(
+        pass_a.where(F.col("kind") >= 1).select(
+            "row", "col", "x_row", "x_col",
+            F.col("acc").alias("val"), F.col("pdist").alias("w"), "kind",
+        ),
+        group_cell=tile * 8, driver_max=guard, is_max=is_max,
+    )
+    acc = F.round("acc", 6).cast("double") if is_max else F.col("acc")
+    if mass.isLocal():  # driver tier: a local table, isEmpty runs no job
+        if mass.isEmpty():  # no flow crosses a tile edge: pass A is exact
+            return pass_a.where(F.col("kind") == 0).select(
+                "row", "col", acc.alias(out)
+            )
+        mass = F.broadcast(mass)
+    ext = F.coalesce("mass", F.lit(0))
+    pass_b = _tile_pass(
+        cells.join(mass, ["row", "col"], "left").withColumn(
+            "ext", ext + F.col("ext") if weights is not None else ext
+        ).drop("mass"),
+        tile, is_max,
+    )
+    return pass_b.where(F.col("kind") == 0).select("row", "col", acc.alias(out))
 
 
 def flow_accum(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
     """(row, col, accum): cells draining through each cell, incl. itself.
 
-    Two tile-kernel passes + a condensed boundary-graph solve (module
-    docstring) — wall time linear in cells, independent of path length."""
-    spark = pointers.sparkSession
-    _scratch.release(spark, "flow_accum")
-    cells = _with_tiles(pointers, tile)
-    pass_a = _scratch.track(
-        spark,
-        cells.groupBy("_tr", "_tc").applyInPandas(
-            _tile_flow_kernel(tile), _FLOW_SCHEMA
-        ).persist(),
-        "flow_accum",
-    )
-    small = pass_a.where(F.col("kind") >= 1).limit(_MAX_DRIVER_ROWS + 1).toPandas()
-    if len(small) > _MAX_DRIVER_ROWS:
-        # distributed fallback: the condensed entry DAG is solved by
-        # recursive super-tile condensation (operators/condense.py) — no
-        # driver materialization, O(log) levels
-        from .condense import graph_masses
-
-        base = pass_a.where(F.col("kind") == 1).groupBy(
-            F.col("x_row").alias("row"), F.col("x_col").alias("col")
-        ).agg(F.sum("acc").cast("double").alias("base"))
-        tr = pass_a.where(F.col("kind") == 2).select(
-            "row", "col",
-            F.col("x_row").alias("f_row"), F.col("x_col").alias("f_col"),
-        )
-        nodes = base.join(tr, ["row", "col"], "left").select(
-            "row", "col", "base",
-            F.coalesce("f_row", F.lit(-1)).alias("f_row"),
-            F.coalesce("f_col", F.lit(-1)).alias("f_col"),
-            F.lit(0.0).alias("w"),
-        )
-        mass_df = graph_masses(
-            nodes, group_cell=tile * 8, driver_max=_MAX_DRIVER_ROWS
-        )
-        ext_df = mass_df.where(F.col("mass") > 0).select(
-            "row", "col", F.col("mass").cast("long").alias("ext")
-        )
-        cells_b = cells.join(ext_df, ["row", "col"], "left")
-        pass_b = cells_b.groupBy("_tr", "_tc").applyInPandas(
-            _tile_flow_kernel(tile), _FLOW_SCHEMA
-        )
-        return pass_b.where(F.col("kind") == 0).select(
-            "row", "col", F.col("acc").alias("accum")
-        )
-    xedges = small[small["kind"] == 1]
-    transit = small[small["kind"] == 2]
-    mass = _solve_entry_masses(xedges, transit)
-    if not mass:
-        return pass_a.where(F.col("kind") == 0).select(
-            "row", "col", F.col("acc").alias("accum")
-        )
-    ext_df = spark.createDataFrame(
-        [(r, c, m) for (r, c), m in mass.items() if m > 0],
-        "row long, col long, ext long",
-    )
-    cells_b = cells.join(F.broadcast(ext_df), ["row", "col"], "left")
-    pass_b = cells_b.groupBy("_tr", "_tc").applyInPandas(
-        _tile_flow_kernel(tile), _FLOW_SCHEMA
-    )
-    return pass_b.where(F.col("kind") == 0).select(
-        "row", "col", F.col("acc").alias("accum")
-    )
+    Two tile-kernel passes + one condensed entry-graph solve (module
+    docstring, _d8_accum) — wall time linear in cells, independent of path
+    length."""
+    return _d8_accum(pointers, tile, _MAX_DRIVER_ROWS, "accum")
 
 
 def weighted_flow_accum(pointers: DataFrame, weights: DataFrame, *,
@@ -500,72 +480,13 @@ def weighted_flow_accum(pointers: DataFrame, weights: DataFrame, *,
     AverageUpslopeFlowpathLength.java: accumulate a per-cell quantity
     instead of a count).
 
-    Reuses _tile_flow_kernel UNCHANGED: the kernel computes 1 + ext, so
-    feeding ext = w0 - 1 in pass A makes the tile-local Kahn accumulate the
-    integer weights exactly (order-independent), and pass B adds the
-    condensed entry masses on top.  `weights` must cover every pointer cell
-    with an integer column `w0` (scale fractional quantities to micro-units
-    first — integer sums keep the cross-engine bit-exactness the counting
-    path has)."""
-    spark = pointers.sparkSession
-    _scratch.release(spark, "wflow_accum")
-    ext0 = weights.select(
-        "row", "col", (F.col("w0") - F.lit(1)).cast("long").alias("_e0")
-    )
-    cells = _with_tiles(pointers, tile).join(ext0, ["row", "col"], "left")
-    pass_a = _scratch.track(
-        spark,
-        cells.withColumn("ext", F.coalesce("_e0", F.lit(0)))
-        .groupBy("_tr", "_tc").applyInPandas(
-            _tile_flow_kernel(tile), _FLOW_SCHEMA
-        ).persist(),
-        "wflow_accum",
-    )
-    small = pass_a.where(F.col("kind") >= 1).limit(_MAX_DRIVER_ROWS + 1).toPandas()
-    if len(small) > _MAX_DRIVER_ROWS:
-        from .condense import graph_masses
-
-        base = pass_a.where(F.col("kind") == 1).groupBy(
-            F.col("x_row").alias("row"), F.col("x_col").alias("col")
-        ).agg(F.sum("acc").cast("double").alias("base"))
-        tr = pass_a.where(F.col("kind") == 2).select(
-            "row", "col",
-            F.col("x_row").alias("f_row"), F.col("x_col").alias("f_col"),
-        )
-        nodes = base.join(tr, ["row", "col"], "left").select(
-            "row", "col", "base",
-            F.coalesce("f_row", F.lit(-1)).alias("f_row"),
-            F.coalesce("f_col", F.lit(-1)).alias("f_col"),
-            F.lit(0.0).alias("w"),
-        )
-        mass_df = graph_masses(
-            nodes, group_cell=tile * 8, driver_max=_MAX_DRIVER_ROWS
-        )
-        ext_df = mass_df.where(F.col("mass") > 0).select(
-            "row", "col", F.col("mass").cast("long").alias("_m")
-        )
-        cells_b = cells.join(ext_df, ["row", "col"], "left")
-    else:
-        xedges = small[small["kind"] == 1]
-        transit = small[small["kind"] == 2]
-        mass = _solve_entry_masses(xedges, transit)
-        if not mass:
-            return pass_a.where(F.col("kind") == 0).select(
-                "row", "col", F.col("acc").alias("waccum")
-            )
-        ext_df = spark.createDataFrame(
-            [(r, c, m) for (r, c), m in mass.items() if m != 0],
-            "row long, col long, _m long",
-        )
-        cells_b = cells.join(F.broadcast(ext_df), ["row", "col"], "left")
-    pass_b = cells_b.withColumn(
-        "ext", F.coalesce("_e0", F.lit(0)) + F.coalesce("_m", F.lit(0))
-    ).groupBy("_tr", "_tc").applyInPandas(
-        _tile_flow_kernel(tile), _FLOW_SCHEMA
-    )
-    return pass_b.where(F.col("kind") == 0).select(
-        "row", "col", F.col("acc").alias("waccum")
-    )
+    flow_accum with per-cell seed w0 in place of 1 (_d8_accum).  `weights`
+    must cover every pointer cell with an integer column `w0` (scale
+    fractional quantities to micro-units first).  The sums are long in
+    both passes and in both tiers of the condensed solve, so integer sums
+    keep the cross-engine bit-exactness the counting path has, for any
+    sign and up to the long range."""
+    return _d8_accum(pointers, tile, _MAX_DRIVER_ROWS, "waccum", weights=weights)
 
 
 def avg_upslope_length(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
@@ -626,9 +547,7 @@ def watershed(pointers: DataFrame, *, tile: int = TILE,
         )
     pass_a = _scratch.track(
         spark,
-        cells.groupBy("_tr", "_tc").applyInPandas(
-            _tile_flow_kernel(tile), _FLOW_SCHEMA
-        ).persist(),
+        _tile_pass(cells, tile).persist(),
         "watershed",
     )
     transit = pass_a.where(F.col("kind") == 2).limit(_MAX_DRIVER_ROWS + 1).toPandas()
@@ -2096,9 +2015,7 @@ def flowpath_length(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
     cells = _with_tiles(pointers, tile)
     pass_a = _scratch.track(
         spark,
-        cells.groupBy("_tr", "_tc").applyInPandas(
-            _tile_flow_kernel(tile), _FLOW_SCHEMA
-        ).persist(),
+        _tile_pass(cells, tile).persist(),
         "flowpath",
     )
     transit = pass_a.where(F.col("kind") == 2).limit(_MAX_DRIVER_ROWS + 1).toPandas()
@@ -2168,196 +2085,15 @@ def flowpath_length(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
 # ---------------------------------------------------------------------------
 # upslope (longest) flow-path length
 # ---------------------------------------------------------------------------
-_MAXD_SCHEMA = (
-    "row long, col long, mx double, x_row long, x_col long, pdist double, kind int"
-)
-
-
-def _tile_maxdist_kernel(tile: int):
-    """Tile-local LONGEST upstream path (max-aggregation Kahn) + the same
-    cross-edge / transit outputs as the accumulation kernel.  Because a D8
-    cell has one outflow, all mass entering at a border cell follows a
-    single path, so the condensed entry DAG carries max-distances with the
-    additive per-entry path length."""
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tr, tc = int(key[0]), int(key[1])
-        r0, c0 = tr * tile, tc * tile
-        rr = pdf["row"].to_numpy(np.int64)
-        cc = pdf["col"].to_numpy(np.int64)
-        code = pdf["code"].to_numpy(np.int64)
-        ext = (
-            pdf["ext"].fillna(0.0).to_numpy(np.float64)
-            if "ext" in pdf.columns else np.zeros(len(rr))
-        )
-        n = len(rr)
-        lr, lc = rr - r0, cc - c0
-        h, w = int(lr.max()) + 1, int(lc.max()) + 1
-        gid = np.full((h, w), -1, dtype=np.int64)
-        gid[lr, lc] = np.arange(n)
-        has, t_r, t_c = _decode_targets(rr, cc, code)
-        t_lr, t_lc = t_r - r0, t_c - c0
-        inb = has & (t_lr >= 0) & (t_lr < min(tile, h)) & (t_lc >= 0) & (t_lc < min(tile, w))
-        tgt = np.full(n, -1, dtype=np.int64)
-        tgt[inb] = gid[t_lr[inb], t_lc[inb]]
-        internal = tgt >= 0
-        cross = has & ~internal
-        step = np.where(has, np.where((t_r != rr) & (t_c != cc), _SQRT2, 1.0), 0.0)
-
-        indeg = np.bincount(tgt[internal], minlength=n)
-        mx = ext.copy()
-        processed = np.zeros(n, dtype=bool)
-        frontier = np.flatnonzero(indeg == 0)
-        while frontier.size:
-            processed[frontier] = True
-            fe = frontier[internal[frontier]]
-            if fe.size:
-                t = tgt[fe]
-                np.maximum.at(mx, t, mx[fe] + step[fe])
-                indeg = indeg - np.bincount(t, minlength=n)
-                frontier = np.flatnonzero((indeg == 0) & ~processed)
-            else:
-                frontier = np.array([], dtype=np.int64)
-
-        # within-tile path distance to exit/pit (for the condensed DAG)
-        nxt = np.arange(n, dtype=np.int64)
-        nxt[internal] = tgt[internal]
-        dd = np.where(internal, step, 0.0)
-        dest = nxt
-        while True:
-            nd = dest[dest]
-            if np.array_equal(nd, dest):
-                break
-            dd = dd + dd[dest]
-            dest = nd
-        xstep = np.where(cross, step, 0.0)
-        pdist = dd + xstep[dest]
-        d_exits = cross[dest]
-        null = np.int64(-1)
-        on_border = (
-            (rr % tile == 0) | (rr % tile == tile - 1)
-            | (cc % tile == 0) | (cc % tile == tile - 1)
-        )
-        parts = [pd.DataFrame({
-            "row": rr, "col": cc, "mx": mx,
-            "x_row": np.full(n, null), "x_col": np.full(n, null),
-            "pdist": np.zeros(n), "kind": np.zeros(n, dtype=np.int32),
-        })]
-        xs = np.flatnonzero(cross)
-        if xs.size:
-            parts.append(pd.DataFrame({
-                "row": rr[xs], "col": cc[xs], "mx": mx[xs] + step[xs],
-                "x_row": t_r[xs], "x_col": t_c[xs],
-                "pdist": np.zeros(xs.size), "kind": np.full(xs.size, 1, dtype=np.int32),
-            }))
-        bs = np.flatnonzero(on_border)
-        if bs.size:
-            bd = dest[bs]
-            be = cross[bd]
-            parts.append(pd.DataFrame({
-                "row": rr[bs], "col": cc[bs], "mx": np.zeros(bs.size),
-                "x_row": np.where(be, t_r[bd], null),
-                "x_col": np.where(be, t_c[bd], null),
-                "pdist": pdist[bs], "kind": np.full(bs.size, 2, dtype=np.int32),
-            }))
-        return pd.concat(parts, ignore_index=True)
-
-    return kernel
-
-
 def upslope_max_length(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
     """(row, col, up_len): longest upstream D8 flow-path length into each
     cell (UpslopeFlowpathLength.java semantics; steps 1 / sqrt(2)).
 
-    Same 2-pass condensed design as flow_accum with MAX in place of SUM:
+    flow_accum with MAX in place of SUM (_d8_accum, max-plus kernel mode):
     the condensed entry DAG's edge weight is each entry's single-path
-    within-tile length (D8 outflow is unique)."""
-    spark = pointers.sparkSession
-    _scratch.release(spark, "upslope")
-    cells = _with_tiles(pointers, tile)
-    pass_a = _scratch.track(
-        spark,
-        cells.groupBy("_tr", "_tc").applyInPandas(
-            _tile_maxdist_kernel(tile), _MAXD_SCHEMA
-        ).persist(),
-        "upslope",
-    )
-    small = pass_a.where(F.col("kind") >= 1).limit(_MAX_DRIVER_ROWS + 1).toPandas()
-    if len(small) > _MAX_DRIVER_ROWS:
-        # distributed fallback: recursive super-tile condensation, MAX mode
-        from .condense import graph_masses
-
-        base_df = pass_a.where(F.col("kind") == 1).groupBy(
-            F.col("x_row").alias("row"), F.col("x_col").alias("col")
-        ).agg(F.max("mx").alias("base"))
-        tr_df = pass_a.where(F.col("kind") == 2).select(
-            "row", "col",
-            F.col("x_row").alias("f_row"), F.col("x_col").alias("f_col"),
-            F.col("pdist").alias("w"),
-        )
-        nodes = base_df.join(tr_df, ["row", "col"], "left").select(
-            "row", "col", "base",
-            F.coalesce("f_row", F.lit(-1)).alias("f_row"),
-            F.coalesce("f_col", F.lit(-1)).alias("f_col"),
-            F.coalesce("w", F.lit(0.0)).alias("w"),
-        )
-        mass_df = graph_masses(
-            nodes, group_cell=tile * 8, driver_max=_MAX_DRIVER_ROWS, is_max=True
-        )
-        ext_df2 = mass_df.where(F.col("mass") > 0).select(
-            "row", "col", F.col("mass").alias("ext")
-        )
-        cells_b = cells.join(ext_df2, ["row", "col"], "left")
-        pass_b = cells_b.groupBy("_tr", "_tc").applyInPandas(
-            _tile_maxdist_kernel(tile), _MAXD_SCHEMA
-        )
-        return pass_b.where(F.col("kind") == 0).select(
-            "row", "col", F.round("mx", 6).cast("double").alias("up_len")
-        )
-    xedges = small[small["kind"] == 1]
-    transit = small[small["kind"] == 2]
-    base: dict[tuple[int, int], float] = {}
-    for xr, xc, m in zip(xedges["x_row"], xedges["x_col"], xedges["mx"]):
-        k = (int(xr), int(xc))
-        base[k] = max(base.get(k, 0.0), float(m))
-    fwd = {
-        (int(r), int(c)): (((int(xr), int(xc)) if xr >= 0 else None), float(pdv))
-        for r, c, xr, xc, pdv in zip(
-            transit["row"], transit["col"], transit["x_row"], transit["x_col"],
-            transit["pdist"],
-        )
-    }
-    entries = list(base)
-    indeg = {e: 0 for e in entries}
-    for e in entries:
-        t, _ = fwd.get(e, (None, 0.0))
-        if t is not None and t in indeg:
-            indeg[t] += 1
-    mmax = dict(base)
-    stack = [e for e in entries if indeg[e] == 0]
-    while stack:
-        e = stack.pop()
-        t, pdv = fwd.get(e, (None, 0.0))
-        if t is not None and t in indeg:
-            cand = mmax[e] + pdv
-            if cand > mmax.get(t, 0.0):
-                mmax[t] = cand
-            indeg[t] -= 1
-            if indeg[t] == 0:
-                stack.append(t)
-    if mmax:
-        ext_df = spark.createDataFrame(
-            [(r, c, m) for (r, c), m in mmax.items() if m > 0],
-            "row long, col long, ext double",
-        )
-        cells_b = cells.join(F.broadcast(ext_df), ["row", "col"], "left")
-    else:
-        cells_b = cells
-    pass_b = cells_b.groupBy("_tr", "_tc").applyInPandas(
-        _tile_maxdist_kernel(tile), _MAXD_SCHEMA
-    )
-    return pass_b.where(F.col("kind") == 0).select(
-        "row", "col", F.round("mx", 6).cast("double").alias("up_len")
-    )
+    within-tile length (D8 outflow is unique).  Distances are rounded to 6
+    decimals."""
+    return _d8_accum(pointers, tile, _MAX_DRIVER_ROWS, "up_len", is_max=True)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import exprs
+from .session import SQL_CONF
 from .sources import polygons
 
 # ---------------------------------------------------------------------------
@@ -71,7 +72,8 @@ def _ensure_session_conf(spark: SparkSession) -> None:
     (ArrayIndexOutOfBoundsException in the split-expression indexing) on the
     flagship plans.  The conf is runtime-settable, so every registered query
     pins it before declaring its plan."""
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    key = "spark.sql.constraintPropagation.enabled"
+    spark.conf.set(key, SQL_CONF[key])
 
 
 def register(name: str, oracle: str | None = None):

@@ -3,13 +3,47 @@
 from __future__ import annotations
 
 import os
+import time
+from typing import Callable
 
 from pyspark.sql import SparkSession
+
+# The engine's SQL confs: every session it builds starts from this dict
+# (get_spark, tools/standalone_job.py, tools/standalone_diag.py) and
+# queries._ensure_session_conf pins from it.  Deployment values — master,
+# shuffle partitions, driver memory, UI — stay with each caller.
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # InferFiltersFromConstraints pushes isnotnull() predicates below the
+    # geocode projections, re-inlining the whole derived-column expression
+    # tree into one Filter; the generated method then exceeds janino's
+    # 64KB limit and the ENTIRE stage silently runs interpreted (~15x
+    # slower, observed).  Our derived columns are never null by
+    # construction, so the inferred filters are pure downside.
+    "spark.sql.constraintPropagation.enabled": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    "spark.sql.session.timeZone": "UTC",
+}
 
 
 def cpus() -> int:
     """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def best_of(fn: Callable[[], object], runs: int) -> float:
+    """Min wall seconds over ``runs`` timed calls of ``fn`` — the timing
+    protocol shared by bench.py and the standalone tools, whose callers make
+    the warm call first."""
+    best = float("inf")
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t0)
+    return best
 
 
 def get_spark(app: str = "wgs-engine", master: str | None = None,
@@ -18,21 +52,9 @@ def get_spark(app: str = "wgs-engine", master: str | None = None,
     b = (
         SparkSession.builder.appName(app)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # InferFiltersFromConstraints pushes isnotnull() predicates below the
-        # geocode projections, re-inlining the whole derived-column expression
-        # tree into one Filter; the generated method then exceeds janino's
-        # 64KB limit and the ENTIRE stage silently runs interpreted (~15x
-        # slower, observed).  Our derived columns are never null by
-        # construction, so the inferred filters are pure downside.
-        .config("spark.sql.constraintPropagation.enabled", "false")
+        .config(map=SQL_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus()))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
     )
     return b.getOrCreate()
