@@ -175,10 +175,13 @@ def resume_worker(out_dir: str, docs: int) -> None:
 
     spark = get_spark(app="wgs-soak-resume", shuffle_partitions=2 * cpus())
     res = _resume_result(spark, docs).persist()
-    res.count()
+    key_rows = {r.pkey: r["count"] for r in res.groupBy("pkey").count().collect()}
+    # a budget of 4 of the largest keys: the near-equal doc_id % 64 keys then
+    # commit 4 per batch, so the kill lands mid-run
     summary = lineage.run_resumable(
-        spark, res, out_dir, "pkey", list(range(_RESUME_KEYS)),
-        batch_size=4, input_desc=f"synthetic corpus docs={docs}")
+        spark, res, out_dir, "pkey", key_rows,
+        batch_rows=4 * max(key_rows.values()),
+        input_desc=f"synthetic corpus docs={docs}")
     print("RESUME_SUMMARY " + json.dumps({
         "written": len(summary["written_keys"]),
         "skipped": len(summary["skipped_keys"]),

@@ -38,8 +38,12 @@ def run_north_star(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
       keep null poly_id) -> per-tile output partitions committed with
       per-partition lineage rows (plans/lineage.py) -> per-polygon counts.
 
-    Re-running after a partial failure resumes from the last committed
-    partition; output is partition-count invariant (tests/test_properties).
+    One key scan (``groupBy(tile_y).count()``) gives the rows per output
+    partition, and the write commits them in row-budgeted batches
+    (``lineage.BATCH_ROWS``): a run under the budget is one data job, one
+    join and one manifest.  Re-running after a partial failure resumes from
+    the last committed batch; output is partition-count invariant
+    (tests/test_properties).
     Returns {'summary': lineage summary dict, 'counts': [(poly_id, n)]}.
     """
     from ..operators.spatial_join import pip_join
@@ -51,9 +55,9 @@ def run_north_star(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     joined = pip_join(pts, spark, keep=("doc_id",), how="left").select(
         "doc_id", "tile_id", "tile_y", "cell7", "cell8", "cell9", "poly_id"
     )
-    keys = [r.tile_y for r in pts.select("tile_y").distinct().collect()]
+    key_rows = {r.tile_y: r["count"] for r in pts.groupBy("tile_y").count().collect()}
     summary = L.run_resumable(
-        spark, joined, out_dir, "tile_y", keys,
+        spark, joined, out_dir, "tile_y", key_rows,
         input_desc=f"documents@{sf_dir}",
     )
     out = spark.read.parquet(f"{out_dir}/{L.DATA_DIR}")
