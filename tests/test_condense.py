@@ -1,8 +1,9 @@
 """Distributed condensed-graph fallbacks (VERDICT r2 next-round #3).
 
-Each driver-solve guard is lowered below the condensed-graph size so the
-operators take the distributed path (operators/condense.py), and the output
-is asserted IDENTICAL to the driver-solve path on the same input.
+The one driver-tier guard (condense.DRIVER_ROWS) is lowered below the
+condensed-graph size so the operators take the distributed path
+(operators/condense.py), and the output is asserted IDENTICAL to the
+driver-solve path on the same input.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from whitebox_geospatial_analysis_tools_spark.operators import clump as clump_mod
+from whitebox_geospatial_analysis_tools_spark.operators import condense
 from whitebox_geospatial_analysis_tools_spark.operators import hydro
 from whitebox_geospatial_analysis_tools_spark.operators import raster as R
 
@@ -30,10 +32,9 @@ def _sorted(df):
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
 
-def _both(op, monkeypatch, guard_attr=("_MAX_DRIVER_ROWS",), guard_val=8):
+def _both(op, monkeypatch, guard_val=8):
     want = _sorted(op())
-    for g in guard_attr:
-        monkeypatch.setattr(hydro, g, guard_val)
+    monkeypatch.setattr(condense, "DRIVER_ROWS", guard_val)
     got = _sorted(op())
     return want, got
 
@@ -104,11 +105,87 @@ def test_stream_network_tier2(spark, monkeypatch):
         # link tables under guard (len(want) links + dag rows <= 2G)
         g2 = len(want) + 2  # links alone < 2*g2; dag pairs ~ junction count
         assert 2 * g2 < n_stream, "fixture too small to separate the tiers"
-        monkeypatch.setattr(hydro, "_MAX_DRIVER_ROWS", g2)
+        monkeypatch.setattr(condense, "DRIVER_ROWS", g2)
         got = _sorted(hydro.stream_network(ptr, _VT, tile=16))
         assert want.equals(got)
     finally:
         ptr.unpersist()
+
+
+_FWD = "row long, col long, t_row long, t_col long, w double, p_row long, p_col long"
+
+
+def _chase_oracle(rows):
+    """Sequential chase: per node, (terminal cell, path weight sum)."""
+    nxt = {(r, c): ((tr, tc), w, (pr, pc)) for r, c, tr, tc, w, pr, pc in rows}
+    out = {}
+    for v in nxt:
+        cur, tot = v, 0.0
+        while cur in nxt:
+            tgt, w, term = nxt[cur]
+            tot += w
+            if tgt[0] < 0:
+                cur = term
+                break
+            cur = tgt
+        out[v] = (cur, tot)
+    return out
+
+
+def test_chase_paths_tiers_equal(spark, monkeypatch):
+    """Driver numpy chase == distributed path doubling on a forest with
+    multi-hop chains, terminal rows and a dangling target (which terminates
+    at the target cell); both tiers raise on a 2-cycle."""
+    rows = [(0, c, 0, c + 1, 0.5 + c / 8, -1, -1) for c in range(20)]
+    rows.append((0, 20, -1, -1, 0.25, 9, 9))       # chain end: terminal row
+    rows.append((1, 0, 0, 7, 1.0 / 3, -1, -1))     # joins the chain mid-way
+    rows.append((2, 0, -1, -1, 0.0, 2, 0))         # lone terminal row
+    rows += [(3, 0, 3, 1, 2.0, -1, -1),            # (3, 1) absent: dangling
+             (3, 2, 3, 0, 0.125, -1, -1),
+             (3, 3, 3, 2, 1e-3, -1, -1)]
+    fwd = spark.createDataFrame(rows, _FWD)
+    oracle = _chase_oracle(rows)
+
+    def run():
+        pdf = condense.chase_paths(fwd).toPandas()
+        return pdf.sort_values(["row", "col"]).reset_index(drop=True)
+
+    want = run()
+    monkeypatch.setattr(condense, "DRIVER_ROWS", 0)
+    got = run()
+    assert len(want) == len(got) == len(rows)
+    for df in (want, got):
+        for r, c, tot, tr, tc in zip(df["row"], df["col"], df["total"],
+                                     df["term_row"], df["term_col"]):
+            (er, ec), etot = oracle[(r, c)]
+            assert (tr, tc) == (er, ec)
+            assert abs(tot - etot) <= 1e-9
+    assert want[["row", "col", "term_row", "term_col"]].equals(
+        got[["row", "col", "term_row", "term_col"]])
+    assert np.abs(want["total"] - got["total"]).max() <= 1e-9
+
+    cyc = spark.createDataFrame(
+        [(0, 0, 0, 1, 1.0, -1, -1), (0, 1, 0, 0, 1.0, -1, -1),
+         (0, 2, 0, 0, 1.0, -1, -1), (5, 5, -1, -1, 0.0, 5, 5)], _FWD)
+    for guard in (8, 0):
+        monkeypatch.setattr(condense, "DRIVER_ROWS", guard)
+        with pytest.raises(RuntimeError, match="cycle"):
+            condense.chase_paths(cyc).collect()
+
+
+def test_round_state_size_estimate_stays_small(spark, monkeypatch):
+    """Round checkpoints must not inherit the origin plan's size estimate:
+    each self-join multiplies it, so kept across rounds its digit count
+    doubles per round and planning the estimate dominates the solve."""
+    monkeypatch.setattr(condense, "DRIVER_ROWS", 0)
+    n = 300
+    pairs = spark.range(n - 1).selectExpr("id AS plabel", "id + 1 AS nplabel")
+    fwd = spark.range(n).selectExpr(
+        "0L AS row", "id AS col", "IF(id < %d, 0L, -1L) AS t_row" % (n - 1),
+        "id + 1 AS t_col", "1.0D AS w", "0L AS p_row", "id AS p_col")
+    for out in (condense.merge_labels(pairs), condense.chase_paths(fwd)):
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert len(str(size)) <= 20, f"size estimate of {len(str(size))} digits"
 
 
 def test_merge_labels_long_path(spark, monkeypatch):
@@ -119,9 +196,7 @@ def test_merge_labels_long_path(spark, monkeypatch):
     component min in O(log) rounds (VERDICT r3 next-round #1).
     Guard lowered to 0 so the DISTRIBUTED tier (not the driver
     union-find) is what converges here."""
-    from whitebox_geospatial_analysis_tools_spark.operators import condense
-
-    monkeypatch.setattr(condense, "_MERGE_DRIVER_PAIRS", 0)
+    monkeypatch.setattr(condense, "DRIVER_ROWS", 0)
     n = 300
     pairs = spark.range(n - 1).selectExpr(
         "id AS plabel", "id + 1 AS nplabel")
@@ -133,13 +208,11 @@ def test_merge_labels_long_path(spark, monkeypatch):
 def test_merge_labels_tiers_equal(spark, monkeypatch):
     """Driver union-find tier == distributed hook+shortcut tier on a pair
     set mixing stars, chains, and singleton pairs."""
-    from whitebox_geospatial_analysis_tools_spark.operators import condense
-
     pairs = spark.range(500).selectExpr(
         "id * 7919 % 211 AS plabel", "(id * 104729 + 3) % 211 AS nplabel")
     want = condense.merge_labels(pairs).toPandas().sort_values(
         "plabel").reset_index(drop=True)
-    monkeypatch.setattr(condense, "_MERGE_DRIVER_PAIRS", 0)
+    monkeypatch.setattr(condense, "DRIVER_ROWS", 0)
     got = condense.merge_labels(pairs).toPandas().sort_values(
         "plabel").reset_index(drop=True)
     assert want.equals(got)
@@ -148,10 +221,8 @@ def test_merge_labels_tiers_equal(spark, monkeypatch):
 def test_merge_labels_raises_unconverged(spark, monkeypatch):
     """Hitting the round cap without fixpoint must be LOUD, never a silent
     wrong answer."""
-    from whitebox_geospatial_analysis_tools_spark.operators import condense
-
     pairs = spark.range(99).selectExpr("id AS plabel", "id + 1 AS nplabel")
-    monkeypatch.setattr(condense, "_MERGE_DRIVER_PAIRS", 0)
+    monkeypatch.setattr(condense, "DRIVER_ROWS", 0)
     monkeypatch.setattr(condense, "_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
         condense.merge_labels(pairs)
@@ -189,7 +260,7 @@ def test_clump_distributed(spark, monkeypatch):
                 F.expr("CAST(FLOOR(value / 50e0) AS BIGINT)").alias("cls"))
     )
     want = _sorted(clump_mod.clump(cells, 128, tile=32))
-    monkeypatch.setattr(clump_mod, "_MAX_DRIVER_PAIRS", 1)
+    monkeypatch.setattr(condense, "DRIVER_ROWS", 1)
     got = _sorted(clump_mod.clump(cells, 128, tile=32))
     assert len(want) == len(got) > 0
     assert want.equals(got)

@@ -4,7 +4,7 @@ next-round #7).
 The guard-lowered pytests (tests/test_condense.py) prove the distributed
 paths CORRECT; this proves their CONSTANT FACTORS at a production tile
 count: a >=50M-cell synthetic DEM (7200 x 7200) through flow_accum /
-watershed / clump with the driver-solve guards lowered so
+watershed / clump with the driver-solve guard lowered so
 operators/condense.py carries the full solve, plus dedup_clusters on a
 2M-document synthetic corpus whose overlapping-window texts force both
 heavy LSH bucket traffic and CHAINED near-dup components (the label-doubling
@@ -55,9 +55,8 @@ def main() -> None:
           f"docs = {args.docs / 1e6:.1f}M", flush=True)
 
     # force the distributed condensed-graph paths regardless of natural size
-    hydro._MAX_DRIVER_ROWS = 100_000
-    clump_mod._MAX_DRIVER_PAIRS = 100_000
-    condense._MERGE_DRIVER_PAIRS = 100_000
+    # (the one driver-tier guard of every condensed solver)
+    condense.DRIVER_ROWS = 100_000
 
     dem = R.synth_raster(spark, args.rows, args.cols)
     ptr = hydro.flow_pointer_d8(dem).persist()

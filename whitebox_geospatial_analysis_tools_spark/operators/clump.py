@@ -14,12 +14,11 @@ component diameter:
      component;
   2. border cells (a 1-cell strip per tile edge — O(N/tile) rows) join
      across tile boundaries to produce provisional-label equivalence pairs;
-  3. the equivalence graph is √N-sized (perimeter cells only), so it is
-     union-found on the driver with min-id roots and broadcast back as a
-     relabel map.  At 100 TB the same merge would run as label propagation
-     over the (still tiny) equivalence graph in O(log) rounds; the driver
-     solve is the sandbox-scale instantiation of that condensed step and is
-     guarded by a size check.
+  3. the equivalence graph is √N-sized (perimeter cells only); its min-id
+     closure is condense.merge_labels, which owns both tiers behind the
+     one guard: a driver union-find whose relabel map is broadcast back,
+     or, past the guard (the 100-TB case), hook + shortcut label rounds
+     over the pair-sized frame in O(log) rounds.
 
 This replaces the round-1 iterative min-label propagation whose per-round
 driver-synced convergence probe cost O(log diameter) full Spark jobs
@@ -37,13 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import _scratch
+from .condense import merge_labels
 
 _OFFS4 = [(-1, 0), (1, 0), (0, -1), (0, 1)]
 _OFFS8 = _OFFS4 + [(-1, -1), (-1, 1), (1, -1), (1, 1)]
-
-# driver-merge guard: the equivalence graph is O(border cells); beyond this
-# the condensed merge should run distributed (log-round label propagation)
-_MAX_DRIVER_PAIRS = 5_000_000
 
 
 def _shift(a: np.ndarray, dr: int, dc: int, fill) -> np.ndarray:
@@ -161,7 +157,7 @@ def clump(cells: DataFrame, cols: int, *, connectivity: int = 4,
         .select("plabel", "nplabel")
         .distinct()
     )
-    out = _driver_merge_relabel(lab, pairs, keep_cols=["row", "col", "cls"])
+    out = _merge_relabel(lab, pairs, keep_cols=["row", "col", "cls"])
     return out
 
 
@@ -174,47 +170,18 @@ def clump_sizes(cells: DataFrame, cols: int) -> DataFrame:
     )
 
 
-def _driver_merge_relabel(lab, pairs, *, keep_cols):
-    """Union-find the (small, boundary-sized) equivalence pairs on the
-    driver with min-id roots, broadcast the remap, relabel `lab`.
-
-    lab must carry a `plabel` column; pairs carries (plabel, nplabel).
-    Beyond the guard, the merge runs distributed as hook+shortcut min-label
-    rounds over the pair-sized frame (operators/condense.py merge_labels)."""
-    spark = lab.sparkSession
-    pdf_pairs = pairs.limit(_MAX_DRIVER_PAIRS + 1).toPandas()
-    if len(pdf_pairs) > _MAX_DRIVER_PAIRS:
-        from .condense import merge_labels
-
-        mapdf = merge_labels(pairs).where(F.col("plabel") != F.col("glabel"))
-        return (
-            lab.join(mapdf, "plabel", "left")
-            .select(*keep_cols, F.coalesce("glabel", "plabel").alias("label"))
-        )
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in zip(pdf_pairs["plabel"].to_numpy(), pdf_pairs["nplabel"].to_numpy()):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    remap = [(int(x), find(int(x))) for x in parent]
-    remap = [(x, r) for x, r in remap if x != r]
-    if remap:
-        mapdf = spark.createDataFrame(remap, "plabel long, glabel long")
-        return (
-            lab.join(F.broadcast(mapdf), "plabel", "left")
-            .select(*keep_cols, F.coalesce("glabel", "plabel").alias("label"))
-        )
-    return lab.select(*keep_cols, F.col("plabel").alias("label"))
+def _merge_relabel(lab, pairs, *, keep_cols):
+    """Relabel `lab` (carrying `plabel`) by the min-label closure of the
+    equivalence pairs (plabel, nplabel): condense.merge_labels, broadcast
+    when its driver tier ran, identity rows dropped."""
+    glabel = merge_labels(pairs)
+    if glabel.isLocal():
+        glabel = F.broadcast(glabel)
+    remap = glabel.where(F.col("plabel") != F.col("glabel"))
+    return (
+        lab.join(remap, "plabel", "left")
+        .select(*keep_cols, F.coalesce("glabel", "plabel").alias("label"))
+    )
 
 
 def components_from_edges(nodes, edges, *, idmul: int = 1_000_000,
@@ -294,4 +261,4 @@ def components_from_edges(nodes, edges, *, idmul: int = 1_000_000,
         .select("plabel", "nplabel")
         .distinct()
     )
-    return _driver_merge_relabel(lab, pairs, keep_cols=["row", "col"])
+    return _merge_relabel(lab, pairs, keep_cols=["row", "col"])

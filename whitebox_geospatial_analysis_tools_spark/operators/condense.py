@@ -1,40 +1,42 @@
-"""Distributed solvers for condensed boundary/link graphs.
+"""Two-tier solvers for condensed boundary/link graphs.
 
 The hydro/clump operators condense their grid problems to boundary-sized
-graphs (entry cells, stream links, label equivalences) and solve those on
-the driver behind a size guard.  This module holds the cluster-scale tier:
-when the condensed graph exceeds the guard, the SAME solve runs
-distributed —
+graphs (entry cells, stream links, label equivalences).  Every solver here
+owns BOTH tiers behind ONE guard, DRIVER_ROWS (read at call time, so one
+patch drives every tier): `collect_guarded` fetches at most DRIVER_ROWS + 1
+rows in one job; within the guard the graph is solved on the driver into an
+Arrow-built local table (callers broadcast it when `isLocal()`), past it
+the SAME solve runs distributed —
 
-  graph_masses     the one condensed solver of the D8 accumulations
-                   (flow_accum, weighted_flow_accum, upslope_max_length),
-                   owning BOTH tiers and the single Kahn kernel (sum or
-                   max-plus).  Under the driver guard it collects the edge
-                   rows once and runs that kernel as one group on the
-                   driver; past it, recursive super-tile condensation: each
-                   level groups nodes by a fanout-times-larger spatial cell,
-                   solves the in-group subgraph with the same kernel, and
-                   forwards cross-group carries to a graph ~fanout-times
-                   smaller (entry nodes sit on group perimeters), recursing
-                   until the guard is met — O(log_fanout) levels, two passes
-                   per level.
-  chase_paths      weighted pointer jumping (path doubling) over a
-                   functional forest: per node, the terminal cell and the
-                   accumulated path weight — watershed labels and
-                   flowpath remainders in O(log path) rounds.
-  solve_links      iterative frontier Kahn over the stream-link DAG
-                   (Strahler / Shreve) + pred-chain pointer doubling for
-                   the main stem — rounds bounded by junction depth /
-                   log(chain length), each a join over the link-sized table.
-  merge_labels     min-label equivalence closure (hook + shortcut rounds, a
-                   Shiloach-Vishkin-style CC) over the clump boundary pairs.
+  graph_masses     the D8 accumulations' single Kahn kernel (sum or
+                   max-plus): one group on the driver, else recursive
+                   super-tile condensation — each level solves the groups
+                   of a fanout-times-larger spatial cell with the same
+                   kernel and forwards cross-group carries to a graph
+                   ~fanout-times smaller, until the guard is met
+                   (O(log_fanout) levels, two passes per level).
+  chase_paths      per node of a functional forest, the terminal cell and
+                   the path weight sum (watershed labels, flowpath
+                   remainders): numpy rounds from the terminals upward,
+                   else weighted pointer jumping in O(log path) rounds.
+  solve_links      frontier Kahn over the stream-link DAG (Strahler /
+                   Shreve) + pred-chain pointer doubling for the main stem
+                   (its driver tier is hydro.stream_network's).
+  merge_labels     min-label closure of equivalence pairs: the one
+                   union-find over collected pairs, else hook + shortcut
+                   rounds (a Shiloach-Vishkin-style CC).
 
-All inputs here are already condensed (O(N/tile) or link-sized), so every
-round touches a frame orders of magnitude smaller than the raster.
-Reference parity: these reproduce exactly what the driver solves do —
-FlowAccumD8.java:282-330 scheduling, Watershed.java terminal labels,
-StreamOrder.java:364 / StreamMagnitude.java / FindMainStem.java:347,
-Clump.java:131-206 merge semantics.
+stream_network, fd8_accum and cost_pathway probe through the same guard.
+
+The loop solvers cut each round's state with `_checkpoint`: a local
+checkpoint re-wrapped WITHOUT the origin plan's size estimate.  A bare
+`localCheckpoint()` keeps that estimate, and each self-join multiplies both
+sides' estimates, so it squares every round; planning with the resulting
+multi-million-digit BigInts came to dominate the rounds.
+
+Reference parity: the sequential solves of FlowAccumD8.java:282-330,
+Watershed.java, DownslopeFlowpathLength.java, StreamOrder.java:364 /
+StreamMagnitude.java / FindMainStem.java:347 and Clump.java:131-206.
 """
 
 from __future__ import annotations
@@ -47,12 +49,34 @@ from pyspark.sql import functions as F
 
 from . import _scratch
 
+DRIVER_ROWS = 5_000_000  # the one driver-tier guard (condensed rows)
+
 _EDGE_SCHEMA = (
     "row long, col long, x_row long, x_col long, val {}, w double, kind int"
 )
 _WHOLE_GRID = 1 << 62  # group cell that puts every node in one group
 _MAX_LEVELS = 24
 _MAX_ROUNDS = 64
+
+
+def collect_guarded(df: DataFrame, scale: int = 1) -> pd.DataFrame | None:
+    """The driver-tier guard, one job: `df` as pandas when it has at most
+    scale * DRIVER_ROWS rows, else None (the over-limit fetch of
+    guard + 1 rows is discarded and the caller runs its distributed tier)."""
+    cap = scale * DRIVER_ROWS
+    head = df.limit(cap + 1).toPandas()
+    return head if len(head) <= cap else None
+
+
+def _checkpoint(df: DataFrame, tag: str) -> DataFrame:
+    """`df` local-checkpointed (tracked under `tag` for release) in a plan
+    with no inherited size estimate (module docstring)."""
+    spark = df.sparkSession
+    ckpt = _scratch.track(spark, df.localCheckpoint(), tag)
+    jdf = spark._jsparkSession.internalCreateDataFrame(
+        ckpt._jdf.queryExecution().toRdd(), ckpt._jdf.schema(), False
+    )
+    return DataFrame(jdf, spark)
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +188,7 @@ def _grouped(edges: DataFrame, g: int) -> DataFrame:
     return edges.groupBy((kr / g).cast("long"), (kc / g).cast("long"))
 
 
-def graph_masses(edges: DataFrame, *, group_cell: int, driver_max: int,
+def graph_masses(edges: DataFrame, *, group_cell: int,
                  is_max: bool = False, fanout: int = 8,
                  _level: int = 0) -> DataFrame:
     """Through-value per node of a functional spatial DAG.
@@ -188,8 +212,8 @@ def graph_masses(edges: DataFrame, *, group_cell: int, driver_max: int,
     with the solved external inflow as one more carry.
     """
     spark = edges.sparkSession
-    head = edges.limit(driver_max + 1).toPandas()
-    if len(head) <= driver_max:
+    head = collect_guarded(edges)
+    if head is not None:
         out = _group_kernel(_WHOLE_GRID, is_max)(None, head)
         out = out.loc[out["kind"] == 0, ["row", "col", "val"]]
         # via Arrow so that an empty result is a local table too
@@ -210,7 +234,7 @@ def graph_masses(edges: DataFrame, *, group_cell: int, driver_max: int,
     )
     mass2 = graph_masses(
         pass_a.where(F.col("kind") >= 1), group_cell=g * fanout,
-        driver_max=driver_max, is_max=is_max, fanout=fanout, _level=_level + 1,
+        is_max=is_max, fanout=fanout, _level=_level + 1,
     )
     null = F.lit(-1).cast("long")
     inflow = mass2.select(
@@ -228,17 +252,56 @@ def graph_masses(edges: DataFrame, *, group_cell: int, driver_max: int,
 
 
 # ---------------------------------------------------------------------------
-# weighted pointer jumping over a functional forest (transit chase)
+# terminal and path weight over a functional forest (transit chase)
 # ---------------------------------------------------------------------------
+def _chase_local(head: pd.DataFrame) -> pa.Table:
+    """Driver tier of chase_paths: numpy rounds from the terminals upward,
+    total[v] = w[v] + total[next[v]] and term[v] = term[next[v]] once
+    next[v] is resolved — per node the same adds, in the same order, as a
+    sequential chase."""
+    rr = head["row"].to_numpy(np.int64)
+    cc = head["col"].to_numpy(np.int64)
+    tr = head["t_row"].to_numpy(np.int64)
+    tc = head["t_col"].to_numpy(np.int64)
+    fwd = tr >= 0
+    at = pd.MultiIndex.from_arrays([rr, cc]).get_indexer(
+        pd.MultiIndex.from_arrays([tr, tc]))
+    nxt = np.where(fwd, at, -1)
+    total = head["w"].to_numpy(np.float64).copy()
+    # a target missing from the table terminates at that target cell
+    term_r = np.where(fwd, tr, head["p_row"].to_numpy(np.int64))
+    term_c = np.where(fwd, tc, head["p_col"].to_numpy(np.int64))
+    done = nxt < 0
+    todo = np.flatnonzero(~done)
+    while todo.size:
+        ready = todo[done[nxt[todo]]]
+        if not ready.size:
+            raise RuntimeError("chase_paths: no progress (cycle?)")
+        t = nxt[ready]
+        total[ready] = total[ready] + total[t]
+        term_r[ready] = term_r[t]
+        term_c[ready] = term_c[t]
+        done[ready] = True
+        todo = todo[~done[todo]]
+    return pa.table({"row": rr, "col": cc, "total": total,
+                     "term_row": term_r, "term_col": term_c})
+
+
 def chase_paths(fwd: DataFrame) -> DataFrame:
     """fwd: (row, col, t_row, t_col, w, p_row, p_col) — each node forwards
     to (t_row, t_col) with path weight w, or terminates (t_row = -1) at
-    terminal cell (p_row, p_col).
+    terminal cell (p_row, p_col); a forward target missing from fwd
+    terminates there.
 
     Returns (row, col, total double, term_row, term_col): accumulated chain
-    weight to termination and the terminal cell — Wyllie path doubling,
-    O(log chain) rounds over the condensed frame."""
+    weight to termination and the terminal cell.  Within the guard the rows
+    are collected once and chased on the driver into a local table
+    (_chase_local); past it, Wyllie path doubling in O(log chain) rounds
+    over the condensed frame.  Both tiers raise on a cycle."""
     spark = fwd.sparkSession
+    head = collect_guarded(fwd)
+    if head is not None:
+        return spark.createDataFrame(_chase_local(head))
     _scratch.release(spark, "chase")
     state = fwd.select(
         "row", "col",
@@ -248,10 +311,14 @@ def chase_paths(fwd: DataFrame) -> DataFrame:
         F.when(F.col("t_row") < 0, F.col("p_col")).otherwise(F.lit(-1)).alias("xc"),
         (F.col("t_row") < 0).alias("done"),
     )
-    state = _scratch.track(spark, state.localCheckpoint(), "chase")
+    state = _checkpoint(state, "chase")
+    n_live = None
     for _ in range(_MAX_ROUNDS):
-        if state.where(~F.col("done")).limit(1).count() == 0:
+        prev, n_live = n_live, state.where(~F.col("done")).count()
+        if n_live == 0:
             break
+        if n_live == prev:  # only cycles (and chains into them) are left
+            raise RuntimeError("chase_paths: no progress (cycle?)")
         nxt = state.select(
             F.col("row").alias("_jr"), F.col("col").alias("_jc"),
             F.col("nr").alias("_nr2"), F.col("nc").alias("_nc2"),
@@ -273,18 +340,15 @@ def chase_paths(fwd: DataFrame) -> DataFrame:
             F.coalesce("_xc2", F.col("nc")).alias("xc"),
             F.coalesce("_done2", F.lit(True)).alias("done"),
         )
-        state = _scratch.track(
-            spark,
-            state.where(F.col("done")).unionByName(live).localCheckpoint(),
-            "chase",
+        state = _checkpoint(
+            state.where(F.col("done")).unionByName(live), "chase"
         )
     else:
         raise RuntimeError("chase_paths did not converge (cycle?)")
-    out = state.select(
+    return state.select(
         "row", "col", F.col("acc").alias("total"),
         F.col("xr").alias("term_row"), F.col("xc").alias("term_col"),
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -301,14 +365,14 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
     rounds; main iff the root is an outlet)."""
     spark = links.sparkSession
     _scratch.release(spark, "links")
-    links = _scratch.track(spark, links.select("label").localCheckpoint(), "links")
-    dag = _scratch.track(spark, dag.localCheckpoint(), "links")
+    links = _checkpoint(links.select("label"), "links")
+    dag = _checkpoint(dag, "links")
     need = dag.groupBy("dn").agg(F.count(F.lit(1)).alias("_need"))
     total = links.count()
     solved = links.join(
         need, links["label"] == need["dn"], "left_anti"
     ).select("label", F.lit(1).alias("strahler"), F.lit(1).alias("magnitude"))
-    solved = _scratch.track(spark, solved.localCheckpoint(), "links")
+    solved = _checkpoint(solved, "links")
     n_solved = solved.count()
     for _ in range(_MAX_ROUNDS):
         if n_solved >= total:
@@ -334,9 +398,7 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
             )
         )
         # only links not yet solved are new (got==need happens exactly once)
-        solved = _scratch.track(
-            spark, solved.unionByName(new).localCheckpoint(), "links"
-        )
+        solved = _checkpoint(solved.unionByName(new), "links")
         prev, n_solved = n_solved, solved.count()
         if n_solved == prev:
             raise RuntimeError("solve_links: no progress (cyclic link DAG?)")
@@ -359,7 +421,7 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
         F.coalesce("p", F.col("label")).alias("cur"),
         F.col("p").isNull().alias("done"),
     )
-    state = _scratch.track(spark, state.localCheckpoint(), "links")
+    state = _checkpoint(state, "links")
     for _ in range(_MAX_ROUNDS):
         if state.where(~F.col("done")).limit(1).count() == 0:
             break
@@ -372,10 +434,8 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
         ).select(
             "label", F.col("_cur2").alias("cur"), F.col("_done2").alias("done")
         )
-        state = _scratch.track(
-            spark,
-            state.where(F.col("done")).unionByName(live).localCheckpoint(),
-            "links",
+        state = _checkpoint(
+            state.where(F.col("done")).unionByName(live), "links"
         )
     else:
         raise RuntimeError("solve_links main-stem chase exceeded round cap")
@@ -392,25 +452,21 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # equivalence-pair min-label closure (clump boundary merge)
 # ---------------------------------------------------------------------------
-_MERGE_DRIVER_PAIRS = 2_000_000  # driver union-find guard (pair rows)
-
-
 def merge_labels(pairs: DataFrame) -> DataFrame:
     """pairs: (plabel, nplabel) undirected equivalences.  Returns (plabel,
     glabel) mapping every node appearing in a pair to the min label of its
     component.
 
-    Tiered like every condensed solve in this module: a pair set under the
-    driver guard is one path-compressed union-find on the driver (the pair
-    frame is already candidate-sized, orders of magnitude below the corpus);
-    past the guard, hook + shortcut rounds (Shiloach-Vishkin style) converge
-    in O(log^2 component diameter) rounds over the pair-sized frame — the
-    100-TB path, soak-tested at 2 M docs (tools/soak.py)."""
+    The one union-find over collected pairs: a pair set within the guard is
+    one path-compressed union-find with min-label roots on the driver (the
+    pair frame is already candidate-sized, orders of magnitude below the
+    corpus), returned as a local table; past the guard, hook + shortcut
+    rounds (Shiloach-Vishkin style) converge in O(log^2 component diameter)
+    rounds over the pair-sized frame — the 100-TB path, soak-tested at 2 M
+    docs (tools/soak.py)."""
     spark = pairs.sparkSession
-    # single-job guard: fetch at most guard+1 pair rows; an over-limit
-    # result is discarded and the distributed rounds below run instead
-    head = pairs.limit(_MERGE_DRIVER_PAIRS + 1).toPandas()
-    if len(head) <= _MERGE_DRIVER_PAIRS:
+    head = collect_guarded(pairs)
+    if head is not None:
         par: dict = {}
 
         def find(x):
@@ -421,27 +477,27 @@ def merge_labels(pairs: DataFrame) -> DataFrame:
                 par[x], x = root, par[x]
             return root
 
-        av = head.iloc[:, 0].tolist()
-        bv = head.iloc[:, 1].tolist()
-        for a_, b_ in zip(av, bv):
+        av = head.iloc[:, 0].to_numpy(np.int64)
+        bv = head.iloc[:, 1].to_numpy(np.int64)
+        for a_, b_ in zip(av.tolist(), bv.tolist()):
             ra, rb = find(a_), find(b_)
             if ra != rb:
                 if rb < ra:
                     ra, rb = rb, ra
                 par[rb] = ra  # min-value root => glabel = component min
-        nodes = sorted(set(av) | set(bv))
-        out = [(int(n), int(find(n))) for n in nodes]
-        return spark.createDataFrame(out or [], "plabel long, glabel long")
+        nodes = np.unique(np.concatenate([av, bv]))
+        roots = np.fromiter(map(find, nodes.tolist()), np.int64, nodes.size)
+        return spark.createDataFrame(pa.table({"plabel": nodes, "glabel": roots}))
     _scratch.release(spark, "merge_labels")
     edges = pairs.select(F.col("plabel").alias("a"), F.col("nplabel").alias("b"))
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    edges = _scratch.track(spark, edges.localCheckpoint(), "merge_labels")
+    edges = _checkpoint(edges, "merge_labels")
     parent = edges.groupBy("a").agg(
         F.least(F.min("b"), F.first("a")).alias("p")
     ).select(F.col("a").alias("n"), F.least("p", F.col("a")).alias("p"))
-    parent = _scratch.track(spark, parent.localCheckpoint(), "merge_labels")
+    parent = _checkpoint(parent, "merge_labels")
     for _ in range(_MAX_ROUNDS):
         # hook: p(v) <- min(p(v), min over neighbors' p)
         nb = (
@@ -456,7 +512,7 @@ def merge_labels(pairs: DataFrame) -> DataFrame:
         short = hooked.join(pp, hooked["p"] == pp["_pn"], "left").select(
             "n", F.least("p", F.coalesce("_pp", F.col("p"))).alias("p")
         )
-        short = _scratch.track(spark, short.localCheckpoint(), "merge_labels")
+        short = _checkpoint(short, "merge_labels")
         changed = (
             short.join(parent.select(F.col("n"), F.col("p").alias("_old")), "n")
             .where(F.col("p") != F.col("_old")).limit(1).count()

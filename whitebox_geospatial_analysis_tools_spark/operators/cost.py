@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .condense import collect_guarded
+
 _SQRT2 = 1.4142135623730951
 _OFFS8 = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
 INF = float("inf")
@@ -169,9 +171,6 @@ def cost_allocation(cells: DataFrame, *, tile: int = 256,
     return cost_distance(cells, tile=tile, max_rounds=max_rounds, alloc=True)
 
 
-_MAX_DRIVER_ROWS = 5_000_000
-
-
 def cost_pathway(cells: DataFrame, dests: DataFrame, *, tile: int = 256,
                  max_rounds: int = 64) -> DataFrame:
     """(row, col): cells on the least-cost path from each destination back
@@ -220,9 +219,9 @@ def cost_pathway(cells: DataFrame, dests: DataFrame, *, tile: int = 256,
             F.col("_b.r").alias("pr"), F.col("_b.c").alias("pc"),
         )
     )
-    head = pred.limit(_MAX_DRIVER_ROWS + 1).toPandas()
-    dpd = dests.select("row", "col").toPandas()
-    if len(head) <= _MAX_DRIVER_ROWS:
+    head = collect_guarded(pred)
+    if head is not None:
+        dpd = dests.select("row", "col").toPandas()
         ptr = {
             (int(r), int(c)): (float(d), (int(pr), int(pc)))
             for r, c, d, pr, pc in zip(
