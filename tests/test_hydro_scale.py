@@ -8,6 +8,7 @@ seconds)."""
 
 from __future__ import annotations
 
+import re
 import time
 
 import numpy as np
@@ -243,6 +244,78 @@ def test_flowpath_and_upslope_tile_invariance(spark):
         vb = b.iloc[:, 2].to_numpy()
         assert np.abs(va - vb).max() <= 1e-6 + 1e-9
     ptr.unpersist()
+
+
+def test_d8_accum_one_tile_path(spark):
+    """At tile=256 the 96x128 grid is one tile, so no flow crosses a tile
+    edge and the condensed graph is empty: pass B still runs (ext = 0) and
+    must equal the 12-tile run at tile=32 exactly, for the count and the
+    integer-weighted accumulation alike."""
+    from whitebox_geospatial_analysis_tools_spark.operators.hydro import (
+        weighted_flow_accum,
+    )
+
+    ptr = flow_pointer_d8(R.synth_raster(spark, 96, 128)).persist()
+    w = ptr.select("row", "col",
+                   F.expr("(row * 7 + col) % 11 - 3").cast("long").alias("w0"))
+    for op in (flow_accum, lambda p, tile: weighted_flow_accum(p, w, tile=tile)):
+        a, b = (op(ptr, tile=t).toPandas().sort_values(["row", "col"])
+                .reset_index(drop=True) for t in (32, 256))
+        assert len(a) > 0 and a.equals(b)
+        if op is flow_accum:
+            want = accum_np(synth_values(96, 128))
+            assert len(b) == int((want >= 0).sum())
+            assert np.array_equal(
+                b["accum"].to_numpy(),
+                want[b["row"].to_numpy(), b["col"].to_numpy()])
+    ptr.unpersist()
+
+
+def test_flow_accum_plan_reads_cached_cells(spark):
+    """The executed plan of a noop write of flow_accum: pass B is the only
+    FlatMapGroupsInPandas above the cache, reading the persisted tiled
+    pointer cells through an InMemoryTableScan (the pointer kernel is not
+    rerun), and nothing filters pass B's output."""
+    acc = flow_accum(flow_pointer_d8(R.synth_raster(spark, 96, 128)), tile=32)
+    acc.write.format("noop").mode("overwrite").save()
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # the final AQE plan reaches the store
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    last = max((execs.apply(i) for i in range(execs.size())),
+               key=lambda e: e.executionId())
+    plan = last.physicalPlanDescription()
+    assert "InMemoryRelation" in plan
+    above = plan[:plan.index("InMemoryRelation")]
+    assert above.count("FlatMapGroupsInPandas") == 1
+    assert above.index("InMemoryTableScan") > above.index("FlatMapGroupsInPandas")
+    assert re.search(r"InMemoryTableScan\nOutput \[5\]: \[row#\d+L, col#\d+L, "
+                     r"code#\d+L, _tr#\d+L, _tc#\d+L\]", plan)
+    assert "Filter" not in above
+
+
+def test_tile_kernel_stop_mask_without_downcast():
+    """An absorbing `stop` column arrives from the left join as object
+    dtype (True / None); the kernel reads it without pandas' fillna
+    downcast warning, and a stop cell still cuts the path through it."""
+    import warnings
+
+    import pyarrow as pa
+
+    from whitebox_geospatial_analysis_tools_spark.operators.hydro import (
+        _tile_flow_kernel,
+    )
+
+    east = 2 ** 4  # D8 code toward (0, +1)
+    pdf = pa.table({
+        "row": [0, 0, 0], "col": [0, 1, 2], "code": [east, east, 0],
+        "stop": pa.array([None, True, None]),
+    }).to_pandas()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = _tile_flow_kernel(8)((0, 0), pdf)
+    k0 = out[out["kind"] == 0].set_index("col")
+    assert k0["acc"].tolist() == [1, 2, 1]
+    assert k0["p_col"].tolist() == [1, 1, 2]
 
 
 def test_fd8_tile_invariance(spark):

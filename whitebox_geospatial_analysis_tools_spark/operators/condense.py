@@ -51,7 +51,7 @@ from . import _scratch
 
 DRIVER_ROWS = 5_000_000  # the one driver-tier guard (condensed rows)
 
-_EDGE_SCHEMA = (
+EDGE_SCHEMA = (  # graph_masses' edge rows; {} = val type
     "row long, col long, x_row long, x_col long, val {}, w double, kind int"
 )
 _WHOLE_GRID = 1 << 62  # group cell that puts every node in one group
@@ -224,8 +224,10 @@ def graph_masses(edges: DataFrame, *, group_cell: int,
 
     tag = f"condense{_level}"
     _scratch.release(spark, tag)
+    # read twice more below (pass A, pass B): computed once past the probe
+    edges = _scratch.track(spark, edges.persist(), tag)
     g = int(group_cell)
-    schema = _EDGE_SCHEMA.format("double" if is_max else "long")
+    schema = EDGE_SCHEMA.format("double" if is_max else "long")
     pass_a = _scratch.track(
         spark,
         _grouped(edges, g).applyInPandas(_group_kernel(g, is_max), schema)

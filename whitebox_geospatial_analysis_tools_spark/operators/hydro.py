@@ -17,10 +17,11 @@ Reference semantics (SURVEY.md §2.12):
 Distributed formulation (round-2 rebuild, replacing the O(path^2)
 transitive-closure doubling of round 1 — VERDICT wrong-list #1):
 
-  phase 1  one ``applyInPandas`` per tile runs the reference's own
-           sequential upstream-count scheduling (vectorized Kahn wavefronts
-           in numpy) with EXTERNAL INFLOW = 0, and emits
-             - the tile-local accumulation per cell,
+  phase 1  the tiled pointer cells are persisted once (the pointer kernel
+           upstream runs once for both passes); one ``applyInPandas`` per
+           tile runs the reference's own sequential upstream-count
+           scheduling (vectorized Kahn wavefronts in numpy) with EXTERNAL
+           INFLOW = 0, and returns only the condensed-graph rows:
              - every cross-tile edge (source cell, destination cell, local
                mass), and
              - per border cell: where its within-tile flow path EXITS the
@@ -32,15 +33,17 @@ transitive-closure doubling of round 1 — VERDICT wrong-list #1):
            condense.graph_masses call, which owns both tiers: a vectorized
            Kahn on the driver under condense.DRIVER_ROWS, recursive
            super-tile condensation past it.
-  phase 3  entry masses join back (broadcast in the driver tier); the SAME
-           tile kernel reruns with per-cell weight = 1 + external inflow,
-           giving exact global accumulation.  Total: 2 Spark passes,
-           independent of flow-path length — O(V) state instead of
-           O(Σ path²) closure pairs.
+  phase 3  entry masses join back onto the cached cells (broadcast in the
+           driver tier; 0 everywhere when no flow crosses a tile edge); the
+           SAME tile kernel reruns with per-cell weight = 1 + external
+           inflow and returns only (row, col, acc), the exact global
+           accumulation.  Total: 2 Spark passes, independent of flow-path
+           length — O(V) state instead of O(Σ path²) closure pairs.
 
   flow_accum, weighted_flow_accum (seed w0 instead of 1) and
   upslope_max_length (max-plus instead of sum) are this one body
-  (_d8_accum) over the one tile kernel (_tile_flow_kernel).
+  (_d8_accum) over the one tile kernel (_tile_flow_kernel); watershed
+  and flowpath_length run that kernel once with every per-cell row.
 
 Direction codes here are 2^j over the fixed neighbor order
 (NW,N,NE,W,E,SW,S,SE); j differs from the reference's rosette layout but the
@@ -58,7 +61,9 @@ from pyspark.sql import functions as F
 from . import _scratch
 # the guard under its old name, read only by perfbench/workloads.py
 from .condense import DRIVER_ROWS as _MAX_DRIVER_ROWS  # noqa: F401
-from .condense import chase_paths, collect_guarded, graph_masses, solve_links
+from .condense import (
+    EDGE_SCHEMA, chase_paths, collect_guarded, graph_masses, solve_links,
+)
 from .raster import NODATA, _assemble_pad, _halo_contributions
 
 _SQRT2 = 1.4142135623730951
@@ -256,17 +261,21 @@ def stream_link_slope(pointers: DataFrame, dem_cells: DataFrame,
 # tile-local flow solve (shared by the D8 accumulations, watershed and
 # flowpath_length)
 # ---------------------------------------------------------------------------
-_FLOW_SCHEMA = (
-    "row long, col long, acc long, x_row long, x_col long, "
-    "p_row long, p_col long, pdist double, kind int"
-)
-# acc is long in sum mode and double in max mode (longest upstream path).
+_PASS_SCHEMA = {  # per _tile_flow_kernel emit mode
+    "all": "row long, col long, acc {}, x_row long, x_col long, "
+           "p_row long, p_col long, pdist double, kind int",
+    "edges": EDGE_SCHEMA,
+    "acc": "row long, col long, acc {}",
+}
+# {} (acc, val) is long in sum mode and double in max mode (longest
+# upstream path).  "all" rows:
 # kind 0: per-cell row — acc = tile-local accumulation; (p_row,p_col) = the
 #         pit this cell drains to when its path TERMINATES in-tile, else
 #         (x_row,x_col) = the out-of-tile cell its path crosses into.
 # kind 1: cross-tile edge — cell (row,col) sends mass acc into (x_row,x_col).
 # kind 2: border transit — border cell (row,col)'s path exits into
 #         (x_row,x_col), or terminates at pit (p_row,p_col).
+# "edges" = kinds 1-2 with acc as val and pdist as w (graph_masses' input).
 
 
 def _decode_targets(rr, cc, code):
@@ -276,13 +285,17 @@ def _decode_targets(rr, cc, code):
     return has, rr + np.where(has, _D8_DR[j], 0), cc + np.where(has, _D8_DC[j], 0)
 
 
-def _tile_flow_kernel(tile: int, is_max: bool = False):
+def _tile_flow_kernel(tile: int, is_max: bool = False, emit: str = "all"):
     """Tile-local D8 solve with external inflow ``ext``.  Sum mode counts
     1 + ext per cell; max mode is the max-plus Kahn of the LONGEST upstream
     path (step 1 / sqrt(2)), so its kind-1 value is the path length up to
     the entry cell across the tile edge.  Because a D8 cell has one
     outflow, all flow entering at a border cell follows a single path, and
-    the condensed entry DAG carries both modes."""
+    the condensed entry DAG carries both modes.
+
+    ``emit`` selects the output (_PASS_SCHEMA): "all" = kinds 0-2,
+    "edges" = kinds 1-2 only, as condense.graph_masses edge rows, "acc" =
+    (row, col, acc) per cell, without the pointer jumping."""
     vdt = np.float64 if is_max else np.int64
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -311,7 +324,7 @@ def _tile_flow_kernel(tile: int, is_max: bool = False):
         if "stop" in pdf.columns:
             # absorbing cells (e.g. stream cells for subbasin labeling):
             # their outflow is cut, so they terminate paths like pits
-            stop = pdf["stop"].fillna(False).to_numpy(bool)
+            stop = pdf["stop"].eq(True).to_numpy()
             internal = internal & ~stop
             cross = cross & ~stop
             tgt = np.where(stop, -1, tgt)
@@ -339,6 +352,8 @@ def _tile_flow_kernel(tile: int, is_max: bool = False):
                 frontier = np.flatnonzero((indeg == 0) & ~processed)
             else:
                 frontier = np.array([], dtype=np.int64)
+        if emit == "acc":
+            return pd.DataFrame({"row": rr, "col": cc, "acc": accum})
 
         # --- terminal of each cell's within-tile path + path distance:
         # weighted pointer jumping (terminals are zero-weight self-loops)
@@ -353,7 +368,10 @@ def _tile_flow_kernel(tile: int, is_max: bool = False):
             dd = dd + dd[dest]
             dest = nd
         dd = dd + dd[dest]  # flush the final hop's accumulated weights
+        null = np.int64(-1)
         d_exits = cross[dest]  # terminal cell has an out-of-tile edge
+        x_row = np.where(d_exits, t_r[dest], null)
+        x_col = np.where(d_exits, t_c[dest], null)
         # path distance up to the NEXT TILE's entry cell (exit crossing step
         # included) or to the in-tile pit
         xstep = np.where(cross, step, 0.0)
@@ -363,47 +381,41 @@ def _tile_flow_kernel(tile: int, is_max: bool = False):
             (rr % tile == 0) | (rr % tile == tile - 1)
             | (cc % tile == 0) | (cc % tile == tile - 1)
         )
-
-        parts = []
-        null = np.int64(-1)
-        # kind 0: per-cell local accumulation + path terminal
-        parts.append(pd.DataFrame({
-            "row": rr, "col": cc, "acc": accum,
-            "x_row": np.where(d_exits, t_r[dest], null),
-            "x_col": np.where(d_exits, t_c[dest], null),
-            "p_row": np.where(d_exits, null, rr[dest]),
-            "p_col": np.where(d_exits, null, cc[dest]),
-            "pdist": pdist,
-            "kind": np.zeros(n, dtype=np.int32),
-        }))
-        # kind 1: cross-tile out-edges with tile-local mass (max mode: the
-        # longest path up to the target cell)
         xs = np.flatnonzero(cross)
-        if xs.size:
-            parts.append(pd.DataFrame({
-                "row": rr[xs], "col": cc[xs],
-                "acc": accum[xs] + step[xs] if is_max else accum[xs],
-                "x_row": t_r[xs], "x_col": t_c[xs],
-                "p_row": np.full(xs.size, null), "p_col": np.full(xs.size, null),
-                "pdist": np.zeros(xs.size),
-                "kind": np.full(xs.size, 1, dtype=np.int32),
-            }))
-        # kind 2: border-cell transit map
         bs = np.flatnonzero(on_border)
-        if bs.size:
-            bd = dest[bs]
-            be = cross[bd]
-            parts.append(pd.DataFrame({
-                "row": rr[bs], "col": cc[bs],
-                "acc": np.zeros(bs.size, dtype=vdt),
-                "x_row": np.where(be, t_r[bd], null),
-                "x_col": np.where(be, t_c[bd], null),
-                "p_row": np.where(be, null, rr[bd]),
-                "p_col": np.where(be, null, cc[bd]),
-                "pdist": pdist[bs],
-                "kind": np.full(bs.size, 2, dtype=np.int32),
-            }))
-        return pd.concat(parts, ignore_index=True)
+        # kind 1: cross-tile out-edges with tile-local mass (max mode: the
+        # longest path up to the target cell); kind 2: border-cell transit
+        # map — graph_masses' edge rows
+        edges = pd.DataFrame({
+            "row": np.concatenate([rr[xs], rr[bs]]),
+            "col": np.concatenate([cc[xs], cc[bs]]),
+            "x_row": np.concatenate([t_r[xs], x_row[bs]]),
+            "x_col": np.concatenate([t_c[xs], x_col[bs]]),
+            "val": np.concatenate([
+                accum[xs] + step[xs] if is_max else accum[xs],
+                np.zeros(bs.size, dtype=vdt),
+            ]),
+            "w": np.concatenate([np.zeros(xs.size), pdist[bs]]),
+            "kind": np.repeat(np.array([1, 2], dtype=np.int32),
+                              [xs.size, bs.size]),
+        })
+        if emit == "edges":
+            return edges
+        # kind 0: per-cell local accumulation + path terminal
+        p_row = np.where(d_exits, null, rr[dest])
+        p_col = np.where(d_exits, null, cc[dest])
+        no_pit = np.full(xs.size, null)
+        return pd.concat([
+            pd.DataFrame({
+                "row": rr, "col": cc, "acc": accum, "x_row": x_row,
+                "x_col": x_col, "p_row": p_row, "p_col": p_col,
+                "pdist": pdist, "kind": np.zeros(n, dtype=np.int32),
+            }),
+            edges.rename(columns={"val": "acc", "w": "pdist"}).assign(
+                p_row=np.concatenate([no_pit, p_row[bs]]),
+                p_col=np.concatenate([no_pit, p_col[bs]]),
+            ),
+        ], ignore_index=True)
 
     return kernel
 
@@ -414,21 +426,27 @@ def _with_tiles(pointers: DataFrame, tile: int) -> DataFrame:
     ).withColumn("_tc", (F.col("col") / tile).cast("long"))
 
 
-def _tile_pass(cells: DataFrame, tile: int, is_max: bool = False) -> DataFrame:
-    """One _tile_flow_kernel pass over _with_tiles cells."""
-    schema = _FLOW_SCHEMA.replace("acc long", "acc double") if is_max else _FLOW_SCHEMA
+def _tile_pass(cells: DataFrame, tile: int, is_max: bool = False,
+               emit: str = "all") -> DataFrame:
+    """One _tile_flow_kernel pass over _with_tiles cells; `emit` picks the
+    rows and columns returned (_PASS_SCHEMA)."""
+    schema = _PASS_SCHEMA[emit].format("double" if is_max else "long")
     return cells.groupBy("_tr", "_tc").applyInPandas(
-        _tile_flow_kernel(tile, is_max), schema
+        _tile_flow_kernel(tile, is_max, emit), schema
     )
 
 
 def _d8_accum(pointers: DataFrame, tile: int, out: str, *,
               weights: DataFrame | None = None, is_max: bool = False) -> DataFrame:
-    """Shared body of the D8 accumulations (module docstring): tile pass A,
-    ONE condense.graph_masses solve over its cross edges and border
-    transits (driver or distributed tier, chosen there),
-    then pass B with each entry cell's solved external inflow as ``ext``.
-    Sum mode stays long end to end; max mode is double."""
+    """Shared body of the D8 accumulations (module docstring).  The tiled
+    cells (with the weight seed) are persisted once, under the operator's
+    _scratch tag, so the pointer kernel upstream runs once for both passes.
+    Pass A returns only the cross edges and border transits ("edges"),
+    solved by ONE condense.graph_masses call (driver or distributed tier,
+    chosen there); pass B reruns the kernel over the cached cells with each
+    entry cell's solved external inflow as ``ext`` (0 when no flow crosses
+    a tile edge) and returns only (row, col, acc).  Sum mode stays long end
+    to end; max mode is double."""
     spark = pointers.sparkSession
     _scratch.release(spark, out)
     cells = _with_tiles(pointers, tile)
@@ -438,31 +456,22 @@ def _d8_accum(pointers: DataFrame, tile: int, out: str, *,
         ).withColumn(
             "ext", F.coalesce(F.col("w0") - F.lit(1), F.lit(0)).cast("long")
         ).drop("w0")
-    pass_a = _scratch.track(
-        spark, _tile_pass(cells, tile, is_max).persist(), out
-    )
+    cells = _scratch.track(spark, cells.persist(), out)
     mass = graph_masses(
-        pass_a.where(F.col("kind") >= 1).select(
-            "row", "col", "x_row", "x_col",
-            F.col("acc").alias("val"), F.col("pdist").alias("w"), "kind",
-        ),
+        _tile_pass(cells, tile, is_max, "edges"),
         group_cell=tile * 8, is_max=is_max,
     )
-    acc = F.round("acc", 6).cast("double") if is_max else F.col("acc")
-    if mass.isLocal():  # driver tier: a local table, isEmpty runs no job
-        if mass.isEmpty():  # no flow crosses a tile edge: pass A is exact
-            return pass_a.where(F.col("kind") == 0).select(
-                "row", "col", acc.alias(out)
-            )
+    if mass.isLocal():  # driver tier
         mass = F.broadcast(mass)
     ext = F.coalesce("mass", F.lit(0))
     pass_b = _tile_pass(
         cells.join(mass, ["row", "col"], "left").withColumn(
             "ext", ext + F.col("ext") if weights is not None else ext
         ).drop("mass"),
-        tile, is_max,
+        tile, is_max, "acc",
     )
-    return pass_b.where(F.col("kind") == 0).select("row", "col", acc.alias(out))
+    acc = F.round("acc", 6).cast("double") if is_max else F.col("acc")
+    return pass_b.select("row", "col", acc.alias(out))
 
 
 def flow_accum(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
