@@ -271,19 +271,25 @@ def test_d8_accum_one_tile_path(spark):
     ptr.unpersist()
 
 
-def test_flow_accum_plan_reads_cached_cells(spark):
-    """The executed plan of a noop write of flow_accum: pass B is the only
-    FlatMapGroupsInPandas above the cache, reading the persisted tiled
-    pointer cells through an InMemoryTableScan (the pointer kernel is not
-    rerun), and nothing filters pass B's output."""
-    acc = flow_accum(flow_pointer_d8(R.synth_raster(spark, 96, 128)), tile=32)
-    acc.write.format("noop").mode("overwrite").save()
+def _noop_plan(spark, df) -> str:
+    """The executed (final AQE) physical plan of a noop write of ``df``."""
+    df.write.format("noop").mode("overwrite").save()
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()  # the final AQE plan reaches the store
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     last = max((execs.apply(i) for i in range(execs.size())),
                key=lambda e: e.executionId())
-    plan = last.physicalPlanDescription()
+    return last.physicalPlanDescription()
+
+
+def test_flow_accum_plan_reads_cached_cells(spark):
+    """The executed plan of a noop write of flow_accum: pass B is the only
+    FlatMapGroupsInPandas above the cache, reading the persisted tiled
+    pointer cells through an InMemoryTableScan (the pointer kernel is not
+    rerun) with no shuffle (the cells are cached partitioned by tile), and
+    nothing filters pass B's output."""
+    plan = _noop_plan(spark, flow_accum(
+        flow_pointer_d8(R.synth_raster(spark, 96, 128)), tile=32))
     assert "InMemoryRelation" in plan
     above = plan[:plan.index("InMemoryRelation")]
     assert above.count("FlatMapGroupsInPandas") == 1
@@ -291,6 +297,21 @@ def test_flow_accum_plan_reads_cached_cells(spark):
     assert re.search(r"InMemoryTableScan\nOutput \[5\]: \[row#\d+L, col#\d+L, "
                      r"code#\d+L, _tr#\d+L, _tc#\d+L\]", plan)
     assert "Filter" not in above
+    assert "Exchange" not in above
+
+
+def test_focal_groups_one_task_per_shuffle_partition(spark):
+    """focal's FlatMapGroupsInPandas reads the halo rows hash-partitioned
+    by (dst_row, dst_col) into the session's shuffle partitions as an
+    explicit-count repartition, which AQE does not coalesce into one
+    Python task."""
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    plan = _noop_plan(spark, R.focal(R.synth_raster(spark, 96, 128), "mean"))
+    assert plan.count("FlatMapGroupsInPandas") >= 1
+    assert re.search(r"hashpartitioning\(dst_row#\d+L, dst_col#\d+L, "
+                     + n + r"\), REPARTITION_BY_NUM", plan)
+    assert "ENSURE_REQUIREMENTS" not in plan  # the groupBy adds no shuffle
+    assert "AQEShuffleRead" not in plan
 
 
 def test_tile_kernel_stop_mask_without_downcast():

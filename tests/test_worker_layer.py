@@ -1,0 +1,73 @@
+"""The Python worker layer: engine sessions run their workers under
+``worker_daemon`` (no per-task zip directory re-read), and the tile
+kernels build with no pyspark type-hint warning."""
+
+from __future__ import annotations
+
+import warnings
+
+from pyspark.sql import functions as F
+
+from whitebox_geospatial_analysis_tools_spark.operators import raster as R
+from whitebox_geospatial_analysis_tools_spark.operators.clump import clump
+from whitebox_geospatial_analysis_tools_spark.operators.hydro import (
+    flow_accum, flow_pointer_d8,
+)
+from whitebox_geospatial_analysis_tools_spark.operators.zonal import (
+    kriging_at_cell_centers, rbf_at_cell_centers,
+)
+from whitebox_geospatial_analysis_tools_spark.sources.pages import (
+    points_from_documents,
+)
+from tests.conftest import SF_SMOKE
+
+
+def test_worker_daemon_keeps_zip_directories(spark):
+    """Inside a worker, importlib.invalidate_caches() leaves a
+    zipimporter's directory dict in place, and the worker's parent is the
+    engine's daemon module."""
+
+    def probe(batches):  # nested, so cloudpickle ships it by value
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        zi = next(v for v in sys.path_importer_cache.values()
+                  if isinstance(v, zipimport.zipimporter))
+        before = zi._files
+        importlib.invalidate_caches()
+        with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
+            parent = f.read().replace(b"\0", b" ").decode()
+        yield pd.DataFrame({"replaced": [zi._files is not before],
+                            "parent": [parent]})
+
+    row = (spark.range(1, numPartitions=1)
+           .mapInPandas(probe, "replaced boolean, parent string")
+           .collect()[0])
+    assert not row.replaced
+    assert "whitebox_geospatial_analysis_tools_spark.worker_daemon" in row.parent
+
+
+def test_tile_kernels_build_without_type_hint_warning(spark):
+    """Every applyInPandas kernel leaves its arguments unannotated, so
+    pyspark keeps the grouped-map eval type without trying (and warning
+    about) type-hint inference.  flow_accum's build runs its eager jobs."""
+    tiles = R.synth_raster(spark, 96, 128)
+    cells = (R.explode_cells(tiles).where(F.col("value") != R.NODATA)
+             .select("row", "col",
+                     F.expr("CAST(FLOOR(value / 50e0) AS BIGINT)").alias("cls")))
+    pts = points_from_documents(spark, SF_SMOKE)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        # sockets py4j's collect leaves to the garbage collector
+        warnings.simplefilter("ignore", ResourceWarning)
+        R.focal(tiles, "mean")
+        flow_accum(flow_pointer_d8(tiles), tile=32)
+        clump(cells, 128, tile=32)
+        rbf_at_cell_centers(pts)
+        kriging_at_cell_centers(pts)

@@ -2,6 +2,9 @@
 runs the 2M-doc paragraph_dedup once on whatever master spark-submit gives
 us, then dumps per-stage wall / shuffle / GC metrics from the driver's REST
 API so the slow stage is identifiable.  Not part of the bench surface.
+It keeps pyspark's own Python worker daemon, not get_spark's
+``worker_daemon``: on a cluster the daemon starts before any ``pyFiles``
+arrive, so the engine package is not importable there yet.
 """
 from __future__ import annotations
 

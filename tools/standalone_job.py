@@ -14,7 +14,9 @@ and prints ONE line ``WGS_RESULT {...json...}`` for the orchestrator.
 
 Master / executor topology comes from spark-submit; the SQL confs are
 session.SQL_CONF, the ones get_spark uses, so wall times are comparable with
-the local[*] bench.
+the local[*] bench.  Unlike get_spark, it keeps pyspark's own Python worker
+daemon: on a cluster the daemon starts before any ``pyFiles`` arrive, so the
+engine's ``worker_daemon`` module could not be imported there.
 """
 
 from __future__ import annotations

@@ -90,7 +90,7 @@ def clump(cells: DataFrame, cols: int, *, connectivity: int = 4,
         (F.col("col") / tile).cast("long").alias("_tc"),
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         tr, tc = int(key[0]), int(key[1])
         r0, c0 = tr * tile, tc * tile
         rr = pdf["row"].to_numpy(np.int64) - r0
@@ -210,7 +210,7 @@ def components_from_edges(nodes, edges, *, idmul: int = 1_000_000,
     e_in = e.where((F.col("_tr") == F.col("_ntr")) & (F.col("_tc") == F.col("_ntc"))).drop("_ntr", "_ntc")
     e_cross = e.where((F.col("_tr") != F.col("_ntr")) | (F.col("_tc") != F.col("_ntc")))
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         node_rows = pdf[pdf["nr"].isna()]
         ids = (node_rows["row"].to_numpy(np.int64) * idmul
                + node_rows["col"].to_numpy(np.int64))

@@ -90,7 +90,7 @@ def _group_kernel(group_cell: int, is_max: bool):
     its in-group chain exits the group, with accumulated chain weight)."""
     g = group_cell
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         kind = pdf["kind"].to_numpy()
         nodes = (
             pdf[kind == 1].groupby(["x_row", "x_col"])["val"]

@@ -61,7 +61,7 @@ def cost_distance(cells: DataFrame, *, tile: int = 256,
     schema = ("row long, col long, cost double, cdist double, alloc long, "
               "changed int, _tr long, _tc long")
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         tr, tc = int(key[0]), int(key[1])
         r0, c0 = tr * tile, tc * tile
         own_mask = ~pdf["is_ext"].to_numpy()

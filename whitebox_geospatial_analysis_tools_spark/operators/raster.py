@@ -185,17 +185,29 @@ _STRIPS = [
 ]
 
 
+def by_tile(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` hash-partitioned on its tile ``keys`` into the session's
+    ``spark.sql.shuffle.partitions``.  AQE never coalesces a repartition
+    with an explicit count, so a tile stage gets one Python task per
+    partition instead of one for the whole (small) shuffle, and a
+    ``groupBy(*keys)`` above it adds no Exchange."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys)
+
+
 def _halo_contributions(tiles: DataFrame) -> DataFrame:
     """Each tile contributes to its own group (full array) and its 8
     neighbors' groups (1-cell border strips) — the Spark analogue of the
     reference's block cache reading across block borders
-    (WhiteboxRaster.java:483-553), shipping only what a 3x3 window reads."""
+    (WhiteboxRaster.java:483-553), shipping only what a 3x3 window reads.
+    The rows come back already partitioned by (dst_row, dst_col)
+    (by_tile), which the callers' ``groupBy`` reuses."""
     structs = ", ".join(
         f"struct(CAST({ddr} AS INT) AS ddr, CAST({ddc} AS INT) AS ddc, "
         f"{strip} AS strip, CAST({sh} AS INT) AS sh, CAST({sw} AS INT) AS sw)"
         for ddr, ddc, strip, sh, sw in _STRIPS
     )
-    return (
+    contrib = (
         tiles.select(
             "tile_row", "tile_col", "row0", "col0", "h", "w",
             F.explode(F.expr(f"array({structs})")).alias("_s"),
@@ -210,6 +222,7 @@ def _halo_contributions(tiles: DataFrame) -> DataFrame:
             "row0", "col0", "h", "w",
         )
     )
+    return by_tile(contrib, "dst_row", "dst_col")
 
 
 def _assemble_pad(pdf: pd.DataFrame):
@@ -264,7 +277,7 @@ def focal(tiles: DataFrame, stat: str, *, cell_size: float = 1.0) -> DataFrame:
     """
     schema = "tile_row long, tile_col long, row0 long, col0 long, h int, w int, values array<double>"
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         trow, tcol = int(key[0]), int(key[1])
         asm = _assemble_pad(pdf)
         if asm is None:  # halo spill-over past the grid edge: no output tile

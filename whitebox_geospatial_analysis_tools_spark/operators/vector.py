@@ -182,9 +182,8 @@ def hull_boundary_candidates(v: DataFrame) -> DataFrame:
     point has feature vertices strictly on both sides of every line
     through it).  Equivalence with the unfiltered test is pytest-asserted
     (tests/test_hull_prefilter.py)."""
-    import pandas as pd
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         boundary = _weak_hull_coords(pdf["x"], pdf["y"])
         mask = [(x, y) in boundary
                 for x, y in zip(pdf["x"], pdf["y"])]

@@ -95,7 +95,7 @@ def trace_rings(lab: DataFrame) -> DataFrame:
     its cell count exactly."""
     segs = boundary_segments(lab)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         label = int(key[0])
         # outgoing edge map: start corner -> list of (end corner)
         outs: dict[tuple[int, int], list[tuple[int, int]]] = {}

@@ -89,7 +89,7 @@ def rbf_at_cell_centers(df: DataFrame, *, k: int = 6, c2: float = 16.0) -> DataF
         pts, F.col("nbr_tile_id") == F.col("p_tile"), "inner"
     ).select("tile_id", "cx", "cy", "p_id", "p_lon", "p_lat", "p_val")
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         tid = int(key[0])
         cx, cy = float(pdf["cx"].iloc[0]), float(pdf["cy"].iloc[0])
         px = pdf["p_lon"].to_numpy()
@@ -340,7 +340,7 @@ def kriging_at_cell_centers(df: DataFrame, *, k: int = 6, vrange: float = 12.0,
         pts, F.col("nbr_tile_id") == F.col("p_tile"), "inner"
     ).select("tile_id", "cx", "cy", "p_id", "p_lon", "p_lat", "p_val")
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         tid = int(key[0])
         cx, cy = float(pdf["cx"].iloc[0]), float(pdf["cy"].iloc[0])
         px = pdf["p_lon"].to_numpy()

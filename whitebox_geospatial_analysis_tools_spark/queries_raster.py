@@ -1060,7 +1060,7 @@ def q_horizon_angle(spark, sf):
 
     live = R.explode_cells(_demf(spark)).where(F.col("value") != _ND)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         pdf = pdf.sort_values("col")
         xs = pdf["col"].to_numpy(dtype="float64").tolist()
         zs = pdf["value"].to_numpy().tolist()
