@@ -78,6 +78,26 @@ def test_upslope_distributed(spark, ptr, monkeypatch):
     assert np.abs(want["up_len"].to_numpy() - got["up_len"].to_numpy()).max() <= 1e-6
 
 
+@pytest.mark.parametrize("op", ["fd8_accum", "mass_flux_dinf"])
+def test_mfd_accum_distributed(spark, monkeypatch, op):
+    """fd8_accum's two tiers (the driver's condensed border solve and the
+    tile-round exchange) agree exactly, plain and with the affine
+    mass-flux fields."""
+    tiles = R.synth_raster(spark, 96, 128)
+    if op == "fd8_accum":
+        run = lambda: hydro.fd8_accum(tiles, tile=32)  # noqa: E731
+    else:
+        fields = R.explode_cells(tiles).where(F.col("value") != R.NODATA).select(
+            "row", "col", F.lit(1.0).alias("load"),
+            (F.expr("CAST(8 + (row + col) % 8 AS DOUBLE)") / 16.0).alias("eff"),
+            (F.expr("CAST((row * 3 + col) % 4 AS DOUBLE)") / 8.0).alias("absorp"),
+        )
+        run = lambda: hydro.mass_flux_dinf(tiles, fields, tile=32)  # noqa: E731
+    want, got = _both(run, monkeypatch)
+    assert len(want) == len(got) > 0
+    assert want.equals(got)
+
+
 def test_stream_network_distributed(spark, ptr, monkeypatch):
     want, got = _both(
         lambda: hydro.stream_network(ptr, threshold=5, tile=16), monkeypatch,

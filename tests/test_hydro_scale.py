@@ -300,6 +300,24 @@ def test_flow_accum_plan_reads_cached_cells(spark):
     assert "Exchange" not in above
 
 
+def test_fd8_accum_plan_reads_cached_cells(spark):
+    """The executed plan of a noop write of fd8_accum's driver tier: its
+    output pass reads the persisted tiled weight cells, hash-partitioned by
+    tile as an explicit-count repartition, through an InMemoryTableScan
+    with no shuffle above it (the inflow table arrives by broadcast)."""
+    from whitebox_geospatial_analysis_tools_spark.operators.hydro import fd8_accum
+
+    plan = _noop_plan(spark, fd8_accum(R.synth_raster(spark, 96, 128), tile=32))
+    assert "InMemoryRelation" in plan
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert re.search(r"hashpartitioning\(_tr#\d+L, _tc#\d+L, " + n
+                     + r"\), REPARTITION_BY_NUM", plan)
+    above = plan[:plan.index("InMemoryRelation")]
+    assert above.count("FlatMapGroupsInPandas") == 1
+    assert above.index("InMemoryTableScan") > above.index("FlatMapGroupsInPandas")
+    assert not re.search(r"(?<!Broadcast)Exchange", above)
+
+
 def test_focal_groups_one_task_per_shuffle_partition(spark):
     """focal's FlatMapGroupsInPandas reads the halo rows hash-partitioned
     by (dst_row, dst_col) into the session's shuffle partitions as an

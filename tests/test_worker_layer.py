@@ -71,3 +71,29 @@ def test_tile_kernels_build_without_type_hint_warning(spark):
         clump(cells, 128, tile=32)
         rbf_at_cell_centers(pts)
         kriging_at_cell_centers(pts)
+
+
+def test_workers_import_package_from_any_directory(tmp_path):
+    """A driver started outside the repository, with the package only on
+    its own sys.path and no PYTHONPATH, still runs Python tasks: get_spark
+    puts the package root on the workers' path."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from whitebox_geospatial_analysis_tools_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "n = spark.range(3, numPartitions=1).mapInPandas(lambda it: it, 'id long').count()\n"
+        "spark.stop()\n"
+        "print('rows', n)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "rows 3" in proc.stdout

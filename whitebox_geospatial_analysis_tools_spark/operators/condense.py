@@ -23,8 +23,9 @@ the SAME solve runs distributed —
                    Shreve) + pred-chain pointer doubling for the main stem
                    (its driver tier is hydro.stream_network's).
   merge_labels     min-label closure of equivalence pairs: the one
-                   union-find over collected pairs, else hook + shortcut
-                   rounds (a Shiloach-Vishkin-style CC).
+                   union-find over collected pairs (min_label_roots, also
+                   hydro.stream_network's driver tier), else hook +
+                   shortcut rounds (a Shiloach-Vishkin-style CC).
 
 stream_network, fd8_accum and cost_pathway probe through the same guard.
 
@@ -454,14 +455,37 @@ def solve_links(links: DataFrame, dag: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # equivalence-pair min-label closure (clump boundary merge)
 # ---------------------------------------------------------------------------
+def min_label_roots(a: np.ndarray, b: np.ndarray, nodes: np.ndarray) -> np.ndarray:
+    """The min label of each of ``nodes``' components under the undirected
+    pairs (a[i], b[i]): one path-compressed union-find on the driver whose
+    roots are component minima.  A node in no pair keeps its own id."""
+    par: dict = {}
+
+    def find(x):
+        root = x
+        while par.get(root, root) != root:
+            root = par[root]
+        while par.get(x, x) != x:
+            par[x], x = root, par[x]
+        return root
+
+    for a_, b_ in zip(a.tolist(), b.tolist()):
+        ra, rb = find(a_), find(b_)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            par[rb] = ra  # min-value root => label = component min
+    return np.fromiter(map(find, nodes.tolist()), np.int64, nodes.size)
+
+
 def merge_labels(pairs: DataFrame) -> DataFrame:
     """pairs: (plabel, nplabel) undirected equivalences.  Returns (plabel,
     glabel) mapping every node appearing in a pair to the min label of its
     component.
 
-    The one union-find over collected pairs: a pair set within the guard is
-    one path-compressed union-find with min-label roots on the driver (the
-    pair frame is already candidate-sized, orders of magnitude below the
+    A pair set within the guard is solved on the driver by
+    min_label_roots, the one union-find over collected pairs (the pair
+    frame is already candidate-sized, orders of magnitude below the
     corpus), returned as a local table; past the guard, hook + shortcut
     rounds (Shiloach-Vishkin style) converge in O(log^2 component diameter)
     rounds over the pair-sized frame — the 100-TB path, soak-tested at 2 M
@@ -469,26 +493,10 @@ def merge_labels(pairs: DataFrame) -> DataFrame:
     spark = pairs.sparkSession
     head = collect_guarded(pairs)
     if head is not None:
-        par: dict = {}
-
-        def find(x):
-            root = x
-            while par.get(root, root) != root:
-                root = par[root]
-            while par.get(x, x) != x:
-                par[x], x = root, par[x]
-            return root
-
         av = head.iloc[:, 0].to_numpy(np.int64)
         bv = head.iloc[:, 1].to_numpy(np.int64)
-        for a_, b_ in zip(av.tolist(), bv.tolist()):
-            ra, rb = find(a_), find(b_)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                par[rb] = ra  # min-value root => glabel = component min
         nodes = np.unique(np.concatenate([av, bv]))
-        roots = np.fromiter(map(find, nodes.tolist()), np.int64, nodes.size)
+        roots = min_label_roots(av, bv, nodes)
         return spark.createDataFrame(pa.table({"plabel": nodes, "glabel": roots}))
     _scratch.release(spark, "merge_labels")
     edges = pairs.select(F.col("plabel").alias("a"), F.col("nplabel").alias("b"))

@@ -3,15 +3,14 @@
 grid, step cost = (cost(u) + cost(v)) / 2 * dist (diagonals sqrt(2)) — the
 reference's cell-to-cell cost model.
 
-Distributed formulation: the same iterative tile-local pattern as
-priority-flood filling (operators/hydro.py fill_depressions): sources start
-at 0, everything else +inf; each round ships 1-cell halo strips of the
-current estimates and re-runs a sequential Dijkstra per tile given those
-boundary values.  Estimates decrease monotonically to the global shortest
-path in O(tile-graph diameter) rounds; lineage cut per round with
-localCheckpoint.  Both engines accumulate each path's sum in path order, so
-values match the oracle's Jacobi relaxation bit-for-bit (round 6 guards the
-min over float-tied paths).
+Distributed formulation: raster.halo_rounds, the halo-round loop shared
+with priority-flood filling (operators/hydro.py fill_depressions): sources
+start at 0, everything else +inf; each round ships the 1-cell border halo
+of the current estimates and re-runs a sequential Dijkstra per tile given
+those boundary values.  Estimates decrease monotonically to the global
+shortest path in O(tile-graph diameter) rounds.  Both engines accumulate
+each path's sum in path order, so values match the oracle's Jacobi
+relaxation bit-for-bit (round 6 guards the min over float-tied paths).
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .condense import collect_guarded
+from .raster import halo_rounds
 
 _SQRT2 = 1.4142135623730951
 _OFFS8 = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
@@ -42,41 +42,21 @@ def cost_distance(cells: DataFrame, *, tile: int = 256,
     winning source (CostAllocation.java semantics); ties between sources at
     EXACTLY equal accumulated cost break to the smaller source id — the
     Dijkstra runs in the lexicographic (cost, source) min-semiring so the
-    label is deterministic and matches the oracle's struct-min relaxation."""
-    spark = cells.sparkSession
+    label is deterministic and matches the oracle's struct-min relaxation.
+    The tile-local Dijkstras iterate under raster.halo_rounds (module
+    docstring)."""
     state = cells.select(
         "row", "col", "cost",
         F.when(F.col("is_src"), F.lit(0.0)).otherwise(F.lit(INF)).alias("cdist"),
         F.when(
             F.col("is_src"), F.col("row") * F.lit(1_000_000) + F.col("col")
         ).otherwise(F.lit(int(_NOSRC))).alias("alloc"),
-        (F.col("row") / tile).cast("long").alias("_tr"),
-        (F.col("col") / tile).cast("long").alias("_tc"),
-    ).persist()
-    state.count()
-
-    offs_arr = F.array(*[
-        F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc")) for dr, dc in _OFFS8
-    ])
-    schema = ("row long, col long, cost double, cdist double, alloc long, "
-              "changed int, _tr long, _tc long")
+    )
 
     def kernel(key, pdf):
-        tr, tc = int(key[0]), int(key[1])
-        r0, c0 = tr * tile, tc * tile
+        r0, c0 = int(key[0]) * tile, int(key[1]) * tile
         own_mask = ~pdf["is_ext"].to_numpy()
         own = pdf[own_mask]
-        if own.empty:
-            return pd.DataFrame({
-                "row": pd.Series([], dtype="int64"),
-                "col": pd.Series([], dtype="int64"),
-                "cost": pd.Series([], dtype="float64"),
-                "cdist": pd.Series([], dtype="float64"),
-                "alloc": pd.Series([], dtype="int64"),
-                "changed": pd.Series([], dtype="int32"),
-                "_tr": pd.Series([], dtype="int64"),
-                "_tc": pd.Series([], dtype="int64"),
-            })
         lr = pdf["row"].to_numpy(np.int64) - r0 + 1
         lc = pdf["col"].to_numpy(np.int64) - c0 + 1
         H = W = tile + 2
@@ -111,54 +91,21 @@ def cost_distance(cells: DataFrame, *, tile: int = 256,
                         dist[nr, nc] = nd
                         srcl[nr, nc] = s
                         heapq.heappush(heap, (nd, s, nr, nc))
-        orr = own["row"].to_numpy(np.int64)
-        occ = own["col"].to_numpy(np.int64)
-        nf = dist[orr - r0 + 1, occ - c0 + 1]
-        ns = srcl[orr - r0 + 1, occ - c0 + 1]
-        chg = (
-            (nf < old[orr - r0 + 1, occ - c0 + 1])
-            | ((nf == old[orr - r0 + 1, occ - c0 + 1])
-               & (ns < olds[orr - r0 + 1, occ - c0 + 1]))
-        ).astype(np.int32)
+        orr = own["row"].to_numpy(np.int64) - r0 + 1
+        occ = own["col"].to_numpy(np.int64) - c0 + 1
+        nf, ns = dist[orr, occ], srcl[orr, occ]
+        chg = (nf < old[orr, occ]) | ((nf == old[orr, occ]) & (ns < olds[orr, occ]))
         return pd.DataFrame({
-            "row": orr, "col": occ,
+            "row": own["row"].to_numpy(np.int64), "col": own["col"].to_numpy(np.int64),
             "cost": own["cost"].to_numpy(np.float64),
-            "cdist": nf, "alloc": ns, "changed": chg,
-            "_tr": np.full(len(orr), tr, dtype=np.int64),
-            "_tc": np.full(len(orr), tc, dtype=np.int64),
+            "cdist": nf, "alloc": ns, "changed": chg.astype(np.int32),
         })
 
-    on_border = (
-        (F.col("row") % tile == 0) | (F.col("row") % tile == tile - 1)
-        | (F.col("col") % tile == 0) | (F.col("col") % tile == tile - 1)
+    state = halo_rounds(
+        state, kernel, "row long, col long, cost double, cdist double, "
+        "alloc long, changed int", tile=tile, max_rounds=max_rounds,
+        what="cost_distance",
     )
-    for _ in range(max_rounds):
-        own = state.drop("changed").withColumn("is_ext", F.lit(False))
-        halo = (
-            state.where(on_border)
-            .withColumn("_o", F.explode(offs_arr))
-            .withColumn("_ntr", ((F.col("row") + F.col("_o.dr")) / tile).cast("long"))
-            .withColumn("_ntc", ((F.col("col") + F.col("_o.dc")) / tile).cast("long"))
-            .where((F.col("_ntr") != F.col("_tr")) | (F.col("_ntc") != F.col("_tc")))
-            .select(
-                "row", "col", "cost", "cdist", "alloc",
-                F.col("_ntr").alias("_tr"), F.col("_ntc").alias("_tc"),
-                F.lit(True).alias("is_ext"),
-            )
-        )
-        new_state = (
-            own.unionByName(halo, allowMissingColumns=True)
-            .groupBy("_tr", "_tc")
-            .applyInPandas(kernel, schema)
-            .localCheckpoint()  # cut per-round lineage (fill_depressions lesson)
-        )
-        n_changed = new_state.agg(F.sum("changed")).collect()[0][0] or 0
-        state.unpersist()
-        state = new_state
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError("cost_distance did not converge; raise max_rounds")
     if alloc:
         return state.select("row", "col", "cdist", "alloc")
     return state.select("row", "col", "cdist")

@@ -195,6 +195,84 @@ def by_tile(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(n, *keys)
 
 
+def tile_key(tile: int, row, col) -> list:
+    """The (_tr, _tc) tile key columns of cell (row, col): the one place
+    the cell -> tile mapping is written."""
+    return [(row / tile).cast("long").alias("_tr"),
+            (col / tile).cast("long").alias("_tc")]
+
+
+def with_tiles(cells: DataFrame, tile: int) -> DataFrame:
+    """``cells`` (row, col, ...) with their tile key (_tr, _tc), partitioned
+    by it (by_tile): a tile pass over them groups with no Exchange."""
+    return by_tile(
+        cells.select("*", *tile_key(tile, F.col("row"), F.col("col"))), "_tr", "_tc"
+    )
+
+
+def halo_rounds(state: DataFrame, kernel, schema: str, *, tile: int,
+                max_rounds: int, what: str) -> DataFrame:
+    """Iterate tile-local solves over ``state`` (row, col and the value
+    columns) to their fixpoint, exchanging a 1-cell halo across tile
+    borders each round.
+
+    The state is keyed by tile (tile_key) and persisted, since round 1
+    reads it twice; it is partitioned only by each round's shuffle.  Each
+    round ships every tile-border cell's current row to the tiles of
+    its off-tile 8-neighbors (``is_ext`` true; an edge cell reaches the
+    tile across that edge once per neighbor there, up to three copies,
+    which a min-style relaxation ignores), unions it with the own
+    rows (``is_ext`` false), groups by tile (by_tile: one task per shuffle
+    partition) and calls ``kernel(key, pdf)`` once per tile holding own
+    cells.  The kernel returns its own cells with the state's value
+    columns (``schema``) and ``changed`` (1 where the estimate moved); the
+    tile key is added back here.  localCheckpoint cuts each round's
+    lineage (without it the plan nests every earlier round and the driver
+    heap grows without bound), and the loop stops at the first round that
+    changes nothing — O(tile-graph diameter) rounds for the monotone
+    relaxations that use it (fill_depressions, cost_distance)."""
+    offs = F.array(*[
+        F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
+        for dr, dc in _OFFS if (dr, dc) != (0, 0)
+    ])
+    on_border = (
+        (F.col("row") % tile == 0) | (F.col("row") % tile == tile - 1)
+        | (F.col("col") % tile == 0) | (F.col("col") % tile == tile - 1)
+    )
+    vals = state.columns
+    state = state.select("*", *tile_key(tile, F.col("row"), F.col("col"))).persist()
+    nkey = tile_key(tile, F.col("row") + F.col("_o.dr"), F.col("col") + F.col("_o.dc"))
+
+    def solve(key, pdf):
+        if pdf["is_ext"].all():  # halo spilled onto a tile with no cells
+            return pd.DataFrame()
+        out = kernel(key, pdf)
+        out["_tr"], out["_tc"] = key
+        return out
+
+    for _ in range(max_rounds):
+        own = state.select(*vals, "_tr", "_tc", F.lit(False).alias("is_ext"))
+        halo = (
+            state.where(on_border)
+            .select(*vals, "_tr", "_tc", F.explode(offs).alias("_o"))
+            .select(*vals, F.col("_tr").alias("_otr"), F.col("_tc").alias("_otc"), *nkey)
+            .where((F.col("_tr") != F.col("_otr")) | (F.col("_tc") != F.col("_otc")))
+            .select(*vals, "_tr", "_tc", F.lit(True).alias("is_ext"))
+        )
+        new_state = (
+            by_tile(own.unionByName(halo), "_tr", "_tc")
+            .groupBy("_tr", "_tc")
+            .applyInPandas(solve, f"{schema}, _tr long, _tc long")
+            .localCheckpoint()
+        )
+        n_changed = new_state.agg(F.sum("changed")).collect()[0][0] or 0
+        state.unpersist()
+        state = new_state
+        if n_changed == 0:
+            return state
+    raise RuntimeError(f"{what} did not converge; raise max_rounds")
+
+
 def _halo_contributions(tiles: DataFrame) -> DataFrame:
     """Each tile contributes to its own group (full array) and its 8
     neighbors' groups (1-cell border strips) — the Spark analogue of the

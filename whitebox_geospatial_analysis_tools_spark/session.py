@@ -3,7 +3,10 @@
 Sessions from get_spark run their Python workers under the engine's daemon
 (``worker_daemon``): pyspark's worker re-reads the directory of every zip
 archive on its path at the start of each task, about 0.25 s per task on a
-4-CPU host, and the daemon turns that re-read off.
+4-CPU host, and the daemon turns that re-read off.  The workers find the
+daemon (and the kernels' imports) through the package root, which
+get_spark puts on their PYTHONPATH, so the driver may run from any
+working directory.
 """
 
 from __future__ import annotations
@@ -13,6 +16,9 @@ import time
 from typing import Callable
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package, put on every Python worker's path
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # The engine's SQL confs: every session it builds starts from this dict
 # (get_spark, tools/standalone_job.py, tools/standalone_diag.py) and
@@ -56,10 +62,12 @@ def get_spark(app: str = "wgs-engine", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """The engine's session: SQL_CONF, ``shuffle_partitions`` (default
     cpus()) and ``worker_daemon`` as the Python daemon module, so tasks skip
-    the per-task zip re-read (about 0.25 s each; module docstring).  Python
-    workers must be able to import this package, which the kernels need
-    anyway."""
+    the per-task zip re-read (about 0.25 s each; module docstring).  The
+    workers' PYTHONPATH starts with the package root, followed by any
+    PYTHONPATH of the environment, so they import the package whatever the
+    driver's working directory."""
     master = master or f"local[{cpus()}]"
+    pypath = os.pathsep.join(filter(None, [_PKG_ROOT, os.environ.get("PYTHONPATH")]))
     b = (
         SparkSession.builder.appName(app)
         .master(master)
@@ -69,5 +77,6 @@ def get_spark(app: str = "wgs-engine", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module",
                 "whitebox_geospatial_analysis_tools_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", pypath)
     )
     return b.getOrCreate()
