@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from whitebox_geospatial_analysis_tools_spark.operators import _scratch
 from whitebox_geospatial_analysis_tools_spark.operators import clump as clump_mod
 from whitebox_geospatial_analysis_tools_spark.operators import condense
 from whitebox_geospatial_analysis_tools_spark.operators import hydro
@@ -130,6 +131,25 @@ def test_stream_network_tier2(spark, monkeypatch):
         assert want.equals(got)
     finally:
         ptr.unpersist()
+
+
+def test_stream_operators_persist_each_frame_once(spark):
+    """strahler_basins' composition: subbasins then stream_network on one
+    unpersisted pointer frame.  The frames subbasins persists (the pointers
+    and the plan-equal stream cells) are not tracked again under
+    stream_network's tag, where releasing either tag would drop the one
+    cache entry the other still counts."""
+    # a shape of its own: the module's ptr fixture is cached already
+    ptr = hydro.flow_pointer_d8(R.synth_raster(spark, 64, 96))
+    hydro.subbasins(ptr, 5, tile=16)
+    hydro.stream_network(ptr, 5, tile=16)
+    app = spark.sparkContext.applicationId
+    sub = _scratch._SCRATCH.get((app, "subbasins"), [])
+    net = _scratch._SCRATCH.get((app, "streamnet"), [])
+    assert len(sub) == 2
+    assert not any(a.sameSemantics(b) for a in sub for b in net)
+    _scratch.release(spark, "subbasins")
+    _scratch.release(spark, "streamnet")
 
 
 _FWD = "row long, col long, t_row long, t_col long, w double, p_row long, p_col long"

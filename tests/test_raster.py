@@ -5,6 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from whitebox_geospatial_analysis_tools_spark.operators import hydro as H
 from whitebox_geospatial_analysis_tools_spark.operators import raster as R
 
 ROWS, COLS = 70, 90  # spans multiple 64-tiles in both axes incl. partials
@@ -77,20 +78,32 @@ def test_downsample_vs_pandas(spark, dem_grid):
     assert np.allclose(m["mean_val"], m["mean"].round(6))
 
 
-def test_focal_invariant_to_tile_size(spark):
-    """Halo-exchange correctness: focal results must not depend on the tile
-    decomposition (tile=16 vs 64 vs 128 covers interior/edge/corner halos)."""
+STENCILS = {
+    "focal_mean": lambda t: R.explode_cells(R.focal(t, "mean")),
+    "focal_slope": lambda t: R.explode_cells(R.focal(t, "slope")),
+    "focal_majority": lambda t: R.explode_cells(R.focal(t, "majority")),
+    **{name: getattr(H, name) for name in (
+        "flow_pointer_d8", "flow_pointer_rho8", "fd8_weights", "mdinf_weights",
+        "flow_pointer_dinf",
+    )},
+}
+
+
+@pytest.mark.parametrize("case", list(STENCILS))
+def test_focal_invariant_to_tile_size(spark, case):
+    """Halo-exchange correctness: no 3x3 stencil kernel's output depends
+    on the tile decomposition (tile=16 vs 64 vs 128 covers interior/edge/
+    corner halos) — bit-identical, array columns included."""
     outs = []
     for tile in (16, 64, 128):
-        tiles = R.synth_raster(spark, 70, 90, tile=tile)
-        pdf = R.explode_cells(R.focal(tiles, "mean")).toPandas()
+        pdf = STENCILS[case](R.synth_raster(spark, 70, 90, tile=tile)).toPandas()
         outs.append(pdf.sort_values(["row", "col"]).reset_index(drop=True))
     for other in outs[1:]:
-        assert len(outs[0]) == len(other)
-        assert (outs[0]["row"] == other["row"]).all()
-        assert (outs[0]["col"] == other["col"]).all()
-        a, b = outs[0]["value"].to_numpy(), other["value"].to_numpy()
-        assert np.array_equal(a, b)
+        assert list(outs[0].columns) == list(other.columns)
+        assert len(outs[0]) == len(other) > 0
+        for c in outs[0].columns:
+            a, b = np.array(outs[0][c].tolist()), np.array(other[c].tolist())
+            assert np.array_equal(a, b), c
 
 
 def test_flow_accum_invariant_to_tile_size(spark):

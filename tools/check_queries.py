@@ -1,6 +1,10 @@
 """Driver-style correctness checker: run each registered Spark query and its
-DuckDB oracle at a given sf, compare row count + dtypes + sorted values."""
-import os, sys, time, math
+DuckDB oracle at a given sf, compare row count + dtypes + sorted values.
+
+Every line carries ``sha1=``: the first 12 hex digits of the SHA-1 of the
+normalized Spark output (output_hash), so two trees' runs can be compared
+line by line."""
+import hashlib, os, sys, time, math
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
@@ -21,6 +25,13 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype("float64")
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
+
+
+def output_hash(df: pd.DataFrame) -> str:
+    """SHA-1 (12 hex) of the normalized frame: independent of row and
+    column order, changed by any one value."""
+    h = pd.util.hash_pandas_object(normalize(df), index=False)
+    return hashlib.sha1(h.to_numpy().tobytes()).hexdigest()[:12]
 
 
 def compare(a: pd.DataFrame, b: pd.DataFrame) -> str:
@@ -76,8 +87,9 @@ def main():
             fails += 1
             continue
         t1 = time.time()
+        sha = output_hash(sdf)
         if name not in os_:
-            print(f"{name:24s} rows={len(sdf):7d}  (no oracle)  spark={t1-t0:5.1f}s")
+            print(f"{name:24s} rows={len(sdf):7d} sha1={sha}  (no oracle)  spark={t1-t0:5.1f}s")
             continue
         try:
             odf = con.sql(os_[name]).df()
@@ -96,7 +108,7 @@ def main():
         status = "OK " if verdict == "OK" else "FAIL"
         if verdict != "OK":
             fails += 1
-        print(f"{name:24s} {status} rows={len(sdf):7d} spark={t1-t0:5.1f}s duck={time.time()-t1:4.1f}s"
+        print(f"{name:24s} {status} rows={len(sdf):7d} sha1={sha} spark={t1-t0:5.1f}s duck={time.time()-t1:4.1f}s"
               + ("" if verdict == "OK" else f"  -> {verdict}"))
     spark.stop()
     sys.exit(1 if fails else 0)

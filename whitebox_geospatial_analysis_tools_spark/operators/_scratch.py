@@ -14,6 +14,7 @@ stop()+restart cycle in one process cannot alias entries.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 _SCRATCH: dict[tuple[str, str], list[DataFrame]] = {}
@@ -23,6 +24,17 @@ def track(spark: SparkSession, df: DataFrame, tag: str = "default") -> DataFrame
     """Register a persisted DataFrame for deferred release under `tag`."""
     _SCRATCH.setdefault((spark.sparkContext.applicationId, tag), []).append(df)
     return df
+
+
+def persist(spark: SparkSession, df: DataFrame, tag: str = "default") -> DataFrame:
+    """``df.persist()`` tracked under `tag` — unless plan-equal data is
+    already cached (``df.storageLevel`` is not NONE; say, an operator
+    composed before this one persisted the same input): then `df` comes
+    back untracked, since Spark keeps ONE cache entry per plan and
+    releasing this tag would drop the entry another tag still counts."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    return track(spark, df.persist(), tag)
 
 
 def release(spark: SparkSession, tag: str = "default") -> None:

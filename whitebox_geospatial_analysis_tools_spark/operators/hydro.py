@@ -49,6 +49,11 @@ transitive-closure doubling of round 1 — VERDICT wrong-list #1):
   (_d8_accum) over the one tile kernel (_tile_flow_kernel); watershed
   and flowpath_length run that kernel once with every per-cell row.
 
+The 3x3 pointer and weight kernels (flow_pointer_d8, flow_pointer_rho8,
+flow_pointer_dinf, fd8_weights, mdinf_weights) run on raster.stencil, the
+one halo pass over a tile table; each holds only its window arithmetic
+and emits its cells with raster.cell_rows.
+
 Every tile pass here keys its cells with raster.tile_key, almost always
 through raster.with_tiles (keyed and partitioned by tile);
 breach_depressions partitions its own+halo union once instead.  The
@@ -80,8 +85,7 @@ from .condense import (
     solve_links,
 )
 from .raster import (
-    NODATA, _assemble_pad, _halo_contributions, by_tile, halo_rounds, tile_key,
-    with_tiles,
+    _OFFS, NODATA, by_tile, cell_rows, halo_rounds, stencil, tile_key, with_tiles,
 )
 
 _SQRT2 = 1.4142135623730951
@@ -94,46 +98,46 @@ D8_OFFS = [
 _D8_DR = np.array([o[0] for o in D8_OFFS], dtype=np.int64)
 _D8_DC = np.array([o[1] for o in D8_OFFS], dtype=np.int64)
 
+
+def _d8_step():
+    """(dr, dc, step) columns of the D8 direction code ``code`` = 2^j
+    (D8_OFFS order; step 1 or sqrt(2)).  Defined for code > 0 only, which
+    every caller filters or guards on first."""
+    j = F.log2(F.col("code")).cast("int") + 1
+    return tuple(F.element_at(F.array(*map(F.lit, v)), j) for v in zip(*D8_OFFS))
+
 TILE = 256
+
+
+_POINTER_SCHEMA = "row long, col long, code long"
+
+
+def _steepest_d8(c, pad, diag):
+    """Stencil body of the D8-style pointers: code = 2^j toward the
+    steepest positive drop rate (strict >: the first maximum in D8_OFFS
+    order wins ties), 0 for pits/flats, nodata cells omitted.  Cardinal
+    drops divide by 1, diagonal ones by ``diag``."""
+    h, w = int(c.h), int(c.w)
+    centerv = pad[1:h + 1, 1:w + 1]
+    best_rate = np.full((h, w), 0.0)
+    best_j = np.full((h, w), -1)
+    for j, (dr, dc, dist) in enumerate(D8_OFFS):
+        nb = pad[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
+        with np.errstate(invalid="ignore"):
+            rate = (centerv - nb) / (1.0 if dist == 1.0 else diag)
+        rate = np.where(np.isnan(rate), -np.inf, rate)
+        take = rate > best_rate
+        best_rate = np.where(take, rate, best_rate)
+        best_j = np.where(take, j, best_j)
+    code = np.where(best_j >= 0, 2 ** np.maximum(best_j, 0), 0)
+    return cell_rows(c, ~np.isnan(centerv), code=code)
 
 
 def flow_pointer_d8(tiles: DataFrame) -> DataFrame:
     """(row, col, code): code = 2^j toward the steepest positive drop-rate
     neighbor, 0 for pits/flats, nodata cells omitted."""
-    schema = "row long, col long, code long"
-
-    def kernel(key, pdf):
-        asm = _assemble_pad(pdf)
-        if asm is None:
-            return pd.DataFrame({
-                "row": pd.Series([], dtype="int64"),
-                "col": pd.Series([], dtype="int64"),
-                "code": pd.Series([], dtype="int64"),
-            })
-        c, pad = asm
-        h, w = int(c.h), int(c.w)
-        centerv = pad[1:h + 1, 1:w + 1]
-        best_rate = np.full((h, w), 0.0)
-        best_j = np.full((h, w), -1)
-        for j, (dr, dc, dist) in enumerate(D8_OFFS):
-            nb = pad[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
-            with np.errstate(invalid="ignore"):
-                rate = (centerv - nb) / dist
-            rate = np.where(np.isnan(rate), -np.inf, rate)
-            take = rate > best_rate  # strict >: first max in order wins ties
-            best_rate = np.where(take, rate, best_rate)
-            best_j = np.where(take, j, best_j)
-        code = np.where(best_j >= 0, 2 ** np.maximum(best_j, 0), 0)
-        valid = ~np.isnan(centerv)
-        rows, cols_ = np.nonzero(valid)
-        return pd.DataFrame({
-            "row": int(c.row0) + rows,
-            "col": int(c.col0) + cols_,
-            "code": code[rows, cols_].astype(np.int64),
-        })
-
-    contrib = _halo_contributions(tiles)
-    return contrib.groupBy("dst_row", "dst_col").applyInPandas(kernel, schema)
+    return stencil(tiles, lambda c, pad: _steepest_d8(c, pad, _SQRT2),
+                   _POINTER_SCHEMA)
 
 
 RHO8_A, RHO8_C, RHO8_M = 2654435761, 987654321, 2147483648
@@ -145,45 +149,14 @@ def flow_pointer_rho8(tiles: DataFrame) -> DataFrame:
     instead of sqrt(2), breaking the D8 grid bias.  The reference draws rho
     uniform at random; here rho is a deterministic per-cell LCG value
     (shared with the SQL oracle), the engine's standard determinization."""
-    schema = "row long, col long, code long"
 
-    def kernel(key, pdf):
-        asm = _assemble_pad(pdf)
-        if asm is None:
-            return pd.DataFrame({
-                "row": pd.Series([], dtype="int64"),
-                "col": pd.Series([], dtype="int64"),
-                "code": pd.Series([], dtype="int64"),
-            })
-        c, pad = asm
-        h, w = int(c.h), int(c.w)
-        centerv = pad[1:h + 1, 1:w + 1]
-        gr = int(c.row0) + np.arange(h, dtype=np.int64)[:, None]
-        gc = int(c.col0) + np.arange(w, dtype=np.int64)[None, :]
+    def kernel(c, pad):
+        gr = int(c.row0) + np.arange(int(c.h), dtype=np.int64)[:, None]
+        gc = int(c.col0) + np.arange(int(c.w), dtype=np.int64)[None, :]
         u = ((gr * 1_000_003 + gc) * RHO8_A + RHO8_C) % RHO8_M
-        rho = u.astype(np.float64) / RHO8_M
-        best_rate = np.full((h, w), 0.0)
-        best_j = np.full((h, w), -1)
-        for j, (dr, dc, dist) in enumerate(D8_OFFS):
-            nb = pad[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
-            div = (2.0 - rho) if dist != 1.0 else 1.0
-            with np.errstate(invalid="ignore"):
-                rate = (centerv - nb) / div
-            rate = np.where(np.isnan(rate), -np.inf, rate)
-            take = rate > best_rate
-            best_rate = np.where(take, rate, best_rate)
-            best_j = np.where(take, j, best_j)
-        code = np.where(best_j >= 0, 2 ** np.maximum(best_j, 0), 0)
-        valid = ~np.isnan(centerv)
-        rows, cols_ = np.nonzero(valid)
-        return pd.DataFrame({
-            "row": int(c.row0) + rows,
-            "col": int(c.col0) + cols_,
-            "code": code[rows, cols_].astype(np.int64),
-        })
+        return _steepest_d8(c, pad, 2.0 - u.astype(np.float64) / RHO8_M)
 
-    contrib = _halo_contributions(tiles)
-    return contrib.groupBy("dst_row", "dst_col").applyInPandas(kernel, schema)
+    return stencil(tiles, kernel, _POINTER_SCHEMA)
 
 
 def snap_pour_points(pour: DataFrame, acc: DataFrame, *, radius: int = 3) -> DataFrame:
@@ -226,30 +199,8 @@ def stream_link_slope(pointers: DataFrame, dem_cells: DataFrame,
     dem_cells: (row, col, v).  Returns (link, link_slope)."""
     from .clump import components_from_edges
 
-    spark = pointers.sparkSession
-    _scratch.release(spark, "linkslope")
-    pointers = _scratch.track(spark, pointers.persist(), "linkslope")
-    acc = flow_accum(pointers, tile=tile)
-    stream = _scratch.track(
-        spark,
-        acc.where(F.col("accum") >= threshold).select("row", "col").persist(),
-        "linkslope",
-    )
-    dr = F.expr("element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)")
-    dc = F.expr("element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)")
-    sd = (
-        stream.join(pointers, ["row", "col"], "inner")
-        .where(F.col("code") > 0)
-        .select("row", "col",
-                (F.col("row") + dr).alias("nr"), (F.col("col") + dc).alias("nc"))
-    )
-    st_t = stream.select(F.col("row").alias("nr"), F.col("col").alias("nc"))
-    sedge = sd.join(st_t, ["nr", "nc"], "left_semi")
-    junc = (
-        sedge.groupBy("nr", "nc").agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") >= 2).select("nr", "nc")
-    )
-    kept = sedge.join(junc, ["nr", "nc"], "left_anti")
+    pointers, stream = _stream_cells(pointers, threshold, tile, "linkslope")
+    _sedge, _junc, kept = _stream_edge_tables(pointers, stream)
     lab = components_from_edges(stream, kept, tile=tile)
     dist = F.when((F.col("row") != F.col("nr")) & (F.col("col") != F.col("nc")),
                   F.lit(_SQRT2)).otherwise(F.lit(1.0))
@@ -722,11 +673,24 @@ def fill_depressions(cells: DataFrame, rows: int, cols: int, *,
 # ---------------------------------------------------------------------------
 # subbasins / hillslopes (Subbasins.java:389, Hillslopes.java:525)
 # ---------------------------------------------------------------------------
+def _stream_cells(pointers: DataFrame, threshold: int, tile: int, tag: str):
+    """(pointers, stream): the pointer frame and its stream cells (flow
+    accumulation >= threshold), each persisted under ``tag`` unless
+    plan-equal data is already cached (_scratch.persist).  The pointers
+    feed flow_accum (2 kernel passes), the stream-edge build and the
+    labeling; without the stream cache every driver action of the link
+    operators would recompute the pointer + accumulation lineage."""
+    spark = pointers.sparkSession
+    _scratch.release(spark, tag)
+    pointers = _scratch.persist(spark, pointers, tag)
+    stream = flow_accum(pointers, tile=tile).where(F.col("accum") >= threshold)
+    return pointers, _scratch.persist(spark, stream.select("row", "col"), tag)
+
+
 def _stream_edge_tables(pointers: DataFrame, stream: DataFrame):
     """(sedge, junc, kept): stream flow edges, junction targets, and the
     junction-cut edge set — shared by the link-labeling family."""
-    dr = F.expr("element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)")
-    dc = F.expr("element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)")
+    dr, dc, _ = _d8_step()
     sd = (
         stream.join(pointers, ["row", "col"], "inner")
         .where(F.col("code") > 0)
@@ -753,15 +717,7 @@ def subbasins(pointers: DataFrame, threshold: int = 5, *,
     terminate at first stream contact), then a terminal -> link-label join."""
     from .clump import components_from_edges
 
-    spark = pointers.sparkSession
-    _scratch.release(spark, "subbasins")
-    pointers = _scratch.track(spark, pointers.persist(), "subbasins")
-    acc = flow_accum(pointers, tile=tile)
-    stream = _scratch.track(
-        spark,
-        acc.where(F.col("accum") >= threshold).select("row", "col").persist(),
-        "subbasins",
-    )
+    pointers, stream = _stream_cells(pointers, threshold, tile, "subbasins")
     _sedge, _junc, kept = _stream_edge_tables(pointers, stream)
     lab = components_from_edges(stream, kept, tile=tile)
     ws = watershed(pointers, tile=tile, stops=stream)
@@ -789,10 +745,9 @@ def isobasin(pointers: DataFrame, target: int, *, tile: int = TILE) -> DataFrame
     tile-kernel machinery, no new iteration."""
     spark = pointers.sparkSession
     _scratch.release(spark, "isobasin")
-    pointers = _scratch.track(spark, pointers.persist(), "isobasin")
+    pointers = _scratch.persist(spark, pointers, "isobasin")
     acc = flow_accum(pointers, tile=tile)
-    dr = F.expr("element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)")
-    dc = F.expr("element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)")
+    dr, dc, _ = _d8_step()
     edges = pointers.where(F.col("code") > 0).select(
         "row", "col",
         (F.col("row") + dr).alias("nr"), (F.col("col") + dc).alias("nc"),
@@ -838,20 +793,11 @@ def hillslopes(pointers: DataFrame, threshold: int = 5, *,
     (link, side) broadcast back over its catch."""
     from .clump import components_from_edges
 
-    spark = pointers.sparkSession
-    _scratch.release(spark, "hillslopes")
-    pointers = _scratch.track(spark, pointers.persist(), "hillslopes")
-    acc = flow_accum(pointers, tile=tile)
-    stream = _scratch.track(
-        spark,
-        acc.where(F.col("accum") >= threshold).select("row", "col").persist(),
-        "hillslopes",
-    )
+    pointers, stream = _stream_cells(pointers, threshold, tile, "hillslopes")
     _sedge, _junc, kept = _stream_edge_tables(pointers, stream)
     lab = components_from_edges(stream, kept, tile=tile)
 
-    dr = F.expr("element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)")
-    dc = F.expr("element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)")
+    dr, dc, _ = _d8_step()
     ptr_t = pointers.select(
         "row", "col",
         F.when(F.col("code") > 0, F.col("row") + dr).otherwise(F.lit(None)).alias("nr"),
@@ -1206,29 +1152,8 @@ def stream_network(pointers: DataFrame, threshold: int = 5, *,
     from .clump import components_from_edges
 
     spark = pointers.sparkSession
-    _scratch.release(spark, "streamnet")
-    # the pointer raster feeds flow_accum (2 kernel passes), the stream-edge
-    # build, and several condensed-graph collects — persist it once
-    pointers = _scratch.track(spark, pointers.persist(), "streamnet")
-    acc = flow_accum(pointers, tile=tile)
-    # persist the small stream tables: stream_network issues several driver
-    # actions (condensed-graph collects), and without these caches each one
-    # would recompute the full pointer + accumulation lineage
-    stream = _scratch.track(
-        spark,
-        acc.where(F.col("accum") >= threshold).select("row", "col").persist(),
-        "streamnet",
-    )
-    dr = F.expr("element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)")
-    dc = F.expr("element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)")
-    sd = (
-        stream.join(pointers, ["row", "col"], "inner")
-        .where(F.col("code") > 0)
-        .select("row", "col",
-                (F.col("row") + dr).alias("nr"), (F.col("col") + dc).alias("nc"))
-    )
-    st_t = stream.select(F.col("row").alias("nr"), F.col("col").alias("nc"))
-    sedge = sd.join(st_t, ["nr", "nc"], "left_semi")
+    pointers, stream = _stream_cells(pointers, threshold, tile, "streamnet")
+    sedge, junc, kept = _stream_edge_tables(pointers, stream)
 
     # tier 1: the stream table itself is condensed relative to the raster
     # (a threshold-selected fraction); when it fits the driver guard, ONE
@@ -1244,12 +1169,9 @@ def stream_network(pointers: DataFrame, threshold: int = 5, *,
 
     # tier 2/3: distributed link labeling (tile union-find CC); link tables
     # solved on the driver under guard, else via condense.solve_links
-    sedge = _scratch.track(spark, sedge.persist(), "streamnet")
-    junc = (
-        sedge.groupBy("nr", "nc").agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") >= 2).select("nr", "nc")
-    )
-    kept = sedge.join(junc, ["nr", "nc"], "left_anti")
+    # kept and cut read the persisted sedge: the cache is matched by plan
+    # when they execute
+    _scratch.track(spark, sedge.persist(), "streamnet")
     cut = sedge.join(junc, ["nr", "nc"], "left_semi")
 
     lab = components_from_edges(stream, kept, tile=tile)
@@ -1325,23 +1247,17 @@ def stream_network(pointers: DataFrame, threshold: int = 5, *,
 # ---------------------------------------------------------------------------
 # FD8 multiple-flow-direction accumulation
 # ---------------------------------------------------------------------------
+_WS_SCHEMA = "row long, col long, ws array<double>"
+
+
 def fd8_weights(tiles: DataFrame) -> DataFrame:
     """(row, col, ws array<double>[8]): FD8 outflow fractions per D8
     neighbor — positive downslope gradients normalized to sum 1 (Freeman
     1991 with p=1; HydroTools/src/plugins/FlowAccumFD8.java semantics).
     One halo-strip stencil pass; cells with no downslope neighbor (pits)
     get all-zero weights."""
-    schema = "row long, col long, ws array<double>"
 
-    def kernel(key, pdf):
-        asm = _assemble_pad(pdf)
-        if asm is None:
-            return pd.DataFrame({
-                "row": pd.Series([], dtype="int64"),
-                "col": pd.Series([], dtype="int64"),
-                "ws": pd.Series([], dtype=object),
-            })
-        c, pad = asm
+    def kernel(c, pad):
         h, w = int(c.h), int(c.w)
         centerv = pad[1:h + 1, 1:w + 1]
         s = np.zeros((8, h, w))
@@ -1353,16 +1269,9 @@ def fd8_weights(tiles: DataFrame) -> DataFrame:
         tot = s.sum(axis=0)
         with np.errstate(invalid="ignore", divide="ignore"):
             ws = np.where(tot > 0.0, s / tot, 0.0)
-        valid = ~np.isnan(centerv)
-        rr, cc = np.nonzero(valid)
-        return pd.DataFrame({
-            "row": int(c.row0) + rr,
-            "col": int(c.col0) + cc,
-            "ws": [ws[:, r, q].tolist() for r, q in zip(rr, cc)],
-        })
+        return cell_rows(c, ~np.isnan(centerv), ws=ws)
 
-    contrib = _halo_contributions(tiles)
-    return contrib.groupBy("dst_row", "dst_col").applyInPandas(kernel, schema)
+    return stencil(tiles, kernel, _WS_SCHEMA)
 
 
 # sector s of the D-infinity angle (counter-clockwise from east, 45-degree
@@ -1410,64 +1319,27 @@ def mdinf_weights(tiles: DataFrame) -> DataFrame:
     between its two bounding directions by the within-facet angle; direction
     weights normalize by the facet-slope total.  Full 3x3 support, like the
     D-infinity pointer."""
-    schema = "row long, col long, ws array<double>"
-    qpi = np.pi / 4.0
     off_idx = {(dr, dc): i for i, (dr, dc, _) in enumerate(D8_OFFS)}
 
-    def kernel(key, pdf):
-        asm = _assemble_pad(pdf)
-        if asm is None:
-            return pd.DataFrame({
-                "row": pd.Series([], dtype="int64"),
-                "col": pd.Series([], dtype="int64"),
-                "ws": pd.Series([], dtype=object),
-            })
-        c, pad = asm
+    def kernel(c, pad):
         h, w = int(c.h), int(c.w)
-        cv = pad[1:h + 1, 1:w + 1]
-
-        def nb(dr, dc):
-            return pad[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
-
         wdir = np.zeros((8, h, w))
         tot = np.zeros((h, w))
-        with np.errstate(invalid="ignore"):
-            for k, ((r1, c1), (r2, c2), ac, af) in enumerate(_DINF_FACETS):
-                e1v, e2v = nb(r1, c1), nb(r2, c2)
-                s1 = cv - e1v
-                s2 = e1v - e2v
-                r = np.arctan2(s2, s1)
-                s = np.sqrt(s1 * s1 + s2 * s2)
-                low = r < 0.0
-                high = r > qpi
-                r = np.where(low, 0.0, np.where(high, qpi, r))
-                s = np.where(low, s1, np.where(high, (cv - e2v) / _SQRT2, s))
-                pos = s > 0.0
-                sk = np.where(pos, s, 0.0)
-                sk = np.where(np.isnan(sk), 0.0, sk)
-                # quantize the facet angle before the split: numpy and the
-                # oracle's libm atan2 may differ in the last ulp
-                rq = np.floor(r * 1e6 + 0.5) / 1e6
-                d1, d2 = off_idx[(r1, c1)], off_idx[(r2, c2)]
-                wdir[d1] = wdir[d1] + sk * (1.0 - rq / qpi)
-                wdir[d2] = wdir[d2] + sk * (rq / qpi)
-                tot = tot + sk
+        for (e1, e2, _, _), (r, s) in zip(_DINF_FACETS, _facet_slopes(pad, h, w)):
+            sk = np.where(s > 0.0, s, 0.0)
+            sk = np.where(np.isnan(sk), 0.0, sk)
+            # quantize the facet angle before the split: numpy and the
+            # oracle's libm atan2 may differ in the last ulp
+            rq = np.floor(r * 1e6 + 0.5) / 1e6
+            d1, d2 = off_idx[e1], off_idx[e2]
+            wdir[d1] = wdir[d1] + sk * (1.0 - rq / _QPI)
+            wdir[d2] = wdir[d2] + sk * (rq / _QPI)
+            tot = tot + sk
         with np.errstate(invalid="ignore", divide="ignore"):
             ws = np.where(tot > 0.0, wdir / tot, 0.0)
-        full = ~np.isnan(pad[0:h + 2, 0:w + 2])
-        ok = np.ones((h, w), dtype=bool)
-        for dr in (-1, 0, 1):
-            for dc in (-1, 0, 1):
-                ok &= full[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
-        rr, cc = np.nonzero(ok)
-        return pd.DataFrame({
-            "row": int(c.row0) + rr,
-            "col": int(c.col0) + cc,
-            "ws": [ws[:, r, q].tolist() for r, q in zip(rr, cc)],
-        })
+        return cell_rows(c, _full_window(pad, h, w), ws=ws)
 
-    contrib = _halo_contributions(tiles)
-    return contrib.groupBy("dst_row", "dst_col").applyInPandas(kernel, schema)
+    return stencil(tiles, kernel, _WS_SCHEMA)
 
 
 def mdinf_accum(tiles: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
@@ -1786,6 +1658,37 @@ _DINF_FACETS = [
     ((1, 0), (1, 1), 3, 1),
     ((0, 1), (1, 1), 4, -1),
 ]
+_QPI = np.pi / 4.0
+
+
+def _facet_slopes(pad, h, w) -> list:
+    """(r, s) per _DINF_FACETS facet over a stencil window: the descent
+    angle within the facet, clamped to [0, pi/4], and the slope along it
+    (a clamped angle takes the slope along that facet edge)."""
+    cv = pad[1:h + 1, 1:w + 1]
+    out = []
+    with np.errstate(invalid="ignore"):
+        for (r1, c1), (r2, c2), _, _ in _DINF_FACETS:
+            e1 = pad[1 + r1:1 + r1 + h, 1 + c1:1 + c1 + w]
+            e2 = pad[1 + r2:1 + r2 + h, 1 + c2:1 + c2 + w]
+            s1 = cv - e1
+            s2 = e1 - e2
+            r = np.arctan2(s2, s1)
+            s = np.sqrt(s1 * s1 + s2 * s2)
+            low = r < 0.0
+            high = r > _QPI
+            out.append((np.where(low, 0.0, np.where(high, _QPI, r)),
+                        np.where(low, s1, np.where(high, (cv - e2) / _SQRT2, s))))
+    return out
+
+
+def _full_window(pad, h, w):
+    """(h, w) mask of the cells whose whole 3x3 window holds data."""
+    full = ~np.isnan(pad)
+    ok = np.ones((h, w), dtype=bool)
+    for dr, dc in _OFFS:
+        ok &= full[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
+    return ok
 
 
 def flow_pointer_dinf(tiles: DataFrame) -> DataFrame:
@@ -1797,61 +1700,25 @@ def flow_pointer_dinf(tiles: DataFrame) -> DataFrame:
     angle = -1.  First facet in table order wins slope ties, mirroring the
     D8 kernel's scan-order tie rule; transcendental outputs round half-up
     to 6 decimals (shared oracle idiom)."""
-    schema = "row long, col long, angle double, slope double"
-    qpi = np.pi / 4.0
 
-    def kernel(key, pdf):
-        asm = _assemble_pad(pdf)
-        if asm is None:
-            return pd.DataFrame({
-                "row": pd.Series([], dtype="int64"),
-                "col": pd.Series([], dtype="int64"),
-                "angle": pd.Series([], dtype="float64"),
-                "slope": pd.Series([], dtype="float64"),
-            })
-        c, pad = asm
+    def kernel(c, pad):
         h, w = int(c.h), int(c.w)
-        cv = pad[1:h + 1, 1:w + 1]
-
-        def nb(dr, dc):
-            return pad[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
-
         s_all = np.full((8, h, w), -np.inf)
         a_all = np.zeros((8, h, w))
-        with np.errstate(invalid="ignore"):
-            for k, ((r1, c1), (r2, c2), ac, af) in enumerate(_DINF_FACETS):
-                e1, e2 = nb(r1, c1), nb(r2, c2)
-                s1 = cv - e1
-                s2 = e1 - e2
-                r = np.arctan2(s2, s1)
-                s = np.sqrt(s1 * s1 + s2 * s2)
-                low = r < 0.0
-                high = r > qpi
-                r = np.where(low, 0.0, np.where(high, qpi, r))
-                s = np.where(low, s1, np.where(high, (cv - e2) / _SQRT2, s))
-                s_all[k] = np.where(np.isnan(s), -np.inf, s)
-                a_all[k] = af * r + ac * (np.pi / 2.0)
+        facets = zip(_DINF_FACETS, _facet_slopes(pad, h, w))
+        for k, ((_, _, ac, af), (r, s)) in enumerate(facets):
+            s_all[k] = np.where(np.isnan(s), -np.inf, s)
+            a_all[k] = af * r + ac * (np.pi / 2.0)
         best = np.argmax(s_all, axis=0)  # first max in facet order
         ii, jj = np.ogrid[:h, :w]
         smax = s_all[best, ii, jj]
         angle = np.where(smax > 0.0, a_all[best, ii, jj], -1.0)
         slope = np.where(smax > 0.0, smax, 0.0)
-        full = ~np.isnan(pad[0:h + 2, 0:w + 2])
-        ok = np.ones((h, w), dtype=bool)
-        for dr in (-1, 0, 1):
-            for dc in (-1, 0, 1):
-                ok &= full[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
-        rr, cc = np.nonzero(ok)
         rnd = lambda x: np.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-        return pd.DataFrame({
-            "row": int(c.row0) + rr,
-            "col": int(c.col0) + cc,
-            "angle": rnd(angle[rr, cc]),
-            "slope": rnd(slope[rr, cc]),
-        })
+        return cell_rows(c, _full_window(pad, h, w),
+                         angle=rnd(angle), slope=rnd(slope))
 
-    contrib = _halo_contributions(tiles)
-    return contrib.groupBy("dst_row", "dst_col").applyInPandas(kernel, schema)
+    return stencil(tiles, kernel, "row long, col long, angle double, slope double")
 
 
 def flowpath_length(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
@@ -2024,15 +1891,7 @@ def downslope_index(cells: DataFrame, *, d: float = 4.0,
     path-walk query.  Output rounds to `decimals` (the lifted length sum
     associates differently from a sequential walk)."""
     base = cells.select("row", "col", "z", "code")
-    dr = F.expr(
-        "CASE WHEN code IN (1, 2, 4) THEN -1 WHEN code IN (8, 16) THEN 0 ELSE 1 END"
-    )
-    dc = F.expr(
-        "CASE WHEN code IN (1, 8, 32) THEN -1 WHEN code IN (2, 64) THEN 0 ELSE 1 END"
-    )
-    ln = F.expr(
-        f"CASE WHEN code IN (1, 4, 32, 128) THEN {_SQRT2!r} ELSE 1e0 END"
-    )
+    dr, dc, ln = _d8_step()
     ends = base.select(
         F.col("row").alias("erow"), F.col("col").alias("ecol"),
         F.col("z").alias("ez"),
@@ -2127,30 +1986,8 @@ def remove_short_streams(pointers: DataFrame, *, threshold: int = 5,
     stream cells (row, col, link)."""
     from .clump import components_from_edges
 
-    spark = pointers.sparkSession
-    _scratch.release(spark, "rmshort")
-    pointers = _scratch.track(spark, pointers.persist(), "rmshort")
-    acc = flow_accum(pointers, tile=tile)
-    stream = _scratch.track(
-        spark,
-        acc.where(F.col("accum") >= threshold).select("row", "col").persist(),
-        "rmshort",
-    )
-    dr = F.expr("element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)")
-    dc = F.expr("element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)")
-    sd = (
-        stream.join(pointers, ["row", "col"], "inner")
-        .where(F.col("code") > 0)
-        .select("row", "col",
-                (F.col("row") + dr).alias("nr"), (F.col("col") + dc).alias("nc"))
-    )
-    st_t = stream.select(F.col("row").alias("nr"), F.col("col").alias("nc"))
-    sedge = sd.join(st_t, ["nr", "nc"], "left_semi")
-    junc = (
-        sedge.groupBy("nr", "nc").agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") >= 2).select("nr", "nc")
-    )
-    kept = sedge.join(junc, ["nr", "nc"], "left_anti")
+    pointers, stream = _stream_cells(pointers, threshold, tile, "rmshort")
+    _sedge, _junc, kept = _stream_edge_tables(pointers, stream)
     lab = components_from_edges(stream, kept, tile=tile)
     dist = F.when((F.col("row") != F.col("nr")) & (F.col("col") != F.col("nc")),
                   F.lit(_SQRT2)).otherwise(F.lit(1.0))
@@ -2177,13 +2014,9 @@ def avg_slope_to_divide(pointers: DataFrame, dem_cells: DataFrame, *,
     plus the flowpath-length identity pathlen(d -> c) = D(d) - D(c); all
     sums are exact micro-scaled integers, with one transcendental atan at
     the end (round 6).  dem_cells: (row, col, v)."""
+    dr, dc, _ = _d8_step()
     inflow_tgt = pointers.where(F.col("code") > 0).select(
-        (F.col("row") + F.expr(
-            "element_at(array(-1,-1,-1,0,0,1,1,1), CAST(log2(code) AS INT) + 1)"
-        )).alias("row"),
-        (F.col("col") + F.expr(
-            "element_at(array(-1,0,1,-1,1,-1,0,1), CAST(log2(code) AS INT) + 1)"
-        )).alias("col"),
+        (F.col("row") + dr).alias("row"), (F.col("col") + dc).alias("col"),
     ).distinct()
     isdiv = pointers.join(inflow_tgt, ["row", "col"], "left_anti") \
         .select("row", "col", F.lit(1).alias("_d")) \
@@ -2255,15 +2088,7 @@ def stream_relief(cells: DataFrame, stream: DataFrame, *,
     dist rounds to 6 (lifted length association); hand is dyadic-exact."""
     base = cells.select("row", "col", "z", "code")
     smark = stream.select("row", "col").withColumn("_s", F.lit(True))
-    dr = F.expr(
-        "CASE WHEN code IN (1, 2, 4) THEN -1 WHEN code IN (8, 16) THEN 0 ELSE 1 END"
-    )
-    dc = F.expr(
-        "CASE WHEN code IN (1, 8, 32) THEN -1 WHEN code IN (2, 64) THEN 0 ELSE 1 END"
-    )
-    ln = F.expr(
-        f"CASE WHEN code IN (1, 4, 32, 128) THEN {_SQRT2!r} ELSE 1e0 END"
-    )
+    dr, dc, ln = _d8_step()
     lab = base.join(smark, ["row", "col"], "left").select(
         "row", "col", "z", "code", F.coalesce("_s", F.lit(False)).alias("_s")
     )
@@ -2465,15 +2290,7 @@ def branch_length(pointers: DataFrame, *, levels: int = 12,
     Output rounds to `decimals` (lifted length sums associate differently
     from the sequential walk)."""
     base = pointers.select("row", "col", "code")
-    dr = F.expr(
-        "CASE WHEN code IN (1, 2, 4) THEN -1 WHEN code IN (8, 16) THEN 0 ELSE 1 END"
-    )
-    dc = F.expr(
-        "CASE WHEN code IN (1, 8, 32) THEN -1 WHEN code IN (2, 64) THEN 0 ELSE 1 END"
-    )
-    ln = F.expr(
-        f"CASE WHEN code IN (1, 4, 32, 128) THEN {_SQRT2!r} ELSE 1e0 END"
-    )
+    dr, dc, ln = _d8_step()
     ends = base.select(F.col("row").alias("erow"), F.col("col").alias("ecol"))
     j0 = (
         base.where(F.col("code") > 0)

@@ -11,9 +11,11 @@ Spark mapping: an Iceberg/Parquet-shaped TILE table
 — one row per tile, cells row-major inside ``values``.  Whole-raster ops are
 array expressions (``transform`` / ``zip_with`` / ``aggregate``) in
 whole-stage codegen; per-tile partials make global stats a ~#tiles-row
-aggregation; focal kernels run as numpy stencils over halo-padded tiles
-assembled by an 8-neighbor tile-key join (the distributed analogue of the
-reference's sliding block cache + edge handling, WhiteboxRaster.java:536-553).
+aggregation; every 3x3 window kernel (focal here, the hydro pointer and
+weight kernels) runs through ``stencil``, the one halo pass: each tile ships
+1-cell border strips to its 8 neighbors and a numpy function sees its
+nan-padded window (the distributed analogue of the reference's sliding
+block cache + edge handling, WhiteboxRaster.java:536-553).
 
 At 100 TB the tile table is partitioned by (tile_row bucket); every op here
 is either a narrow map over tiles or an equi-join on tile keys — no
@@ -279,7 +281,7 @@ def _halo_contributions(tiles: DataFrame) -> DataFrame:
     reference's block cache reading across block borders
     (WhiteboxRaster.java:483-553), shipping only what a 3x3 window reads.
     The rows come back already partitioned by (dst_row, dst_col)
-    (by_tile), which the callers' ``groupBy`` reuses."""
+    (by_tile), which stencil's ``groupBy`` reuses."""
     structs = ", ".join(
         f"struct(CAST({ddr} AS INT) AS ddr, CAST({ddc} AS INT) AS ddc, "
         f"{strip} AS strip, CAST({sh} AS INT) AS sh, CAST({sw} AS INT) AS sw)"
@@ -307,36 +309,52 @@ def _assemble_pad(pdf: pd.DataFrame):
     """Rebuild the (h+2, w+2) nan-padded window from halo strip rows.
 
     Returns (center_row, pad) or None when the group is pure spill-over
-    past the grid edge (no rel (0,0) contribution)."""
+    past the grid edge (no rel (0,0) contribution).  A strip from
+    direction (rel_r, rel_c) lands on one slice per axis: -1 -> the pad's
+    first line, 0 -> the tile's own span, 1 -> its last line (tiles in
+    one tile row share h, in one tile column share w)."""
     center = pdf[(pdf.rel_r == 0) & (pdf.rel_c == 0)]
     if center.empty:
         return None
     c = center.iloc[0]
     h, w = int(c.h), int(c.w)
+    rows = {-1: slice(0, 1), 0: slice(1, h + 1), 1: slice(h + 1, h + 2)}
+    cols = {-1: slice(0, 1), 0: slice(1, w + 1), 1: slice(w + 1, w + 2)}
     pad = np.full((h + 2, w + 2), np.nan)
     for r in pdf.itertuples():
         s = np.asarray(r.strip, dtype=np.float64).reshape(int(r.sh), int(r.sw))
-        s = np.where(s == NODATA, np.nan, s)
-        rr, rc = int(r.rel_r), int(r.rel_c)
-        if rr == 0 and rc == 0:
-            pad[1:h + 1, 1:w + 1] = s
-        elif rr == -1 and rc == 0:
-            pad[0, 1:int(r.sw) + 1] = s[0]
-        elif rr == 1 and rc == 0:
-            pad[h + 1, 1:int(r.sw) + 1] = s[0]
-        elif rr == 0 and rc == -1:
-            pad[1:int(r.sh) + 1, 0] = s[:, 0]
-        elif rr == 0 and rc == 1:
-            pad[1:int(r.sh) + 1, w + 1] = s[:, 0]
-        elif rr == -1 and rc == -1:
-            pad[0, 0] = s[0, 0]
-        elif rr == -1 and rc == 1:
-            pad[0, w + 1] = s[0, 0]
-        elif rr == 1 and rc == -1:
-            pad[h + 1, 0] = s[0, 0]
-        elif rr == 1 and rc == 1:
-            pad[h + 1, w + 1] = s[0, 0]
+        pad[rows[int(r.rel_r)], cols[int(r.rel_c)]] = np.where(s == NODATA, np.nan, s)
     return c, pad
+
+
+def stencil(tiles: DataFrame, fn, schema: str) -> DataFrame:
+    """The one 3x3 halo pass over a tile table: ship each tile's 1-cell
+    border strips to its 8 neighbors (_halo_contributions), group by
+    destination tile, rebuild the nan-padded window (_assemble_pad; nodata
+    -> nan) and return ``fn(c, pad)`` for every tile with cells of its own.
+    ``c`` carries the tile's row0, col0, h, w and (dst_row, dst_col) = its
+    (tile_row, tile_col); ``pad`` is (h+2, w+2), the tile at [1:h+1, 1:w+1].
+    ``fn`` returns a pandas frame of ``schema``; groups that are only
+    spill-over past the grid edge return no rows."""
+
+    def kernel(key, pdf):
+        asm = _assemble_pad(pdf)
+        return pd.DataFrame() if asm is None else fn(*asm)
+
+    return (_halo_contributions(tiles).groupBy("dst_row", "dst_col")
+            .applyInPandas(kernel, schema))
+
+
+def cell_rows(c, keep, **cols) -> pd.DataFrame:
+    """(row, col, **cols) rows of a stencil window's cells where ``keep``
+    (an (h, w) mask).  Each column is an (h, w) array, or (k, h, w) for an
+    array<double> column (one length-k list per cell)."""
+    rr, cc = np.nonzero(keep)
+    out = {"row": int(c.row0) + rr, "col": int(c.col0) + cc}
+    for name, v in cols.items():
+        v = v[..., rr, cc]
+        out[name] = v if v.ndim == 1 else v.T.tolist()
+    return pd.DataFrame(out)
 
 
 def focal(tiles: DataFrame, stat: str, *, cell_size: float = 1.0) -> DataFrame:
@@ -351,26 +369,12 @@ def focal(tiles: DataFrame, stat: str, *, cell_size: float = 1.0) -> DataFrame:
     neighbors (edge cells use their smaller window), matching the reference's
     per-tool `z != noData` guards.  Terrain derivatives need the full 3x3
     (else nodata).  Output cells round to 6 decimals: the float policy for
-    engine-vs-oracle summation-order differences.
+    engine-vs-oracle summation-order differences.  Runs on ``stencil``: the
+    kernel below only turns one padded window into one output tile.
     """
     schema = "tile_row long, tile_col long, row0 long, col0 long, h int, w int, values array<double>"
 
-    def kernel(key, pdf):
-        trow, tcol = int(key[0]), int(key[1])
-        asm = _assemble_pad(pdf)
-        if asm is None:  # halo spill-over past the grid edge: no output tile
-            return pd.DataFrame(
-                {
-                    "tile_row": pd.Series([], dtype="int64"),
-                    "tile_col": pd.Series([], dtype="int64"),
-                    "row0": pd.Series([], dtype="int64"),
-                    "col0": pd.Series([], dtype="int64"),
-                    "h": pd.Series([], dtype="int32"),
-                    "w": pd.Series([], dtype="int32"),
-                    "values": pd.Series([], dtype=object),
-                }
-            )
-        c, pad = asm
+    def kernel(c, pad):
         h, w = int(c.h), int(c.w)
         stack = np.stack([
             pad[1 + dr:1 + dr + h, 1 + dc:1 + dc + w] for dr, dc in _OFFS
@@ -668,14 +672,13 @@ def focal(tiles: DataFrame, stat: str, *, cell_size: float = 1.0) -> DataFrame:
         out = np.where(np.isnan(out), NODATA, out)
         return pd.DataFrame(
             {
-                "tile_row": [trow], "tile_col": [tcol],
+                "tile_row": [int(c.dst_row)], "tile_col": [int(c.dst_col)],
                 "row0": [int(c.row0)], "col0": [int(c.col0)],
                 "h": [h], "w": [w], "values": [out.ravel().tolist()],
             }
         )
 
-    contrib = _halo_contributions(tiles)
-    return contrib.groupBy("dst_row", "dst_col").applyInPandas(kernel, schema)
+    return stencil(tiles, kernel, schema)
 
 
 def downsample(tiles: DataFrame, k: int) -> DataFrame:
