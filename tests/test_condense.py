@@ -81,9 +81,9 @@ def test_upslope_distributed(spark, ptr, monkeypatch):
 
 @pytest.mark.parametrize("op", ["fd8_accum", "mass_flux_dinf"])
 def test_mfd_accum_distributed(spark, monkeypatch, op):
-    """fd8_accum's two tiers (the driver's condensed border solve and the
-    tile-round exchange) agree exactly, plain and with the affine
-    mass-flux fields."""
+    """fd8_accum's two tiers (graph_masses' driver solve of the condensed
+    border system and its super-group hierarchy) agree exactly, plain and
+    with the affine mass-flux fields."""
     tiles = R.synth_raster(spark, 96, 128)
     if op == "fd8_accum":
         run = lambda: hydro.fd8_accum(tiles, tile=32)  # noqa: E731
@@ -97,6 +97,41 @@ def test_mfd_accum_distributed(spark, monkeypatch, op):
     want, got = _both(run, monkeypatch)
     assert len(want) == len(got) > 0
     assert want.equals(got)
+
+
+def _fd8_oracle(z):
+    """Sequential FD8 over the grid z: cells by decreasing elevation, each
+    cell's mass split over its lower neighbors by drop / dist."""
+    h, w = z.shape
+    acc = np.ones_like(z)
+    for k in np.argsort(-z, axis=None, kind="stable"):
+        r, c = divmod(int(k), w)
+        nb = [(r + dr, c + dc, (z[r, c] - z[r + dr, c + dc]) / dist)
+              for dr, dc, dist in hydro.D8_OFFS
+              if 0 <= r + dr < h and 0 <= c + dc < w]
+        nb = [(rr, cc, s) for rr, cc, s in nb if s > 0]
+        tot = sum(s for *_, s in nb)
+        for rr, cc, s in nb:
+            acc[rr, cc] += acc[r, c] * s / tot
+    return acc
+
+
+def test_fd8_accum_zigzag_plane(spark, monkeypatch):
+    """On the plane 0.25*row + 0.125*col an FD8 path zigzags across one
+    tile border hundreds of times (steps (-1, +1) then (0, -1)); a solver
+    that moves mass one border per round stalls there.  Both tiers equal a
+    sequential FD8 oracle at the output's 4 decimals."""
+    n, tile = 256, 16
+    tiles = R.synth_raster(spark, n, n, tile=tile,
+                           value_sql="(0.25 * {row} + 0.125 * {col})")
+    rows, cols = np.mgrid[0:n, 0:n]
+    want = _fd8_oracle(0.25 * rows + 0.125 * cols)
+    tiers = _both(lambda: hydro.fd8_accum(tiles, tile=tile), monkeypatch)
+    for got in tiers:
+        assert len(got) == n * n
+        acc = np.zeros((n, n))
+        acc[got["row"], got["col"]] = got["accum"]
+        np.testing.assert_allclose(acc, want, rtol=0, atol=5e-5)
 
 
 def test_stream_network_distributed(spark, ptr, monkeypatch):

@@ -5,7 +5,9 @@ The guard-lowered pytests (tests/test_condense.py) prove the distributed
 paths CORRECT; this proves their CONSTANT FACTORS at a production tile
 count: a >=50M-cell synthetic DEM (7200 x 7200) through flow_accum /
 watershed / clump with the driver-solve guard lowered so
-operators/condense.py carries the full solve, plus dedup_clusters on a
+operators/condense.py carries the full solve, fd8_accum on a fixed 1024^2
+plane whose FD8 paths zigzag across tile borders (~2k crossings on one
+path, past the real guard too), plus dedup_clusters on a
 2M-document synthetic corpus whose overlapping-window texts force both
 heavy LSH bucket traffic and CHAINED near-dup components (the label-doubling
 path).  Each op reports wall time plus cheap full-result invariants
@@ -87,6 +89,16 @@ def main() -> None:
         assert r["tot"] == n_live and 0 < r["k"] < n_live
         return f"clumps={r['k']} cells={r['tot']}"
 
+    def run_fd8():
+        n = 1024
+        plane = R.synth_raster(spark, n, n, tile=64,
+                               value_sql="(0.25 * {row} + 0.125 * {col})")
+        acc = hydro.fd8_accum(plane, tile=64)
+        r = acc.agg(F.count(F.lit(1)).alias("n"), F.min("accum").alias("lo"),
+                    F.max("accum").alias("hi")).collect()[0]
+        assert r["n"] == n * n and r["lo"] >= 1.0 and r["hi"] <= n * n
+        return f"n={r['n']} max_accum={r['hi']:.1f}"
+
     def run_dedup():
         # overlapping 40-token windows over a shared token stream: adjacent
         # doc ids are near-identical -> chained components (the web-template
@@ -130,10 +142,11 @@ def main() -> None:
     t2 = _timed("watershed", run_watershed)
     t3 = _timed("clump_sizes", run_clump)
     ptr.unpersist()
+    t7 = _timed("fd8_accum", run_fd8)
     t4 = _timed("dedup_clusters", run_dedup)
     t5 = _timed("paragraph_dedup", run_para)
     t6 = _timed("substring_spans", run_spans)
-    print(f"SOAK TOTAL {t1 + t2 + t3 + t4 + t5 + t6:.1f} s", flush=True)
+    print(f"SOAK TOTAL {t1 + t2 + t3 + t4 + t5 + t6 + t7:.1f} s", flush=True)
 
 
 # ---------------------------------------------------------------------------

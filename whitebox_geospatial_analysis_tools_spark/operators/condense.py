@@ -8,12 +8,15 @@ rows in one job; within the guard the graph is solved on the driver into an
 Arrow-built local table (callers broadcast it when `isLocal()`), past it
 the SAME solve runs distributed —
 
-  graph_masses     the D8 accumulations' single Kahn kernel (sum or
-                   max-plus): one group on the driver, else recursive
-                   super-tile condensation — each level solves the groups
-                   of a fanout-times-larger spatial cell with the same
-                   kernel and forwards cross-group carries to a graph
-                   ~fanout-times smaller, until the guard is met
+  graph_masses     every accumulation's border system, one Kahn kernel:
+                   exact sums or max-plus over the D8 family's functional
+                   DAG, weighted sums (route_linear) over the MFD
+                   accumulations' linear responses.  One group on the
+                   driver, else recursive super-tile condensation — each
+                   level solves the groups of a fanout-times-larger
+                   spatial cell with the same kernel and forwards
+                   cross-group carries and responses to a graph with
+                   ~fanout-times fewer nodes, until the guard is met
                    (O(log_fanout) levels, two passes per level).
   chase_paths      per node of a functional forest, the terminal cell and
                    the path weight sum (watershed labels, flowpath
@@ -27,7 +30,7 @@ the SAME solve runs distributed —
                    hydro.stream_network's driver tier), else hook +
                    shortcut rounds (a Shiloach-Vishkin-style CC).
 
-stream_network, fd8_accum and cost_pathway probe through the same guard.
+stream_network and cost_pathway probe through the same guard.
 
 The loop solvers cut each round's state with `_checkpoint`: a local
 checkpoint re-wrapped WITHOUT the origin plan's size estimate.  A bare
@@ -36,6 +39,7 @@ sides' estimates, so it squares every round; planning with the resulting
 multi-million-digit BigInts came to dominate the rounds.
 
 Reference parity: the sequential solves of FlowAccumD8.java:282-330,
+FlowAccumFD8.java / FlowAccumDinf.java / FlowAccumMDInf.java,
 Watershed.java, DownslopeFlowpathLength.java, StreamOrder.java:364 /
 StreamMagnitude.java / FindMainStem.java:347 and Clump.java:131-206.
 """
@@ -81,79 +85,177 @@ def _checkpoint(df: DataFrame, tag: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# recursive mass/max solve over a functional spatial DAG
+# Kahn routing: functional forests (the D8 family) and weighted graphs (MFD)
 # ---------------------------------------------------------------------------
-def _group_kernel(group_cell: int, is_max: bool):
+def route_functional(val: np.ndarray, tgt: np.ndarray, internal: np.ndarray,
+                     w: np.ndarray, is_max: bool) -> None:
+    """Route ``val`` down the functional forest v -> tgt[v] (where
+    ``internal``) in place, by Kahn wavefronts (the reference's own
+    upstream-count scheduling, FlowAccumD8.java:282-330, vectorized): sum,
+    or max-plus with edge weight w."""
+    n = len(val)
+    indeg = np.bincount(tgt[internal], minlength=n)
+    routed = np.zeros(n, dtype=bool)
+    frontier = np.flatnonzero(indeg == 0)
+    while frontier.size:
+        routed[frontier] = True
+        fe = frontier[internal[frontier]]
+        t = tgt[fe]
+        if is_max:
+            np.maximum.at(val, t, val[fe] + w[fe])
+        else:
+            np.add.at(val, t, val[fe])
+        indeg = indeg - np.bincount(t, minlength=n)
+        frontier = np.flatnonzero((indeg == 0) & ~routed)
+
+
+def chain_ends(tgt: np.ndarray, internal: np.ndarray, w: np.ndarray):
+    """(dest, dd) per node of the functional forest v -> tgt[v] (where
+    ``internal``): the end of its chain and the chain's weight sum, by
+    weighted pointer jumping (chain ends are zero-weight self-loops)."""
+    dest = np.where(internal, tgt, np.arange(len(tgt)))
+    dd = np.where(internal, w, 0.0)
+    while True:
+        nd = dest[dest]
+        if np.array_equal(nd, dest):
+            return dest, dd
+        dd = dd + dd[dest]
+        dest = nd
+
+
+def route_linear(state: np.ndarray, src: np.ndarray, tgt: np.ndarray,
+                 coef: np.ndarray, off: np.ndarray | None = None) -> None:
+    """Route ``state`` (nodes x columns) over the weighted edges src -> tgt,
+    in place: state[t] = state0[t] + sum over t's in-edges of
+    coef * (state[s] - off[s]), where ``off`` (per source node, default 0)
+    applies to column 0 only.  Column 0 is the affine mass, the others are
+    pure linear responses (superposition).
+
+    Kahn wavefronts route each node once its in-edges are final, adding in
+    edge order within a wavefront.  Weights can cycle (a D-infinity facet
+    component may point to a HIGHER neighbor), which strands those nodes in
+    the Kahn; their subgraph is closed upstream (no stranded -> routed edge
+    can exist), so it is relaxed by Jacobi sweeps to its geometric fixpoint
+    (cycle gain < 1)."""
+    n = len(state)
+    order = np.argsort(src, kind="stable")
+    start = np.concatenate([[0], np.cumsum(np.bincount(src, minlength=n))])
+    step = max(1, (1 << 22) // state.shape[1])  # caps the temp at 32 MB
+
+    def send(nodes, into):
+        cnt = start[nodes + 1] - start[nodes]
+        e = np.sort(order[np.repeat(start[nodes] - np.cumsum(cnt) + cnt, cnt)
+                          + np.arange(cnt.sum())])
+        for i in range(0, e.size, step):
+            ec = e[i:i + step]
+            s = src[ec]
+            out = state[s] * coef[ec, None]
+            if off is not None:
+                out[:, 0] = coef[ec] * (state[s, 0] - off[s])
+            np.add.at(into, tgt[ec], out)
+        return tgt[e]
+
+    indeg = np.bincount(tgt, minlength=n)
+    routed = np.zeros(n, dtype=bool)
+    frontier = np.flatnonzero(indeg == 0)
+    while frontier.size:
+        routed[frontier] = True
+        indeg = indeg - np.bincount(send(frontier, state), minlength=n)
+        frontier = np.flatnonzero((indeg == 0) & ~routed)
+    rem = np.flatnonzero(~routed)
+    if rem.size:
+        base = state.copy()
+        for _ in range(10_000):
+            new = base.copy()
+            send(rem, new)
+            delta = np.abs(new[rem] - state[rem]).max()
+            state[rem] = new[rem]
+            if delta <= 1e-12:
+                break
+
+
+def transit_rows(pr: np.ndarray, pc: np.ndarray, ex: np.ndarray,
+                 out: np.ndarray) -> pd.DataFrame:
+    """graph_masses edge rows of a weighted solve's exits: per exit target
+    (ex[0, i], ex[1, i]) one kind-1 carry of out[i, 0], and per node
+    (pr[k], pc[k]) a kind-2 forward with coefficient out[i, 1 + k] where
+    that response is nonzero."""
+    xi, k = np.nonzero(out[:, 1:])
+    null = np.full(len(out), -1, dtype=np.int64)
+    return pd.DataFrame({
+        "row": np.concatenate([null, pr[k]]),
+        "col": np.concatenate([null, pc[k]]),
+        "x_row": np.concatenate([ex[0], ex[0, xi]]),
+        "x_col": np.concatenate([ex[1], ex[1, xi]]),
+        "val": np.concatenate([out[:, 0], np.zeros(k.size)]),
+        "w": np.concatenate([np.zeros(len(out)), out[xi, 1 + k]]),
+        "kind": np.repeat(np.array([1, 2], dtype=np.int32), [len(out), k.size]),
+    })
+
+
+# ---------------------------------------------------------------------------
+# recursive mass/max solve over a spatial graph
+# ---------------------------------------------------------------------------
+def _group_kernel(group_cell: int, is_max: bool, weighted: bool,
+                  transit: bool = True):
     """Per-super-group solve over the group's edge rows (graph_masses
     format).  Nodes are the carry targets, base = their carries' sum (max).
-    Emits kind 0 = per-node through value, kind 1 = carry across the group
-    boundary, kind 2 = transit of each node on an inner group perimeter (where
-    its in-group chain exits the group, with accumulated chain weight)."""
+    Emits kind 0 = per-node through value and, with ``transit``, the next
+    level's rows: kind 1 = carry across the group boundary, kind 2 = the
+    response of each node on an inner group perimeter to a unit inflow
+    there.  On a functional graph that is one row per node: where its
+    in-group chain exits the group, with accumulated chain weight.  On a
+    weighted one it is one row per cross-group target the node reaches,
+    with its coefficient (route_linear)."""
     g = group_cell
 
     def kernel(key, pdf):
+        if weighted:  # float sums: one add order whatever the row order
+            pdf = pdf.sort_values(["kind", "x_row", "x_col", "row", "col", "val"])
         kind = pdf["kind"].to_numpy()
-        nodes = (
-            pdf[kind == 1].groupby(["x_row", "x_col"])["val"]
-            .agg("max" if is_max else "sum")
-            .rename_axis(["row", "col"]).reset_index()
-            .merge(pdf.loc[kind == 2, ["row", "col", "x_row", "x_col", "w"]],
-                   on=["row", "col"], how="left")
-        )
-        n = len(nodes)
-        rr = nodes["row"].to_numpy(np.int64)
-        cc = nodes["col"].to_numpy(np.int64)
-        thr = nodes["val"].to_numpy(np.float64 if is_max else np.int64).copy()
-        fr = nodes["x_row"].fillna(-1).to_numpy(np.int64)
-        fc = nodes["x_col"].fillna(-1).to_numpy(np.int64)
-        w = nodes["w"].fillna(0.0).to_numpy(np.float64)
-        has = fr >= 0
-        ing = has & (fr // g == rr // g) & (fc // g == cc // g)
-        at = pd.MultiIndex.from_arrays([rr, cc]).get_indexer(
-            pd.MultiIndex.from_arrays([fr, fc]))
-        tgt = np.where(ing, at, -1)
-        internal = tgt >= 0
-        cross = has & ~internal
-
-        # local Kahn over internal edges (sum or max-plus aggregation)
-        indeg = np.bincount(tgt[internal], minlength=n)
-        processed = np.zeros(n, dtype=bool)
-        frontier = np.flatnonzero(indeg == 0)
-        while frontier.size:
-            processed[frontier] = True
-            fe = frontier[internal[frontier]]
-            if fe.size:
-                t = tgt[fe]
-                if is_max:
-                    np.maximum.at(thr, t, thr[fe] + w[fe])
-                else:
-                    np.add.at(thr, t, thr[fe])
-                indeg = indeg - np.bincount(t, minlength=n)
-                frontier = np.flatnonzero((indeg == 0) & ~processed)
-            else:
-                frontier = np.array([], dtype=np.int64)
-
-        # transit: chase internal chains by pointer doubling with weights
-        nxt = np.arange(n, dtype=np.int64)
-        nxt[internal] = tgt[internal]
-        dd = np.where(internal, w, 0.0)
-        dest = nxt
-        while True:
-            nd = dest[dest]
-            if np.array_equal(nd, dest):
-                break
-            dd = dd + dd[dest]
-            dest = nd
-        wout = np.where(cross, w, 0.0)
-        chain_w = dd + wout[dest]
-        exits = cross[dest]
-        null = np.int64(-1)
+        base = (pdf[kind == 1].groupby(["x_row", "x_col"])["val"]
+                .agg("max" if is_max else "sum"))
+        at = base.index
+        rr = at.get_level_values(0).to_numpy(np.int64)
+        cc = at.get_level_values(1).to_numpy(np.int64)
+        n = len(rr)
+        fwd = pdf[kind == 2]
+        src = at.get_indexer(pd.MultiIndex.from_arrays([fwd["row"], fwd["col"]]))
+        fwd, src = fwd[src >= 0], src[src >= 0]
+        fr = fwd["x_row"].to_numpy(np.int64)
+        fc = fwd["x_col"].to_numpy(np.int64)
+        w = fwd["w"].to_numpy(np.float64)
+        # in-group forwards (a terminal's x = -1 lies in no group)
+        ing = (fr // g == rr[src] // g) & (fc // g == cc[src] // g)
+        tgt = np.where(ing, at.get_indexer(pd.MultiIndex.from_arrays([fr, fc])), -1)
+        cross = (fr >= 0) & (tgt < 0)
         # a carry target is D8-adjacent to a cell of another group, so only
         # nodes on a perimeter facing another group can be next-level nodes
         ps = np.flatnonzero(
             ((rr % g == 0) & (rr > 0)) | (rr % g == g - 1)
             | ((cc % g == 0) & (cc > 0)) | (cc % g == g - 1)
-        )
+        ) if transit else np.zeros(0, dtype=np.int64)
+        null = np.int64(-1)
+
+        if weighted:
+            ex, xi = np.unique(np.stack([fr[cross], fc[cross]]), axis=1,
+                               return_inverse=True)
+            live = (tgt >= 0) | cross
+            tgt[cross] = n + xi.reshape(-1)
+            state = np.zeros((n + ex.shape[1], 1 + ps.size))
+            state[:n, 0] = base.to_numpy(np.float64)
+            state[ps, 1 + np.arange(ps.size)] = 1.0
+            route_linear(state, src[live], tgt[live], w[live])
+            thr = state[:n, 0]
+        else:
+            thr = base.to_numpy(np.float64 if is_max else np.int64).copy()
+            # at most one forward row per node: index the edges by node
+            ie = tgt >= 0
+            nxt, internal = np.full(n, -1), np.zeros(n, dtype=bool)
+            nxt[src[ie]], internal[src[ie]] = tgt[ie], True
+            wn, out_r, out_c = np.zeros(n), np.full(n, null), np.full(n, null)
+            wn[src], out_r[src[cross]], out_c[src[cross]] = w, fr[cross], fc[cross]
+            route_functional(thr, nxt, internal, wn, is_max)
 
         parts = [pd.DataFrame({
             "row": rr, "col": cc,
@@ -161,18 +263,28 @@ def _group_kernel(group_cell: int, is_max: bool):
             "val": thr, "w": np.zeros(n),
             "kind": np.zeros(n, dtype=np.int32),
         })]
-        xs = np.flatnonzero(cross)
+        if not transit:
+            return parts[0]
+        if weighted:
+            return pd.concat([parts[0], transit_rows(rr[ps], cc[ps], ex, state[n:])],
+                             ignore_index=True)
+
+        # transit: where each node's in-group chain ends, and its weight
+        dest, dd = chain_ends(nxt, internal, wn)
+        chain_w = dd + np.where(out_r >= 0, wn, 0.0)[dest]
+        xs = np.flatnonzero(out_r >= 0)
+        exits = out_r[dest] >= 0
         if xs.size:
             parts.append(pd.DataFrame({
-                "row": rr[xs], "col": cc[xs], "x_row": fr[xs], "x_col": fc[xs],
-                "val": thr[xs] + w[xs] if is_max else thr[xs],
+                "row": rr[xs], "col": cc[xs], "x_row": out_r[xs], "x_col": out_c[xs],
+                "val": thr[xs] + wn[xs] if is_max else thr[xs],
                 "w": np.zeros(xs.size),
                 "kind": np.full(xs.size, 1, dtype=np.int32),
             }))
         parts.append(pd.DataFrame({
             "row": rr[ps], "col": cc[ps],
-            "x_row": np.where(exits, fr[dest], null)[ps],
-            "x_col": np.where(exits, fc[dest], null)[ps],
+            "x_row": np.where(exits, out_r[dest], null)[ps],
+            "x_col": np.where(exits, out_c[dest], null)[ps],
             "val": np.zeros(ps.size, dtype=thr.dtype), "w": chain_w[ps],
             "kind": np.full(ps.size, 2, dtype=np.int32),
         }))
@@ -183,7 +295,7 @@ def _group_kernel(group_cell: int, is_max: bool):
 
 def _grouped(edges: DataFrame, g: int) -> DataFrame:
     """Key each edge row by the group of the node it describes: a carry by
-    its target's group, a transit by its own."""
+    its target's group, a forward by its own."""
     kr = F.when(F.col("kind") == 1, F.col("x_row")).otherwise(F.col("row"))
     kc = F.when(F.col("kind") == 1, F.col("x_col")).otherwise(F.col("col"))
     return edges.groupBy((kr / g).cast("long"), (kc / g).cast("long"))
@@ -192,34 +304,41 @@ def _grouped(edges: DataFrame, g: int) -> DataFrame:
 def graph_masses(edges: DataFrame, *, group_cell: int,
                  is_max: bool = False, fanout: int = 8,
                  _level: int = 0) -> DataFrame:
-    """Through-value per node of a functional spatial DAG.
+    """Through-value per node of a spatial graph.
 
     edges: (row, col, x_row, x_col, val, w, kind) —
       kind 1: a carry of val from (row, col) into node (x_row, x_col);
-      kind 2: node (row, col) forwards to (x_row, x_col) with path weight w
-              (x_row = -1 for terminal nodes; w is ignored in sum mode).
+      kind 2: node (row, col) forwards to (x_row, x_col) with edge weight w
+              (x_row = -1 for terminal nodes).
     Nodes are the carry targets, base = the sum (max) of their carries, and
     a forward target is D8-adjacent to a cell of the forwarding node's group.
-    val is long in sum mode (exact integer sums) and double in max mode.
-    Returns (row, col, mass) with
-      sum mode:  mass[t] = base[t] + sum of predecessors' mass
-      max mode:  mass[t] = max(base[t], max of predecessors' mass + edge w)
+    The type of val picks the mode:
+      long, sum:   a functional DAG (one forward row per node, w ignored),
+                   mass[t] = base[t] + sum of predecessors' mass, exact;
+      double, max: a functional DAG with path weights,
+                   mass[t] = max(base[t], max of predecessors' mass + w);
+      double, sum: weighted forwards (any number per node, cycles allowed),
+                   mass[t] = base[t] + sum of w(p -> t) * mass[p].
+    Returns (row, col, mass).
 
-    Both tiers run the same vectorized Kahn kernel.  Edge rows under the
-    driver guard are collected once and solved as one group on the driver
-    into a local table (no further Spark job).  Past the guard: solve per
-    spatial super-group, forward cross-group carries to a ~fanout-times
-    smaller graph, recurse until the guard is met, then rerun each group
-    with the solved external inflow as one more carry.
+    Both tiers run the same group kernel.  Edge rows under the driver guard
+    are collected once and solved as one group on the driver into a local
+    table (no further Spark job).  Past the guard: solve per spatial
+    super-group, forward cross-group carries and each perimeter node's
+    response to a unit inflow as a ~fanout-times smaller graph, recurse
+    until the guard is met, then rerun each group with the solved external
+    inflow as one more carry.
     """
     spark = edges.sparkSession
+    vt = edges.schema["val"].dataType.simpleString()
+    weighted = vt == "double" and not is_max
     head = collect_guarded(edges)
     if head is not None:
-        out = _group_kernel(_WHOLE_GRID, is_max)(None, head)
-        out = out.loc[out["kind"] == 0, ["row", "col", "val"]]
+        out = _group_kernel(_WHOLE_GRID, is_max, weighted, False)(None, head)
         # via Arrow so that an empty result is a local table too
         return spark.createDataFrame(pa.Table.from_pandas(
-            out, preserve_index=False).rename_columns(["row", "col", "mass"]))
+            out[["row", "col", "val"]], preserve_index=False
+        ).rename_columns(["row", "col", "mass"]))
     if _level >= _MAX_LEVELS:
         raise RuntimeError("graph_masses: condensation failed to shrink")
 
@@ -228,11 +347,11 @@ def graph_masses(edges: DataFrame, *, group_cell: int,
     # read twice more below (pass A, pass B): computed once past the probe
     edges = _scratch.track(spark, edges.persist(), tag)
     g = int(group_cell)
-    schema = EDGE_SCHEMA.format("double" if is_max else "long")
+    schema = EDGE_SCHEMA.format(vt)
     pass_a = _scratch.track(
         spark,
-        _grouped(edges, g).applyInPandas(_group_kernel(g, is_max), schema)
-        .persist(),
+        _grouped(edges, g).applyInPandas(_group_kernel(g, is_max, weighted),
+                                         schema).persist(),
         tag,
     )
     mass2 = graph_masses(
@@ -247,11 +366,9 @@ def graph_masses(edges: DataFrame, *, group_cell: int,
         F.lit(1).alias("kind"),
     )
     pass_b = _grouped(edges.unionByName(inflow), g).applyInPandas(
-        _group_kernel(g, is_max), schema
+        _group_kernel(g, is_max, weighted, False), schema
     )
-    return pass_b.where(F.col("kind") == 0).select(
-        "row", "col", F.col("val").alias("mass")
-    )
+    return pass_b.select("row", "col", F.col("val").alias("mass"))
 
 
 # ---------------------------------------------------------------------------

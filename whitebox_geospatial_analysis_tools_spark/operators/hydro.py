@@ -54,13 +54,19 @@ flow_pointer_dinf, fd8_weights, mdinf_weights) run on raster.stencil, the
 one halo pass over a tile table; each holds only its window arithmetic
 and emits its cells with raster.cell_rows.
 
+The MFD accumulations (fd8_accum and its wrappers dinf_accum, mdinf_accum,
+mass_flux_dinf) take the same three-phase shape: the condensed border
+system is linear, so pass 1 emits each tile's weighted responses as
+condense.graph_masses edge rows and ONE graph_masses call solves it on
+either tier.
+
 Every tile pass here keys its cells with raster.tile_key, almost always
 through raster.with_tiles (keyed and partitioned by tile);
 breach_depressions partitions its own+halo union once instead.  The
 solvers that iterate tile-local solves to a fixpoint share two round
 loops: fill_depressions (like cost.cost_distance) relaxes over
-raster.halo_rounds, a 1-cell border halo exchange; fd8_accum's
-distributed tier, mass_flux_d8 and stream_heads_mdinf iterate
+raster.halo_rounds, a 1-cell border halo exchange; mass_flux_d8 and
+stream_heads_mdinf, which are not linear in their inflows, iterate
 _exchange_rounds, a cross-tile inflow table collected to the driver and
 broadcast into the next solve.
 
@@ -81,8 +87,8 @@ from . import _scratch
 # the guard under its old name, read only by perfbench/workloads.py
 from .condense import DRIVER_ROWS as _MAX_DRIVER_ROWS  # noqa: F401
 from .condense import (
-    EDGE_SCHEMA, chase_paths, collect_guarded, graph_masses, min_label_roots,
-    solve_links,
+    EDGE_SCHEMA, chain_ends, chase_paths, collect_guarded, graph_masses,
+    min_label_roots, route_functional, route_linear, solve_links, transit_rows,
 )
 from .raster import (
     _OFFS, NODATA, by_tile, cell_rows, halo_rounds, stencil, tile_key, with_tiles,
@@ -302,41 +308,13 @@ def _tile_flow_kernel(tile: int, is_max: bool = False, emit: str = "all"):
             has, np.where((t_r != rr) & (t_c != cc), _SQRT2, 1.0), 0.0
         )
 
-        # --- tile-local accumulation: Kahn wavefronts (the reference's own
-        # upstream-count scheduling, FlowAccumD8.java:282-330, vectorized)
-        indeg = np.bincount(tgt[internal], minlength=n)
+        # --- tile-local accumulation, then the terminal of each cell's
+        # within-tile path and the path distance to it
         accum = ext.copy() if is_max else 1 + ext
-        processed = np.zeros(n, dtype=bool)
-        frontier = np.flatnonzero(indeg == 0)
-        while frontier.size:
-            processed[frontier] = True
-            fe = frontier[internal[frontier]]
-            if fe.size:
-                t = tgt[fe]
-                if is_max:
-                    np.maximum.at(accum, t, accum[fe] + step[fe])
-                else:
-                    np.add.at(accum, t, accum[fe])
-                indeg = indeg - np.bincount(t, minlength=n)
-                frontier = np.flatnonzero((indeg == 0) & ~processed)
-            else:
-                frontier = np.array([], dtype=np.int64)
+        route_functional(accum, tgt, internal, step, is_max)
         if emit == "acc":
             return pd.DataFrame({"row": rr, "col": cc, "acc": accum})
-
-        # --- terminal of each cell's within-tile path + path distance:
-        # weighted pointer jumping (terminals are zero-weight self-loops)
-        nxt = np.arange(n, dtype=np.int64)
-        nxt[internal] = tgt[internal]
-        dd = np.where(internal, step, 0.0)
-        dest = nxt
-        while True:
-            nd = dest[dest]
-            if np.array_equal(nd, dest):
-                break
-            dd = dd + dd[dest]
-            dest = nd
-        dd = dd + dd[dest]  # flush the final hop's accumulated weights
+        dest, dd = chain_ends(tgt, internal, step)
         null = np.int64(-1)
         d_exits = cross[dest]  # terminal cell has an out-of-tile edge
         x_row = np.where(d_exits, t_r[dest], null)
@@ -1342,36 +1320,35 @@ def mdinf_weights(tiles: DataFrame) -> DataFrame:
     return stencil(tiles, kernel, _WS_SCHEMA)
 
 
-def mdinf_accum(tiles: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
+def mdinf_accum(tiles: DataFrame, *, tile: int = TILE,
                 decimals: int = 4) -> DataFrame:
     """(row, col, accum): MD-infinity accumulation
-    (GeasyTools/.../FlowAccumMDInf.java:631) — the same iterative MFD tile
-    machinery as FD8/D-infinity with the all-facet weight split."""
-    return fd8_accum(tiles, tile=tile, max_rounds=max_rounds,
-                     decimals=decimals, weights=mdinf_weights(tiles))
+    (GeasyTools/.../FlowAccumMDInf.java:631) — fd8_accum's MFD tile solve
+    and condensed border system with the all-facet weight split."""
+    return fd8_accum(tiles, tile=tile, decimals=decimals,
+                     weights=mdinf_weights(tiles))
 
 
-def dinf_accum(tiles: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
+def dinf_accum(tiles: DataFrame, *, tile: int = TILE,
                decimals: int = 4) -> DataFrame:
     """(row, col, accum): D-infinity fractional accumulation
-    (HydroTools FlowAccumDinf.java:490) — the FD8 iterative tile machinery
-    with the Tarboton two-direction weight split."""
-    return fd8_accum(tiles, tile=tile, max_rounds=max_rounds,
-                     decimals=decimals, weights=dinf_weights(tiles))
+    (HydroTools FlowAccumDinf.java:490) — fd8_accum's MFD tile solve and
+    condensed border system with the Tarboton two-direction weight split."""
+    return fd8_accum(tiles, tile=tile, decimals=decimals,
+                     weights=dinf_weights(tiles))
 
 
 def mass_flux_dinf(tiles: DataFrame, fields: DataFrame, *, tile: int = TILE,
-                   max_rounds: int = 64, decimals: int = 4) -> DataFrame:
+                   decimals: int = 4) -> DataFrame:
     """(row, col, flux): D-infinity mass transport —
     GeasyTools/src/plugins/MassFluxDinf.java:300-390 semantics:
     flux(c) = load(c) + sum over Dinf-upslope neighbors u of
     w(u->c) * eff(u) * (flux(u) - absorp(u)).  Unlike the D8 variant the
     reference applies NO zero clamp, so the transport is affine-linear and
-    runs through fd8_accum's two-pass condensed border solve (one driver
-    solve, two kernel passes) instead of the iterative exchange.
+    runs through fd8_accum's two-pass condensed border solve.
     fields: (row, col, load, eff, absorp)."""
     return fd8_accum(
-        tiles, tile=tile, max_rounds=max_rounds, decimals=decimals,
+        tiles, tile=tile, decimals=decimals,
         weights=dinf_weights(tiles), fields=fields,
     ).withColumnRenamed("accum", "flux")
 
@@ -1393,9 +1370,11 @@ def _exchange_rounds(cells: DataFrame, kernel, schema: str, aggs: list, *,
     the driver.  That table is broadcast into every solve anyway, so it
     must fit on the driver already.  The loop stops when no mass crosses a
     border or the table equals the previous round's: the last solve then
-    ran on the inflows it reproduces.  Each round propagates exact values
-    one tile level, so this takes tile-graph-depth rounds and relies on no
-    monotonicity (stream_heads_mdinf switches mode per cell)."""
+    ran on the inflows it reproduces.  Each round moves mass across one
+    tile border, so rounds = border crossings on the longest flow path
+    (a path that zigzags along a tile border crosses it again and again);
+    it relies on no monotonicity (stream_heads_mdinf switches mode per
+    cell)."""
     spark = cells.sparkSession
     inp, ext = cells, None
     for _ in range(max_rounds):
@@ -1417,24 +1396,21 @@ def _exchange_rounds(cells: DataFrame, kernel, schema: str, aggs: list, *,
 
 
 def _mfd_solve(tile: int, key, pdf: pd.DataFrame, resp: bool):
-    """The one MFD tile solve behind fd8_accum's two kernels.
+    """The one MFD tile solve behind fd8_accum's two passes:
+    condense.route_linear over the tile's weighted flow edges.
 
     State column 0 is the accumulation a(c) = load(c) + ext(c) + Σ
     we(u->c) * (a(u) - absorp(u)) over in-tile upslope u (ext = 0 when the
     column is absent).  With ``resp``, column 1+k is the response to a unit
     inflow at perimeter slot k, the only cells that can receive cross-tile
     mass; transfers are affine and the absorption offset applies only to
-    column 0, so the response columns carry the pure linear part
-    (superposition).  Kahn wavefronts route the in-tile edges, then any
-    remnant is relaxed: multiple-flow-direction weights can cycle (a
-    D-infinity facet component may point to a HIGHER neighbor), which
-    strands those cells in the Kahn; their subgraph is closed upstream (no
-    remnant -> processed edge can exist), so a = base + W'a is relaxed over
-    it to its geometric fixpoint (cycle gain < 1).
+    column 0, so the response columns carry the pure linear part.  Every
+    flow target that is not a tile cell (across the tile border, or
+    nodata) is one more node, an exit, that only receives.
 
-    Returns (rr, cc, slots, state, xs): xs holds, per direction j with
-    cross-tile flow, (j, src, flow) — flow[:, 0] the mass sent from cells
-    src, flow[:, 1:] its slot responses."""
+    Returns (rr, cc, slots, state, ex): the state rows past the cells are
+    the exits (ex[0], ex[1]), column 0 the mass sent there and the rest its
+    slot responses."""
     r0, c0 = int(key[0]) * tile, int(key[1]) * tile
     rr = pdf["row"].to_numpy(np.int64)
     cc = pdf["col"].to_numpy(np.int64)
@@ -1451,64 +1427,28 @@ def _mfd_solve(tile: int, key, pdf: pd.DataFrame, resp: bool):
     h, w = int(lr.max()) + 1, int(lc.max()) + 1
     gid = np.full((h, w), -1, dtype=np.int64)
     gid[lr, lc] = np.arange(n)
-    # in-tile targets per direction (local index or -1)
-    tgt = np.full((n, 8), -1, dtype=np.int64)
-    for j, (dr, dc, _) in enumerate(D8_OFFS):
-        t_lr, t_lc = lr + dr, lc + dc
-        m = (ws[:, j] > 0.0) & (t_lr >= 0) & (t_lr < min(tile, h)) \
-            & (t_lc >= 0) & (t_lc < min(tile, w))
-        tgt[m, j] = gid[t_lr[m], t_lc[m]]
-        tgt[m & (tgt[:, j] < 0), j] = -1
-    internal = tgt >= 0
+    # edges by direction, then by source cell (the wavefronts' add order)
+    j, src = np.nonzero(ws.T > 0.0)
+    t_lr, t_lc = lr[src] + _D8_DR[j], lc[src] + _D8_DC[j]
+    inb = (t_lr >= 0) & (t_lr < h) & (t_lc >= 0) & (t_lc < w)
+    tgt = np.full(src.size, -1, dtype=np.int64)
+    tgt[inb] = gid[t_lr[inb], t_lc[inb]]
+    out = tgt < 0
+    ex, xi = np.unique(np.stack([r0 + t_lr[out], c0 + t_lc[out]]), axis=1,
+                       return_inverse=True)
+    tgt[out] = n + xi.reshape(-1)
     slots = np.flatnonzero(
         (lr == 0) | (lc == 0) | (lr == tile - 1) | (lc == tile - 1)
     ) if resp else np.zeros(0, np.int64)
-    state = np.zeros((n, 1 + slots.size))
-    state[:, 0] = ld + ext
+    state = np.zeros((n + ex.shape[1], 1 + slots.size))
+    state[:n, 0] = ld + ext
     state[slots, 1 + np.arange(slots.size)] = 1.0
-
-    def xfer(fe, j):
-        out = state[fe] * we[fe, j, None]
-        out[:, 0] = we[fe, j] * (state[fe, 0] - ab[fe])
-        return out
-
-    indeg = np.bincount(tgt[internal].ravel(), minlength=n)
-    processed = np.zeros(n, dtype=bool)
-    frontier = np.flatnonzero(indeg == 0)
-    while frontier.size:
-        processed[frontier] = True
-        dec = np.zeros(n, dtype=np.int64)
-        for j in range(8):
-            fe = frontier[internal[frontier, j]]
-            if fe.size:
-                t = tgt[fe, j]
-                np.add.at(state, t, xfer(fe, j))
-                dec += np.bincount(t, minlength=n)
-        indeg = indeg - dec
-        frontier = np.flatnonzero((indeg == 0) & ~processed)
-    rem = np.flatnonzero(~processed)
-    if rem.size:
-        base = state.copy()
-        for _ in range(10_000):
-            new = base.copy()
-            for j in range(8):
-                fe = rem[internal[rem, j]]
-                if fe.size:
-                    np.add.at(new, tgt[fe, j], xfer(fe, j))
-            delta = np.abs(new[rem] - state[rem]).max()
-            state[rem] = new[rem]
-            if delta <= 1e-12:
-                break
-    xs = []
-    for j in range(8):
-        src = np.flatnonzero((ws[:, j] > 0.0) & ~internal[:, j])
-        if src.size:
-            xs.append((j, src, xfer(src, j)))
-    return rr, cc, slots, state, xs
+    route_linear(state, src, tgt, we[src, j], ab)
+    return rr, cc, slots, state, ex
 
 
-def fd8_accum(tiles: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
-              decimals: int = 4, weights: DataFrame | None = None,
+def fd8_accum(tiles: DataFrame, *, tile: int = TILE, decimals: int = 4,
+              weights: DataFrame | None = None,
               fields: DataFrame | None = None) -> DataFrame:
     """(row, col, accum): FD8 fractional accumulation —
     a(c) = 1 + sum over upslope neighbors of w(u->c) * a(u).
@@ -1520,23 +1460,21 @@ def fd8_accum(tiles: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
     linear in the cross-tile inflows and solvable by the same condensed
     border system; the CLAMPED D8 variant lives in mass_flux_d8).
 
-    Two-pass condensed solve (the same shape as flow_accum's D8
-    condensation): MFD accumulation is *linear* in the cross-tile inflows,
-    so pass 1 computes, per tile, the outflow masses with zero inflow plus
-    the response coefficient of every border outflow to a unit inflow at
-    each perimeter slot; the condensed border system m = b + C·m
-    (O(grid/tile) variables) is solved on the driver, and a single second
-    kernel pass with the exact inflows produces the result.  Both passes
-    are the one tile solve, _mfd_solve.  When the condensed system exceeds
-    condense.DRIVER_ROWS the operator falls back to the fully distributed
-    tile-round exchange, _exchange_rounds (rounds ~ tile-graph depth).
-    The pass-1 response state is a dense (cells × perimeter) matrix per
-    tile — O(4·tile³) doubles, ~67 MB at tile=128; cap MFD tiles at 128 on
-    memory-tight executors (or swap the state to float32/sparse) — pass 2
-    and the fallback are O(cells) regardless.  The tiled cells are
-    persisted partitioned by tile (raster.with_tiles), so no pass shuffles
-    them again.  Output rounds to `decimals` (parent-sum association
-    differs between engines; error ~1e-13 relative)."""
+    The shape of flow_accum's D8 condensation (_d8_accum): MFD
+    accumulation is *linear* in the cross-tile inflows, so pass 1 returns,
+    per tile, the mass sent into each cell across its border with zero
+    inflow, and that outflow's response to a unit inflow at each perimeter
+    slot, as condense.graph_masses' weighted edge rows.  ONE graph_masses
+    call solves the border system m = b + C·m (O(grid/tile) unknowns; its
+    driver or distributed tier, chosen there), and pass 2 reruns the tile
+    solve with the exact inflows (broadcast in the driver tier).  Both
+    passes are the one tile solve, _mfd_solve.  The pass-1 response state
+    is a dense (cells × perimeter) matrix per tile — O(4·tile³) doubles,
+    ~67 MB at tile=128; cap MFD tiles at 128 on memory-tight executors (or
+    swap the state to float32/sparse) — pass 2 is O(cells).  The tiled
+    cells are persisted partitioned by tile (raster.with_tiles), so no pass
+    shuffles them again.  Output rounds to `decimals` (parent-sum
+    association differs between engines; error ~1e-13 relative)."""
     spark = tiles.sparkSession
     _scratch.release(spark, "fd8")
     wsrc = fd8_weights(tiles) if weights is None else weights
@@ -1544,103 +1482,26 @@ def fd8_accum(tiles: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
         wsrc = wsrc.join(fields.select("row", "col", "load", "eff", "absorp"),
                          ["row", "col"], "left")
     wdf = _scratch.track(spark, with_tiles(wsrc, tile).persist(), "fd8")
-    wdf.count()
 
-    schema = "row long, col long, acc double, x_row long, x_col long, kind int"
+    def kernel_resp(key, pdf):  # pass 1: base outflows + border responses
+        rr, cc, slots, state, ex = _mfd_solve(tile, key, pdf, resp=True)
+        return transit_rows(rr[slots], cc[slots], ex, state[len(rr):])
 
-    def kernel(key, pdf):
-        rr, cc, _, state, xs = _mfd_solve(tile, key, pdf, resp=False)
-        n = len(rr)
-        parts = [pd.DataFrame({
-            "row": rr, "col": cc, "acc": state[:, 0],
-            "x_row": np.full(n, -1, dtype=np.int64),
-            "x_col": np.full(n, -1, dtype=np.int64),
-            "kind": np.zeros(n, dtype=np.int32),
-        })]
-        for j, src, flow in xs:  # cross-tile outflow masses
-            dr, dc, _ = D8_OFFS[j]
-            parts.append(pd.DataFrame({
-                "row": rr[src], "col": cc[src], "acc": flow[:, 0],
-                "x_row": rr[src] + dr, "x_col": cc[src] + dc,
-                "kind": np.ones(src.size, dtype=np.int32),
-            }))
-        return pd.concat(parts, ignore_index=True)
+    def kernel(key, pdf):  # pass 2: the cells under their solved inflows
+        rr, cc, _, state, _ = _mfd_solve(tile, key, pdf, resp=False)
+        return pd.DataFrame({"row": rr, "col": cc, "acc": state[:len(rr), 0]})
 
-    # ---- pass 1: per-tile base outflows + linear border response ---------
-    rschema = ("x_row long, x_col long, slot_row long, slot_col long, "
-               "coef double, kind int")
-
-    def kernel_resp(key, pdf):
-        rr, cc, slots, _, xs = _mfd_solve(tile, key, pdf, resp=True)
-        parts = []
-        for j, src, flow in xs:
-            dr, dc, _ = D8_OFFS[j]
-            dstr, dstc = rr[src] + dr, cc[src] + dc
-            parts.append(pd.DataFrame({
-                "x_row": dstr, "x_col": dstc,
-                "slot_row": np.full(src.size, -1, dtype=np.int64),
-                "slot_col": np.full(src.size, -1, dtype=np.int64),
-                "coef": flow[:, 0],
-                "kind": np.ones(src.size, dtype=np.int32),
-            }))
-            ei, bi = np.nonzero(flow[:, 1:])
-            if ei.size:
-                parts.append(pd.DataFrame({
-                    "x_row": dstr[ei], "x_col": dstc[ei],
-                    "slot_row": rr[slots[bi]], "slot_col": cc[slots[bi]],
-                    "coef": flow[ei, 1 + bi],
-                    "kind": np.full(ei.size, 2, dtype=np.int32),
-                }))
-        return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
-
-    res1 = wdf.groupBy("_tr", "_tc").applyInPandas(kernel_resp, rschema)
-    cond = collect_guarded(res1)
-    if cond is not None:
-        ext = None
-        if len(cond):
-            k1 = (cond[cond["kind"] == 1]
-                  .groupby(["x_row", "x_col"])["coef"].sum())
-            k2 = (cond[cond["kind"] == 2]
-                  .groupby(["x_row", "x_col", "slot_row", "slot_col"])["coef"]
-                  .sum().reset_index())
-            idx = {cell: i for i, cell in enumerate(k1.index)}
-            b_vec = k1.to_numpy(np.float64)
-            n_ext = b_vec.size
-            # a slot that never receives cross-tile mass has ext = 0 forever
-            keep = [i for i, s in enumerate(zip(k2["slot_row"], k2["slot_col"]))
-                    if s in idx]
-            m = b_vec.copy()
-            if keep:
-                kk = k2.iloc[keep]
-                dst_i = np.array(
-                    [idx[c] for c in zip(kk["x_row"], kk["x_col"])], np.int64)
-                slot_i = np.array(
-                    [idx[c] for c in zip(kk["slot_row"], kk["slot_col"])],
-                    np.int64)
-                coef = kk["coef"].to_numpy(np.float64)
-                # monotone fixpoint of the condensed system (coef >= 0);
-                # doubles stabilize exactly once increments underflow
-                for _ in range(100_000):
-                    m_new = b_vec + np.bincount(
-                        dst_i, weights=coef * m[slot_i], minlength=n_ext)
-                    if np.array_equal(m_new, m):
-                        break
-                    m = m_new
-            ext = spark.createDataFrame(pd.DataFrame({
-                "row": np.array([r for r, _ in k1.index], np.int64),
-                "col": np.array([c for _, c in k1.index], np.int64),
-                "ext": m,
-            }))
-        inp = wdf if ext is None else wdf.join(
-            F.broadcast(ext), ["row", "col"], "left"
-        )
-        out = inp.groupBy("_tr", "_tc").applyInPandas(kernel, schema)
-    else:  # distributed fallback: the tile-round exchange
-        out = _exchange_rounds(wdf, kernel, schema, [F.sum("acc").alias("ext")],
-                               max_rounds=max_rounds, what="fd8_accum")
-    return out.where(F.col("kind") == 0).select(
-        "row", "col", F.round("acc", decimals).cast("double").alias("accum")
+    mass = graph_masses(
+        wdf.groupBy("_tr", "_tc").applyInPandas(
+            kernel_resp, EDGE_SCHEMA.format("double")),
+        group_cell=tile * 8,
     )
+    if mass.isLocal():  # driver tier
+        mass = F.broadcast(mass)
+    out = wdf.join(mass, ["row", "col"], "left").withColumnRenamed("mass", "ext")
+    return out.groupBy("_tr", "_tc").applyInPandas(
+        kernel, "row long, col long, acc double"
+    ).select("row", "col", F.round("acc", decimals).cast("double").alias("accum"))
 
 
 # ---------------------------------------------------------------------------
@@ -1789,10 +1650,10 @@ def mass_flux_d8(cells: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
     pointer.  Unlike flow/FD8 accumulation the per-cell transfer is
     CLAMPED at zero, so the condensed linear-response shortcut does not
     apply; the plan is the tile-round exchange, _exchange_rounds (exact
-    tile-local Kahn solves + border mass exchange, converging in
-    tile-graph-depth rounds — each round propagates exact values one tile
-    level, so the float-equality convergence test terminates at the
-    fixpoint).  Output rounds to `decimals` (sum association differs
+    tile-local Kahn solves + border mass exchange; each round moves exact
+    values across one tile border, so the float-equality convergence test
+    terminates at the fixpoint after as many rounds as the longest flow
+    path crosses borders).  Output rounds to `decimals` (sum association differs
     across engines).
     """
     spark = cells.sparkSession
@@ -2470,8 +2331,7 @@ def stream_heads_mdinf(tiles: DataFrame, *, threshold: float = 30.0,
     Distributed shape: the truncated transport is NONLINEAR (per-cell mode
     switch), so like the clamped D8 mass flux it runs as the tile-round
     exchange, _exchange_rounds — exact in-tile Kahn solves, cross-tile
-    (mass, creek-marker) exchange, converging in tile-graph depth
-    rounds."""
+    (mass, creek-marker) exchange, one border crossing per round."""
     from .raster import explode_cells
 
     spark = tiles.sparkSession
