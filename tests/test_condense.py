@@ -99,6 +99,40 @@ def test_mfd_accum_distributed(spark, monkeypatch, op):
     assert want.equals(got)
 
 
+def test_solve_with_exits_blocks(monkeypatch):
+    """The weighted solve routes its unit-response columns in blocks under
+    condense._STATE_DOUBLES: every routed state stays under that budget,
+    and the masses and edge rows equal the one-block solve exactly."""
+    rng = np.random.default_rng(7)
+    n, e = 60, 240
+    node = np.stack([np.arange(n) // 8, np.arange(n) % 8])
+    src = rng.integers(0, n, e)
+    tgt = src + 1 + rng.integers(0, 5, e)  # forward only: acyclic
+    tgt[(tgt >= n) | (rng.random(e) < 0.2)] = -1
+    x = np.stack([100 + rng.integers(0, 4, e), rng.integers(0, 3, e)])
+    args = (node, rng.random(n) + 1.0, src, tgt, x, rng.random(e) / 4,
+            np.arange(0, n, 3), rng.random(n) / 10)
+    key = ["kind", "row", "col", "x_row", "x_col"]
+
+    def solve():
+        mass, rows = condense.solve_with_exits(*args)
+        return mass, rows.sort_values(key).reset_index(drop=True)
+
+    want_mass, want_rows = solve()
+    sizes, route = [], condense.route_linear
+
+    def spy(state, *a):
+        sizes.append(state.size)
+        route(state, *a)
+
+    monkeypatch.setattr(condense, "route_linear", spy)
+    monkeypatch.setattr(condense, "_STATE_DOUBLES", 4 * (n + 12))
+    got_mass, got_rows = solve()
+    assert len(sizes) > 1 and max(sizes) <= condense._STATE_DOUBLES
+    assert np.array_equal(got_mass, want_mass)
+    assert (want_rows["kind"] == 2).sum() > 0 and got_rows.equals(want_rows)
+
+
 def _fd8_oracle(z):
     """Sequential FD8 over the grid z: cells by decreasing elevation, each
     cell's mass split over its lower neighbors by drop / dist."""

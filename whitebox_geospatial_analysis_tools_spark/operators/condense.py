@@ -62,6 +62,7 @@ EDGE_SCHEMA = (  # graph_masses' edge rows; {} = val type
 _WHOLE_GRID = 1 << 62  # group cell that puts every node in one group
 _MAX_LEVELS = 24
 _MAX_ROUNDS = 64
+_STATE_DOUBLES = 1 << 22  # a weighted solve's dense working set (32 MB)
 
 
 def collect_guarded(df: DataFrame, scale: int = 1) -> pd.DataFrame | None:
@@ -140,7 +141,7 @@ def route_linear(state: np.ndarray, src: np.ndarray, tgt: np.ndarray,
     n = len(state)
     order = np.argsort(src, kind="stable")
     start = np.concatenate([[0], np.cumsum(np.bincount(src, minlength=n))])
-    step = max(1, (1 << 22) // state.shape[1])  # caps the temp at 32 MB
+    step = max(1, _STATE_DOUBLES // state.shape[1])  # caps the temp
 
     def send(nodes, into):
         cnt = start[nodes + 1] - start[nodes]
@@ -174,22 +175,46 @@ def route_linear(state: np.ndarray, src: np.ndarray, tgt: np.ndarray,
                 break
 
 
-def transit_rows(pr: np.ndarray, pc: np.ndarray, ex: np.ndarray,
-                 out: np.ndarray) -> pd.DataFrame:
-    """graph_masses edge rows of a weighted solve's exits: per exit target
-    (ex[0, i], ex[1, i]) one kind-1 carry of out[i, 0], and per node
-    (pr[k], pc[k]) a kind-2 forward with coefficient out[i, 1 + k] where
-    that response is nonzero."""
-    xi, k = np.nonzero(out[:, 1:])
-    null = np.full(len(out), -1, dtype=np.int64)
-    return pd.DataFrame({
-        "row": np.concatenate([null, pr[k]]),
-        "col": np.concatenate([null, pc[k]]),
-        "x_row": np.concatenate([ex[0], ex[0, xi]]),
-        "x_col": np.concatenate([ex[1], ex[1, xi]]),
-        "val": np.concatenate([out[:, 0], np.zeros(k.size)]),
-        "w": np.concatenate([np.zeros(len(out)), out[xi, 1 + k]]),
-        "kind": np.repeat(np.array([1, 2], dtype=np.int32), [len(out), k.size]),
+def solve_with_exits(node: np.ndarray, base: np.ndarray, src: np.ndarray,
+                     tgt: np.ndarray, x: np.ndarray, coef: np.ndarray,
+                     ps: np.ndarray, off: np.ndarray | None = None):
+    """Weighted solve (route_linear) of the nodes at cells ``node`` (2, n)
+    with mass ``base``; an edge src -> tgt with tgt < 0 leaves the node set
+    for the cell x[:, e], and each such cell is an exit, one more node that
+    only receives.  ``off`` as in route_linear.  Returns (mass, rows): the
+    nodes' masses and the exits as graph_masses edge rows — per exit a
+    kind-1 carry of the mass sent there, per node ps[k] a kind-2 forward
+    with each nonzero response of an exit to a unit inflow at ps[k].  The
+    response columns are routed in blocks, so the dense state stays under
+    _STATE_DOUBLES however long ``ps`` is."""
+    n = len(base)
+    out = tgt < 0
+    ex, xi = np.unique(x[:, out], axis=1, return_inverse=True)
+    tgt = tgt.copy()
+    tgt[out] = n + xi.reshape(-1)
+    m = n + ex.shape[1]
+    block = max(1, _STATE_DOUBLES // max(m, 1) - 1)
+    hit = []
+    for k0 in range(0, max(ps.size, 1), block):
+        cols = ps[k0:k0 + block]
+        state = np.zeros((m, 1 + cols.size))
+        state[cols, 1 + np.arange(cols.size)] = 1.0
+        state[:n, 0] = 0.0 if k0 else base  # the mass rides in block 0 only
+        route_linear(state, src, tgt, coef, None if k0 else off)
+        if k0 == 0:
+            mass, carry = state[:n, 0].copy(), state[n:, 0].copy()
+        i, k = np.nonzero(state[n:, 1:])
+        hit.append((i, k0 + k, state[n + i, 1 + k]))
+    i, k, w = (np.concatenate(a) for a in zip(*hit))
+    null = np.full(len(carry), -1, dtype=np.int64)
+    return mass, pd.DataFrame({
+        "row": np.concatenate([null, node[0, ps[k]]]),
+        "col": np.concatenate([null, node[1, ps[k]]]),
+        "x_row": np.concatenate([ex[0], ex[0, i]]),
+        "x_col": np.concatenate([ex[1], ex[1, i]]),
+        "val": np.concatenate([carry, np.zeros(k.size)]),
+        "w": np.concatenate([np.zeros(len(carry)), w]),
+        "kind": np.repeat(np.array([1, 2], dtype=np.int32), [len(carry), k.size]),
     })
 
 
@@ -206,7 +231,7 @@ def _group_kernel(group_cell: int, is_max: bool, weighted: bool,
     there.  On a functional graph that is one row per node: where its
     in-group chain exits the group, with accumulated chain weight.  On a
     weighted one it is one row per cross-group target the node reaches,
-    with its coefficient (route_linear)."""
+    with its coefficient (solve_with_exits)."""
     g = group_cell
 
     def kernel(key, pdf):
@@ -238,15 +263,11 @@ def _group_kernel(group_cell: int, is_max: bool, weighted: bool,
         null = np.int64(-1)
 
         if weighted:
-            ex, xi = np.unique(np.stack([fr[cross], fc[cross]]), axis=1,
-                               return_inverse=True)
             live = (tgt >= 0) | cross
-            tgt[cross] = n + xi.reshape(-1)
-            state = np.zeros((n + ex.shape[1], 1 + ps.size))
-            state[:n, 0] = base.to_numpy(np.float64)
-            state[ps, 1 + np.arange(ps.size)] = 1.0
-            route_linear(state, src[live], tgt[live], w[live])
-            thr = state[:n, 0]
+            thr, exits = solve_with_exits(
+                np.stack([rr, cc]), base.to_numpy(np.float64), src[live],
+                tgt[live], np.stack([fr, fc])[:, live], w[live], ps,
+            )
         else:
             thr = base.to_numpy(np.float64 if is_max else np.int64).copy()
             # at most one forward row per node: index the edges by node
@@ -266,8 +287,7 @@ def _group_kernel(group_cell: int, is_max: bool, weighted: bool,
         if not transit:
             return parts[0]
         if weighted:
-            return pd.concat([parts[0], transit_rows(rr[ps], cc[ps], ex, state[n:])],
-                             ignore_index=True)
+            return pd.concat([parts[0], exits], ignore_index=True)
 
         # transit: where each node's in-group chain ends, and its weight
         dest, dd = chain_ends(nxt, internal, wn)
@@ -327,7 +347,8 @@ def graph_masses(edges: DataFrame, *, group_cell: int,
     super-group, forward cross-group carries and each perimeter node's
     response to a unit inflow as a ~fanout-times smaller graph, recurse
     until the guard is met, then rerun each group with the solved external
-    inflow as one more carry.
+    inflow as one more carry.  A weighted group's dense state is bounded
+    (solve_with_exits); its response rows grow with its perimeter squared.
     """
     spark = edges.sparkSession
     vt = edges.schema["val"].dataType.simpleString()

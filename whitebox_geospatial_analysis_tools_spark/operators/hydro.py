@@ -88,7 +88,7 @@ from . import _scratch
 from .condense import DRIVER_ROWS as _MAX_DRIVER_ROWS  # noqa: F401
 from .condense import (
     EDGE_SCHEMA, chain_ends, chase_paths, collect_guarded, graph_masses,
-    min_label_roots, route_functional, route_linear, solve_links, transit_rows,
+    min_label_roots, route_functional, solve_links, solve_with_exits,
 )
 from .raster import (
     _OFFS, NODATA, by_tile, cell_rows, halo_rounds, stencil, tile_key, with_tiles,
@@ -1226,6 +1226,7 @@ def stream_network(pointers: DataFrame, threshold: int = 5, *,
 # FD8 multiple-flow-direction accumulation
 # ---------------------------------------------------------------------------
 _WS_SCHEMA = "row long, col long, ws array<double>"
+_MFD_GROUP = 512  # fd8_accum's level-0 group side: <= (4 * 512)^2 rows out
 
 
 def fd8_weights(tiles: DataFrame) -> DataFrame:
@@ -1396,21 +1397,15 @@ def _exchange_rounds(cells: DataFrame, kernel, schema: str, aggs: list, *,
 
 
 def _mfd_solve(tile: int, key, pdf: pd.DataFrame, resp: bool):
-    """The one MFD tile solve behind fd8_accum's two passes:
-    condense.route_linear over the tile's weighted flow edges.
-
-    State column 0 is the accumulation a(c) = load(c) + ext(c) + Σ
-    we(u->c) * (a(u) - absorp(u)) over in-tile upslope u (ext = 0 when the
-    column is absent).  With ``resp``, column 1+k is the response to a unit
-    inflow at perimeter slot k, the only cells that can receive cross-tile
-    mass; transfers are affine and the absorption offset applies only to
-    column 0, so the response columns carry the pure linear part.  Every
-    flow target that is not a tile cell (across the tile border, or
-    nodata) is one more node, an exit, that only receives.
-
-    Returns (rr, cc, slots, state, ex): the state rows past the cells are
-    the exits (ex[0], ex[1]), column 0 the mass sent there and the rest its
-    slot responses."""
+    """The one MFD tile solve behind fd8_accum's two passes
+    (condense.solve_with_exits over the tile's weighted flow edges): the
+    mass a(c) = load(c) + ext(c) + Σ we(u->c) * (a(u) - absorp(u)) over
+    in-tile upslope u (ext = 0 when absent).  Flow targets that are not
+    tile cells (across the border, or nodata) are exits; with ``resp``
+    their rows carry the responses to a unit inflow at each perimeter cell
+    (the only cells that receive cross-tile mass; the absorption offset is
+    affine, so it stays out of them).  Returns the exits' graph_masses edge
+    rows (pass 1, ``resp``) or the cells' (row, col, acc) (pass 2)."""
     r0, c0 = int(key[0]) * tile, int(key[1]) * tile
     rr = pdf["row"].to_numpy(np.int64)
     cc = pdf["col"].to_numpy(np.int64)
@@ -1433,18 +1428,14 @@ def _mfd_solve(tile: int, key, pdf: pd.DataFrame, resp: bool):
     inb = (t_lr >= 0) & (t_lr < h) & (t_lc >= 0) & (t_lc < w)
     tgt = np.full(src.size, -1, dtype=np.int64)
     tgt[inb] = gid[t_lr[inb], t_lc[inb]]
-    out = tgt < 0
-    ex, xi = np.unique(np.stack([r0 + t_lr[out], c0 + t_lc[out]]), axis=1,
-                       return_inverse=True)
-    tgt[out] = n + xi.reshape(-1)
     slots = np.flatnonzero(
         (lr == 0) | (lc == 0) | (lr == tile - 1) | (lc == tile - 1)
     ) if resp else np.zeros(0, np.int64)
-    state = np.zeros((n + ex.shape[1], 1 + slots.size))
-    state[:n, 0] = ld + ext
-    state[slots, 1 + np.arange(slots.size)] = 1.0
-    route_linear(state, src, tgt, we[src, j], ab)
-    return rr, cc, slots, state, ex
+    mass, rows = solve_with_exits(
+        np.stack([rr, cc]), ld + ext, src, tgt,
+        np.stack([r0 + t_lr, c0 + t_lc]), we[src, j], slots, ab,
+    )
+    return rows if resp else pd.DataFrame({"row": rr, "col": cc, "acc": mass})
 
 
 def fd8_accum(tiles: DataFrame, *, tile: int = TILE, decimals: int = 4,
@@ -1468,13 +1459,18 @@ def fd8_accum(tiles: DataFrame, *, tile: int = TILE, decimals: int = 4,
     call solves the border system m = b + C·m (O(grid/tile) unknowns; its
     driver or distributed tier, chosen there), and pass 2 reruns the tile
     solve with the exact inflows (broadcast in the driver tier).  Both
-    passes are the one tile solve, _mfd_solve.  The pass-1 response state
-    is a dense (cells × perimeter) matrix per tile — O(4·tile³) doubles,
-    ~67 MB at tile=128; cap MFD tiles at 128 on memory-tight executors (or
-    swap the state to float32/sparse) — pass 2 is O(cells).  The tiled
-    cells are persisted partitioned by tile (raster.with_tiles), so no pass
-    shuffles them again.  Output rounds to `decimals` (parent-sum
-    association differs between engines; error ~1e-13 relative)."""
+    passes are the one tile solve, _mfd_solve, whose response columns are
+    routed in blocks (condense.solve_with_exits): the dense state stays
+    under 32 MB at any tile.  What grows is the response rows: ~6 per cell
+    on a dispersive FD8 plane, ~1.6M per task in graph_masses' first level
+    (groups of _MFD_GROUP = 512 cells), and in each further level with the
+    square of its group perimeter.  Peak Python worker RSS at the default
+    tile on FD8 planes: ~300 MB at 1024² (driver tier), ~700 MB at 1024²
+    past a 100k guard, 2.3 GB at 1536² past the real guard (level 1: one
+    5.8M-row task).  The tiled cells are persisted partitioned by tile
+    (raster.with_tiles), so no pass shuffles them again.  Output rounds to
+    `decimals` (parent-sum association differs between engines; error
+    ~1e-13 relative)."""
     spark = tiles.sparkSession
     _scratch.release(spark, "fd8")
     wsrc = fd8_weights(tiles) if weights is None else weights
@@ -1483,24 +1479,18 @@ def fd8_accum(tiles: DataFrame, *, tile: int = TILE, decimals: int = 4,
                          ["row", "col"], "left")
     wdf = _scratch.track(spark, with_tiles(wsrc, tile).persist(), "fd8")
 
-    def kernel_resp(key, pdf):  # pass 1: base outflows + border responses
-        rr, cc, slots, state, ex = _mfd_solve(tile, key, pdf, resp=True)
-        return transit_rows(rr[slots], cc[slots], ex, state[len(rr):])
-
-    def kernel(key, pdf):  # pass 2: the cells under their solved inflows
-        rr, cc, _, state, _ = _mfd_solve(tile, key, pdf, resp=False)
-        return pd.DataFrame({"row": rr, "col": cc, "acc": state[:len(rr), 0]})
-
-    mass = graph_masses(
+    mass = graph_masses(  # pass 1: base outflows + border responses
         wdf.groupBy("_tr", "_tc").applyInPandas(
-            kernel_resp, EDGE_SCHEMA.format("double")),
-        group_cell=tile * 8,
+            lambda key, pdf: _mfd_solve(tile, key, pdf, True),
+            EDGE_SCHEMA.format("double")),
+        group_cell=tile * min(8, max(2, _MFD_GROUP // tile)),
     )
     if mass.isLocal():  # driver tier
         mass = F.broadcast(mass)
     out = wdf.join(mass, ["row", "col"], "left").withColumnRenamed("mass", "ext")
-    return out.groupBy("_tr", "_tc").applyInPandas(
-        kernel, "row long, col long, acc double"
+    return out.groupBy("_tr", "_tc").applyInPandas(  # pass 2: solved inflows
+        lambda key, pdf: _mfd_solve(tile, key, pdf, False),
+        "row long, col long, acc double",
     ).select("row", "col", F.round("acc", decimals).cast("double").alias("accum"))
 
 
