@@ -284,7 +284,8 @@ def _noop_plan(spark, df) -> str:
 
 def test_flow_accum_plan_reads_cached_cells(spark):
     """The executed plan of a noop write of flow_accum: pass B is the only
-    FlatMapGroupsInPandas above the cache, reading the persisted tiled
+    Python node (raster.tile_map's MapInArrow) above the cache, reading the
+    persisted tiled
     pointer cells through an InMemoryTableScan (the pointer kernel is not
     rerun) with no shuffle (the cells are cached partitioned by tile), and
     nothing filters pass B's output."""
@@ -292,8 +293,8 @@ def test_flow_accum_plan_reads_cached_cells(spark):
         flow_pointer_d8(R.synth_raster(spark, 96, 128)), tile=32))
     assert "InMemoryRelation" in plan
     above = plan[:plan.index("InMemoryRelation")]
-    assert above.count("FlatMapGroupsInPandas") == 1
-    assert above.index("InMemoryTableScan") > above.index("FlatMapGroupsInPandas")
+    assert above.count("MapInArrow") == 1
+    assert above.index("InMemoryTableScan") > above.index("MapInArrow")
     assert re.search(r"InMemoryTableScan\nOutput \[5\]: \[row#\d+L, col#\d+L, "
                      r"code#\d+L, _tr#\d+L, _tc#\d+L\]", plan)
     assert "Filter" not in above
@@ -304,7 +305,8 @@ def test_fd8_accum_plan_reads_cached_cells(spark):
     """The executed plan of a noop write of fd8_accum's driver tier: its
     output pass reads the persisted tiled weight cells, hash-partitioned by
     tile as an explicit-count repartition, through an InMemoryTableScan
-    with no shuffle above it (the inflow table arrives by broadcast)."""
+    with no shuffle above it (the inflow table arrives by broadcast): one
+    Python node (raster.tile_map's MapInArrow) above the cache."""
     from whitebox_geospatial_analysis_tools_spark.operators.hydro import fd8_accum
 
     plan = _noop_plan(spark, fd8_accum(R.synth_raster(spark, 96, 128), tile=32))
@@ -313,23 +315,28 @@ def test_fd8_accum_plan_reads_cached_cells(spark):
     assert re.search(r"hashpartitioning\(_tr#\d+L, _tc#\d+L, " + n
                      + r"\), REPARTITION_BY_NUM", plan)
     above = plan[:plan.index("InMemoryRelation")]
-    assert above.count("FlatMapGroupsInPandas") == 1
-    assert above.index("InMemoryTableScan") > above.index("FlatMapGroupsInPandas")
+    assert above.count("MapInArrow") == 1
+    assert above.index("InMemoryTableScan") > above.index("MapInArrow")
     assert not re.search(r"(?<!Broadcast)Exchange", above)
 
 
 def test_focal_groups_one_task_per_shuffle_partition(spark):
-    """focal's FlatMapGroupsInPandas reads the halo rows hash-partitioned
-    by (dst_row, dst_col) into the session's shuffle partitions as an
-    explicit-count repartition, which AQE does not coalesce into one
-    Python task."""
+    """focal's and clump's Python nodes (raster.tile_map's MapInArrow)
+    read their rows hash-partitioned by tile, (dst_row, dst_col) and
+    (_tr, _tc), into the session's shuffle partitions as an explicit-count
+    repartition, which AQE does not coalesce into one Python task."""
     n = spark.conf.get("spark.sql.shuffle.partitions")
-    plan = _noop_plan(spark, R.focal(R.synth_raster(spark, 96, 128), "mean"))
-    assert plan.count("FlatMapGroupsInPandas") >= 1
-    assert re.search(r"hashpartitioning\(dst_row#\d+L, dst_col#\d+L, "
-                     + n + r"\), REPARTITION_BY_NUM", plan)
-    assert "ENSURE_REQUIREMENTS" not in plan  # the groupBy adds no shuffle
-    assert "AQEShuffleRead" not in plan
+    tiles = R.synth_raster(spark, 96, 128)
+    cells = (R.explode_cells(tiles).where(F.col("value") != R.NODATA)
+             .select("row", "col",
+                     F.expr("CAST(FLOOR(value / 50e0) AS BIGINT)").alias("cls")))
+    for plan, keys in ((_noop_plan(spark, R.focal(tiles, "mean")), ("dst_row", "dst_col")),
+                       (_noop_plan(spark, clump(cells, 128, tile=32)), ("_tr", "_tc"))):
+        assert plan.count("MapInArrow") >= 1
+        assert re.search(rf"hashpartitioning\({keys[0]}#\d+L, {keys[1]}#\d+L, "
+                         + n + r"\), REPARTITION_BY_NUM", plan)
+        assert "ENSURE_REQUIREMENTS" not in plan  # the tile pass adds no shuffle
+        assert "AQEShuffleRead" not in plan
 
 
 def test_tile_kernel_stop_mask_without_downcast():

@@ -54,8 +54,9 @@ def test_worker_daemon_keeps_zip_directories(spark):
 
 
 def test_tile_kernels_build_without_type_hint_warning(spark):
-    """Every applyInPandas kernel leaves its arguments unannotated, so
-    pyspark keeps the grouped-map eval type without trying (and warning
+    """The tile kernels (raster.tile_map's mapInArrow, whose eval type is
+    fixed) and the zonal applyInPandas kernels, which leave their
+    arguments unannotated, build without pyspark trying (and warning
     about) type-hint inference.  flow_accum's build runs its eager jobs."""
     tiles = R.synth_raster(spark, 96, 128)
     cells = (R.explode_cells(tiles).where(F.col("value") != R.NODATA)

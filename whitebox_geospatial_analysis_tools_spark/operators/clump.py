@@ -8,10 +8,10 @@ Distributed formulation (round-2 rebuild): TILE-LOCAL labeling + a tiny
 cross-tile equivalence merge — exactly two Spark passes, independent of
 component diameter:
 
-  1. one ``applyInPandas`` per tile runs a vectorized min-label/pointer-jump
-     connected-component pass over the dense tile grid (numpy, Arrow batch)
-     and emits a provisional label = min flat cell id of the TILE-LOCAL
-     component;
+  1. raster.tile_map (one Python call per partition) runs, per tile, a
+     vectorized min-label/pointer-jump connected-component pass over the
+     dense tile grid (numpy) and emits a provisional label = min flat cell
+     id of the TILE-LOCAL component;
   2. border cells (a 1-cell strip per tile edge — O(N/tile) rows) join
      across tile boundaries to produce provisional-label equivalence pairs;
   3. the equivalence graph is √N-sized (perimeter cells only); its min-id
@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from . import _scratch
 from .condense import merge_labels, min_label_roots
-from .raster import tile_key
+from .raster import tile_key, tile_map
 
 _OFFS4 = [(-1, 0), (1, 0), (0, -1), (0, 1)]
 _OFFS8 = _OFFS4 + [(-1, -1), (-1, 1), (1, -1), (1, 1)]
@@ -111,9 +111,8 @@ def clump(cells: DataFrame, cols: int, *, connectivity: int = 4,
             "plabel": plabel,
         })
 
-    lab = base.groupBy("_tr", "_tc").applyInPandas(
-        kernel, "row long, col long, cls long, plabel long"
-    )
+    lab = tile_map(base, ["_tr", "_tc"], kernel,
+                   "row long, col long, cls long, plabel long")
     # persist: the tile kernel output feeds both the equivalence-pair
     # materialization and the final relabel join (scratch-tracked, released
     # on the next operator call — VERDICT r1 persist-leak fix)
@@ -224,11 +223,8 @@ def components_from_edges(nodes, edges, *, idmul: int = 1_000_000,
         })
 
     spark = nodes.sparkSession
-    lab = (
-        n.unionByName(e_in)
-        .groupBy("_tr", "_tc")
-        .applyInPandas(kernel, "row long, col long, plabel long")
-    )
+    lab = tile_map(n.unionByName(e_in), ["_tr", "_tc"], kernel,
+                   "row long, col long, plabel long")
     _scratch.release(spark, "cc_edges")
     lab = _scratch.track(spark, lab.persist(), "cc_edges")
     la = lab.select(F.col("row").alias("_ar"), F.col("col").alias("_ac"),

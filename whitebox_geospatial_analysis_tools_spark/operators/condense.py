@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import _scratch
+from .raster import tile_map
 
 DRIVER_ROWS = 5_000_000  # the one driver-tier guard (condensed rows)
 
@@ -313,12 +314,15 @@ def _group_kernel(group_cell: int, is_max: bool, weighted: bool,
     return kernel
 
 
-def _grouped(edges: DataFrame, g: int) -> DataFrame:
-    """Key each edge row by the group of the node it describes: a carry by
-    its target's group, a forward by its own."""
+def _grouped(edges: DataFrame, g: int, kernel, schema: str) -> DataFrame:
+    """``kernel`` over each group's edge rows (raster.tile_map), keyed
+    (_gr, _gc) by the group of the node a row describes: a carry by its
+    target's group, a forward by its own."""
     kr = F.when(F.col("kind") == 1, F.col("x_row")).otherwise(F.col("row"))
     kc = F.when(F.col("kind") == 1, F.col("x_col")).otherwise(F.col("col"))
-    return edges.groupBy((kr / g).cast("long"), (kc / g).cast("long"))
+    keyed = edges.select("*", (kr / g).cast("long").alias("_gr"),
+                         (kc / g).cast("long").alias("_gc"))
+    return tile_map(keyed, ["_gr", "_gc"], kernel, schema)
 
 
 def graph_masses(edges: DataFrame, *, group_cell: int,
@@ -344,10 +348,11 @@ def graph_masses(edges: DataFrame, *, group_cell: int,
     Both tiers run the same group kernel.  Edge rows under the driver guard
     are collected once and solved as one group on the driver into a local
     table (no further Spark job).  Past the guard: solve per spatial
-    super-group, forward cross-group carries and each perimeter node's
-    response to a unit inflow as a ~fanout-times smaller graph, recurse
-    until the guard is met, then rerun each group with the solved external
-    inflow as one more carry.  A weighted group's dense state is bounded
+    super-group (raster.tile_map: one Python call per partition), forward
+    cross-group carries and each perimeter node's response to a unit
+    inflow as a ~fanout-times smaller graph, recurse until the guard is
+    met, then rerun each group with the solved external inflow as one more
+    carry.  A weighted group's dense state is bounded
     (solve_with_exits); its response rows grow with its perimeter squared.
     """
     spark = edges.sparkSession
@@ -371,8 +376,7 @@ def graph_masses(edges: DataFrame, *, group_cell: int,
     schema = EDGE_SCHEMA.format(vt)
     pass_a = _scratch.track(
         spark,
-        _grouped(edges, g).applyInPandas(_group_kernel(g, is_max, weighted),
-                                         schema).persist(),
+        _grouped(edges, g, _group_kernel(g, is_max, weighted), schema).persist(),
         tag,
     )
     mass2 = graph_masses(
@@ -386,9 +390,8 @@ def graph_masses(edges: DataFrame, *, group_cell: int,
         F.col("mass").alias("val"), F.lit(0.0).alias("w"),
         F.lit(1).alias("kind"),
     )
-    pass_b = _grouped(edges.unionByName(inflow), g).applyInPandas(
-        _group_kernel(g, is_max, weighted, False), schema
-    )
+    pass_b = _grouped(edges.unionByName(inflow), g,
+                      _group_kernel(g, is_max, weighted, False), schema)
     return pass_b.select("row", "col", F.col("val").alias("mass"))
 
 

@@ -19,15 +19,20 @@ block cache + edge handling, WhiteboxRaster.java:536-553).
 
 At 100 TB the tile table is partitioned by (tile_row bucket); every op here
 is either a narrow map over tiles or an equi-join on tile keys — no
-all-to-all shuffles, no Python except the stencil kernels (Arrow-batched).
+all-to-all shuffles.  Python runs only in the tile-layer kernels, and each
+of them runs through ``tile_map``: one Arrow stream per partition, cut into
+its tiles in the worker.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions.exprs import A, C, D, M
 
@@ -63,15 +68,11 @@ def synth_raster(spark: SparkSession, rows: int, cols: int, band: int = 0,
     """
     tr = (rows + tile - 1) // tile
     tc = (cols + tile - 1) // tile
-    df = spark.range(tr * tc).select(
-        (F.col("id") % tc).alias("tile_col"),
-        (F.col("id") / tc).cast("long").alias("tile_row"),
-    )
-    df = (
-        df.withColumn("row0", F.col("tile_row") * tile)
-        .withColumn("col0", F.col("tile_col") * tile)
-        .withColumn("h", F.least(F.lit(tile), F.lit(rows) - F.col("row0")).cast("int"))
-        .withColumn("w", F.least(F.lit(tile), F.lit(cols) - F.col("col0")).cast("int"))
+    df = spark.range(tr * tc).selectExpr(
+        f"id div {tc} AS tile_row", f"id % {tc} AS tile_col",
+        f"id div {tc} * {tile} AS row0", f"id % {tc} * {tile} AS col0",
+        f"CAST(least({tile}, {rows} - id div {tc} * {tile}) AS INT) AS h",
+        f"CAST(least({tile}, {cols} - id % {tc} * {tile}) AS INT) AS w",
     )
     if value_sql is None:
         val = cell_value_sql(
@@ -81,12 +82,12 @@ def synth_raster(spark: SparkSession, rows: int, cols: int, band: int = 0,
         val = value_sql.format(
             row="(row0 + CAST(floor(i / w) AS BIGINT))", col="(col0 + i % w)"
         )
-    return df.select(
-        F.lit(raster_id).alias("raster_id"),
-        F.lit(band).alias("band"),
+    rid = raster_id.replace("\\", "\\\\").replace("'", "\\'")  # SQL string literal
+    return df.selectExpr(
+        f"'{rid}' AS raster_id", f"CAST({band} AS INT) AS band",
         "tile_row", "tile_col", "row0", "col0", "h", "w",
-        F.expr(f"transform(sequence(0, h * w - 1), i -> {val})").alias("values"),
-        F.lit(NODATA).alias("nodata"),
+        f"transform(sequence(0, h * w - 1), i -> {val}) AS values",
+        f"{D(NODATA)} AS nodata",
     )
 
 
@@ -192,7 +193,7 @@ def by_tile(df: DataFrame, *keys: str) -> DataFrame:
     ``spark.sql.shuffle.partitions``.  AQE never coalesces a repartition
     with an explicit count, so a tile stage gets one Python task per
     partition instead of one for the whole (small) shuffle, and a
-    ``groupBy(*keys)`` above it adds no Exchange."""
+    ``tile_map`` above it adds no Exchange."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *keys)
 
@@ -212,6 +213,61 @@ def with_tiles(cells: DataFrame, tile: int) -> DataFrame:
     )
 
 
+def _key_runs(batches, keys):
+    """Cut a stream of record ``batches`` sorted on the non-null ``keys``
+    columns into runs of one key.  Yields, per non-empty batch, the
+    ``[(key, [batch slices])]`` runs it completes: its trailing run is
+    carried into the next batch (a run may span several) and completed by
+    the first row with another key, or by the end of the stream."""
+    key, run = None, []
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        cols = [b.column(k).to_numpy(zero_copy_only=False) for k in keys]
+        cut = np.zeros(b.num_rows, dtype=bool)
+        for v in cols:
+            cut[1:] |= v[1:] != v[:-1]
+        bounds = [0, *np.flatnonzero(cut).tolist(), b.num_rows]
+        done = []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            k = tuple(v[lo].item() for v in cols)
+            if run and k != key:
+                done.append((key, run))
+                run = []
+            key = k
+            run.append(b.slice(lo, hi - lo))
+        yield done
+    if run:
+        yield [(key, run)]
+
+
+def _map_runs(batches, keys, fn, arrow: pa.Schema):
+    """The worker side of tile_map: ``fn(key, pdf)`` once per key run of
+    ``batches`` (_key_runs), on a frame with a fresh RangeIndex.  Results
+    with no columns are skipped; the others are assigned to ``arrow`` by
+    column name, with the unchecked casts of Spark's default
+    (``convertToArrowArraySafely`` off), and yielded as one batch per input
+    batch."""
+    for runs in _key_runs(batches, keys):
+        outs = [fn(k, pa.Table.from_batches(part).to_pandas()) for k, part in runs]
+        outs = [pa.Table.from_pandas(o, schema=arrow, preserve_index=False, safe=False)
+                for o in outs if len(o.columns)]
+        if outs:
+            yield from pa.concat_tables(outs).combine_chunks().to_batches()
+
+
+def tile_map(df: DataFrame, keys, fn, schema: str) -> DataFrame:
+    """pandas grouped map ``fn`` over ``df.groupBy(*keys)``, with one Python
+    call per partition instead of one per group: the one grouped-Python
+    entry point of the tile layer.  ``df`` is partitioned by its ``keys``
+    (by_tile; free on a frame that already is, such as with_tiles output),
+    sorted within each partition and streamed through ``mapInArrow``
+    (_map_runs), so a worker holds one input batch plus one group."""
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
+    return (by_tile(df, *keys).sortWithinPartitions(*keys)
+            .mapInArrow(lambda batches: _map_runs(batches, keys, fn, arrow), schema))
+
+
 def halo_rounds(state: DataFrame, kernel, schema: str, *, tile: int,
                 max_rounds: int, what: str) -> DataFrame:
     """Iterate tile-local solves over ``state`` (row, col and the value
@@ -224,8 +280,8 @@ def halo_rounds(state: DataFrame, kernel, schema: str, *, tile: int,
     its off-tile 8-neighbors (``is_ext`` true; an edge cell reaches the
     tile across that edge once per neighbor there, up to three copies,
     which a min-style relaxation ignores), unions it with the own
-    rows (``is_ext`` false), groups by tile (by_tile: one task per shuffle
-    partition) and calls ``kernel(key, pdf)`` once per tile holding own
+    rows (``is_ext`` false), and calls ``kernel(key, pdf)`` (tile_map: one
+    Python call per shuffle partition) once per tile holding own
     cells.  The kernel returns its own cells with the state's value
     columns (``schema``) and ``changed`` (1 where the estimate moved); the
     tile key is added back here.  localCheckpoint cuts each round's
@@ -261,12 +317,8 @@ def halo_rounds(state: DataFrame, kernel, schema: str, *, tile: int,
             .where((F.col("_tr") != F.col("_otr")) | (F.col("_tc") != F.col("_otc")))
             .select(*vals, "_tr", "_tc", F.lit(True).alias("is_ext"))
         )
-        new_state = (
-            by_tile(own.unionByName(halo), "_tr", "_tc")
-            .groupBy("_tr", "_tc")
-            .applyInPandas(solve, f"{schema}, _tr long, _tc long")
-            .localCheckpoint()
-        )
+        new_state = tile_map(own.unionByName(halo), ["_tr", "_tc"], solve,
+                             f"{schema}, _tr long, _tc long").localCheckpoint()
         n_changed = new_state.agg(F.sum("changed")).collect()[0][0] or 0
         state.unpersist()
         state = new_state
@@ -280,29 +332,16 @@ def _halo_contributions(tiles: DataFrame) -> DataFrame:
     neighbors' groups (1-cell border strips) — the Spark analogue of the
     reference's block cache reading across block borders
     (WhiteboxRaster.java:483-553), shipping only what a 3x3 window reads.
-    The rows come back already partitioned by (dst_row, dst_col)
-    (by_tile), which stencil's ``groupBy`` reuses."""
+    One projection: ``inline`` over the nine strip structs, each with its
+    destination tile (dst_row, dst_col) and its direction seen from there
+    (rel_r, rel_c)."""
     structs = ", ".join(
-        f"struct(CAST({ddr} AS INT) AS ddr, CAST({ddc} AS INT) AS ddc, "
+        f"struct(tile_row + {ddr} AS dst_row, tile_col + {ddc} AS dst_col, "
+        f"CAST({-ddr} AS INT) AS rel_r, CAST({-ddc} AS INT) AS rel_c, "
         f"{strip} AS strip, CAST({sh} AS INT) AS sh, CAST({sw} AS INT) AS sw)"
         for ddr, ddc, strip, sh, sw in _STRIPS
     )
-    contrib = (
-        tiles.select(
-            "tile_row", "tile_col", "row0", "col0", "h", "w",
-            F.explode(F.expr(f"array({structs})")).alias("_s"),
-        )
-        .select(
-            (F.col("tile_row") + F.col("_s.ddr")).alias("dst_row"),
-            (F.col("tile_col") + F.col("_s.ddc")).alias("dst_col"),
-            (-F.col("_s.ddr")).alias("rel_r"),
-            (-F.col("_s.ddc")).alias("rel_c"),
-            F.col("_s.strip").alias("strip"),
-            F.col("_s.sh").alias("sh"), F.col("_s.sw").alias("sw"),
-            "row0", "col0", "h", "w",
-        )
-    )
-    return by_tile(contrib, "dst_row", "dst_col")
+    return tiles.select(F.inline(F.expr(f"array({structs})")), "row0", "col0", "h", "w")
 
 
 def _assemble_pad(pdf: pd.DataFrame):
@@ -330,19 +369,18 @@ def _assemble_pad(pdf: pd.DataFrame):
 def stencil(tiles: DataFrame, fn, schema: str) -> DataFrame:
     """The one 3x3 halo pass over a tile table: ship each tile's 1-cell
     border strips to its 8 neighbors (_halo_contributions), group by
-    destination tile, rebuild the nan-padded window (_assemble_pad; nodata
-    -> nan) and return ``fn(c, pad)`` for every tile with cells of its own.
-    ``c`` carries the tile's row0, col0, h, w and (dst_row, dst_col) = its
-    (tile_row, tile_col); ``pad`` is (h+2, w+2), the tile at [1:h+1, 1:w+1].
-    ``fn`` returns a pandas frame of ``schema``; groups that are only
+    destination tile (tile_map), rebuild the nan-padded window
+    (_assemble_pad; nodata -> nan) and return ``fn(c, pad)`` for every tile
+    with cells of its own.  ``c`` carries the tile's row0, col0, h, w and
+    (dst_row, dst_col) = its (tile_row, tile_col); ``pad`` is (h+2, w+2),
+    the tile at [1:h+1, 1:w+1].  ``fn`` returns a pandas frame of ``schema``; groups that are only
     spill-over past the grid edge return no rows."""
 
     def kernel(key, pdf):
         asm = _assemble_pad(pdf)
         return pd.DataFrame() if asm is None else fn(*asm)
 
-    return (_halo_contributions(tiles).groupBy("dst_row", "dst_col")
-            .applyInPandas(kernel, schema))
+    return tile_map(_halo_contributions(tiles), ["dst_row", "dst_col"], kernel, schema)
 
 
 def cell_rows(c, keep, **cols) -> pd.DataFrame:
