@@ -12,6 +12,7 @@ import re
 import time
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -395,10 +396,76 @@ def test_mass_flux_tile_invariance(spark):
     assert a.equals(b)
 
 
+def _mass_flux_oracle(code, load, eff, absorp):
+    """Sequential numpy MassFluxD8 for a grid whose every pointer steps one
+    row down (S, SW or SE): rows in order are a topological order."""
+    acc = load.copy()
+    rows, cols = code.shape
+    for r in range(rows - 1):
+        for c in range(cols):
+            j = int(np.log2(code[r, c]))
+            dr, dc, _ = D8_OFFS[j]
+            if 0 <= c + dc < cols:
+                acc[r + dr, c + dc] += max(0.0, (acc[r, c] - absorp[r, c]) * eff[r, c])
+    return acc
+
+
+def _mass_flux_cells(spark, code, eff, absorp):
+    """(cells frame, (load, eff, absorp)) with load 1."""
+    rows, cols = code.shape
+    r, c = np.mgrid[0:rows, 0:cols]
+    load = np.ones((rows, cols))
+    pdf = pd.DataFrame({
+        "row": r.ravel(), "col": c.ravel(), "code": code.ravel(),
+        "load": load.ravel(), "eff": eff.ravel(), "absorp": absorp.ravel(),
+    })
+    return spark.createDataFrame(pdf), (load, eff, absorp)
+
+
+def test_mass_flux_zigzag_crosses_a_border_per_row(spark):
+    """Columns 15 and 16 alternate SE/SW on every row (all other cells point
+    S), so at tile=16 two paths cross the tile border between them once per
+    row, 39 times: halo_rounds moves mass one border per round and still
+    converges under its cap, equal to the one-tile solve and to a
+    sequential oracle."""
+    from whitebox_geospatial_analysis_tools_spark.operators.hydro import mass_flux_d8
+
+    rows, cols = 40, 32
+    code = np.full((rows, cols), 64, dtype=np.int64)           # S
+    code[:, 15], code[:, 16] = 128, 32                          # SE, SW
+    # absorp < load on the zigzag (no clamp cuts it), up to 2.25 elsewhere
+    r, c = np.mgrid[0:rows, 0:cols]
+    absorp = ((r * 3 + c) % 4) * np.where((c == 15) | (c == 16), 0.25, 0.75)
+    cells, fields = _mass_flux_cells(spark, code, (8 + (r + c) % 8) / 16.0, absorp)
+    a, b = (mass_flux_d8(cells, tile=t).toPandas().sort_values(["row", "col"])
+            .reset_index(drop=True) for t in (16, 256))
+    assert len(a) == rows * cols and a.equals(b)
+    acc = np.full((rows, cols), np.nan)
+    acc[a["row"], a["col"]] = a["flux"]
+    # the output rounds to 4 decimals
+    np.testing.assert_allclose(acc, _mass_flux_oracle(code, *fields), rtol=0, atol=5e-5 + 1e-9)
+
+
+def test_mass_flux_stops_at_the_round_cap(spark):
+    """A straight path crossing more tile borders than halo_rounds' cap
+    (139 rows at tile=2: 69 borders, HALO_ROUNDS = 64) raises the error
+    naming the operator and the cap instead of returning a partial flux.
+    eff = 1 keeps every upstream cell's mass visible at the outlet (with
+    eff < 1 its share falls below a float ulp and the rounds stop early)."""
+    from whitebox_geospatial_analysis_tools_spark.operators.hydro import mass_flux_d8
+
+    assert R.HALO_ROUNDS < 69
+    cells, _ = _mass_flux_cells(spark, np.full((139, 1), 64, dtype=np.int64),
+                                np.ones((139, 1)), np.zeros((139, 1)))
+    cap = f"mass_flux_d8 did not converge in {R.HALO_ROUNDS} rounds"
+    with pytest.raises(RuntimeError, match=cap):
+        mass_flux_d8(cells, tile=2)
+
+
 def test_stream_heads_mdinf_tile_invariance(spark):
     """The truncated-MDInf creek dynamics must be independent of the tile
-    decomposition: the cross-tile (mass, creek-marker) exchange at tile=16
-    reproduces the single-tile solve exactly, including the head flags."""
+    decomposition: the halo rounds' (mass, creek-marker) sends at tile=16
+    reproduce the single-tile solve exactly, including the head flags."""
     from whitebox_geospatial_analysis_tools_spark.operators import raster as R
     from whitebox_geospatial_analysis_tools_spark.operators.hydro import (
         stream_heads_mdinf,

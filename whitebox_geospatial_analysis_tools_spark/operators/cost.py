@@ -3,14 +3,15 @@
 grid, step cost = (cost(u) + cost(v)) / 2 * dist (diagonals sqrt(2)) — the
 reference's cell-to-cell cost model.
 
-Distributed formulation: raster.halo_rounds, the halo-round loop shared
-with priority-flood filling (operators/hydro.py fill_depressions): sources
-start at 0, everything else +inf; each round ships the 1-cell border halo
-of the current estimates and re-runs a sequential Dijkstra per tile given
-those boundary values.  Estimates decrease monotonically to the global
-shortest path in O(tile-graph diameter) rounds.  Both engines accumulate
-each path's sum in path order, so values match the oracle's Jacobi
-relaxation bit-for-bit (round 6 guards the min over float-tied paths).
+Distributed formulation: raster.halo_rounds, the one fixpoint round loop
+of the tile layer (shared with operators/hydro.py fill_depressions,
+mass_flux_d8 and stream_heads_mdinf): sources start at 0, everything else
++inf; each round ships the 1-cell border halo of the current estimates and
+re-runs a sequential Dijkstra per tile given those boundary values.
+Estimates decrease monotonically to the global shortest path in
+O(tile-graph diameter) rounds.  Both engines accumulate each path's sum in
+path order, so values match the oracle's Jacobi relaxation bit-for-bit
+(round 6 guards the min over float-tied paths).
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ _NOSRC = np.int64(2) ** 62  # allocation sentinel for unreached cells
 
 
 def cost_distance(cells: DataFrame, *, tile: int = 256,
-                  max_rounds: int = 64, alloc: bool = False) -> DataFrame:
+                  alloc: bool = False) -> DataFrame:
     """cells: (row, col, cost, is_src boolean) — non-nodata cells.
 
     Returns (row, col, cdist): least accumulated cost to any source.
@@ -103,23 +104,21 @@ def cost_distance(cells: DataFrame, *, tile: int = 256,
 
     state = halo_rounds(
         state, kernel, "row long, col long, cost double, cdist double, "
-        "alloc long, changed int", tile=tile, max_rounds=max_rounds,
-        what="cost_distance",
+        "alloc long, changed int", tile=tile, what="cost_distance",
     )
     if alloc:
         return state.select("row", "col", "cdist", "alloc")
     return state.select("row", "col", "cdist")
 
 
-def cost_allocation(cells: DataFrame, *, tile: int = 256,
-                    max_rounds: int = 64) -> DataFrame:
+def cost_allocation(cells: DataFrame, *, tile: int = 256) -> DataFrame:
     """(row, col, alloc): nearest-by-accumulated-cost source per cell
     (GISTools/src/plugins/CostAllocation.java:311)."""
-    return cost_distance(cells, tile=tile, max_rounds=max_rounds, alloc=True)
+    return cost_distance(cells, tile=tile, alloc=True)
 
 
-def cost_pathway(cells: DataFrame, dests: DataFrame, *, tile: int = 256,
-                 max_rounds: int = 64) -> DataFrame:
+def cost_pathway(cells: DataFrame, dests: DataFrame, *,
+                 tile: int = 256) -> DataFrame:
     """(row, col): cells on the least-cost path from each destination back
     to its source (GISTools/src/plugins/CostPathway.java:277).
 
@@ -129,7 +128,7 @@ def cost_pathway(cells: DataFrame, dests: DataFrame, *, tile: int = 256,
     strictly descends to a source (cdist = 0).  The pointer table collects
     to the driver under the usual guard (paths are output-sized); beyond it
     the walk runs as frontier rounds over a walker-sized frame."""
-    acc = cost_distance(cells, tile=tile, max_rounds=max_rounds)
+    acc = cost_distance(cells, tile=tile)
     base = cells.select("row", "col", "cost").join(acc, ["row", "col"])
     offs_arr = F.array(*[
         F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc")) for dr, dc in _OFFS8

@@ -63,12 +63,11 @@ either tier.
 Every tile pass here keys its cells with raster.tile_key, almost always
 through raster.with_tiles (keyed and partitioned by tile);
 breach_depressions partitions its own+halo union once instead.  The
-solvers that iterate tile-local solves to a fixpoint share two round
-loops: fill_depressions (like cost.cost_distance) relaxes over
-raster.halo_rounds, a 1-cell border halo exchange; mass_flux_d8 and
-stream_heads_mdinf, which are not linear in their inflows, iterate
-_exchange_rounds, a cross-tile inflow table collected to the driver and
-broadcast into the next solve.
+solvers that iterate tile-local solves to a fixpoint share one round
+loop, raster.halo_rounds (a 1-cell border halo exchange, fully
+distributed): fill_depressions (like cost.cost_distance) relaxes over
+it, and mass_flux_d8 and stream_heads_mdinf, which are not linear in
+their inflows, re-solve each tile from its halo cells' last values.
 
 Direction codes here are 2^j over the fixed neighbor order
 (NW,N,NE,W,E,SW,S,SE); j differs from the reference's rosette layout but the
@@ -91,7 +90,7 @@ from .condense import (
     min_label_roots, route_functional, solve_links, solve_with_exits,
 )
 from .raster import (
-    _OFFS, NODATA, cell_rows, halo_rounds, stencil, tile_key, tile_map, with_tiles,
+    _OFFS, cell_rows, halo_rounds, stencil, tile_key, tile_map, with_tiles,
 )
 
 _SQRT2 = 1.4142135623730951
@@ -530,7 +529,7 @@ _OFFS8 = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
 
 
 def fill_depressions(cells: DataFrame, rows: int, cols: int, *,
-                     tile: int = TILE, max_rounds: int = 64) -> DataFrame:
+                     tile: int = TILE) -> DataFrame:
     """FillDepressions (HydroTools/src/plugins/FillDepressions.java, 416;
     BreachDepressionsFast.java:759 is the breach variant): filled(c) =
     max(dem(c), min over 8-connected paths to an open cell of the path's
@@ -637,7 +636,7 @@ def fill_depressions(cells: DataFrame, rows: int, cols: int, *,
 
     state = halo_rounds(
         state, kernel, "row long, col long, dem double, seed boolean, "
-        "filled double, changed int", tile=tile, max_rounds=max_rounds,
+        "filled double, changed int", tile=tile,
         what="fill_depressions",
     )
     out = state.select("row", "col", "filled")
@@ -1351,48 +1350,6 @@ def mass_flux_dinf(tiles: DataFrame, fields: DataFrame, *, tile: int = TILE,
     ).withColumnRenamed("accum", "flux")
 
 
-def _exchange_rounds(cells: DataFrame, kernel, schema: str, aggs: list, *,
-                     max_rounds: int, what: str) -> DataFrame:
-    """Iterate exact tile-local solves over ``cells`` (raster.with_tiles,
-    persisted) to the fixpoint of their cross-tile inflows; returns the
-    last round's kernel output.
-
-    ``kernel(key, pdf)`` returns its cells as ``kind == 0`` rows and each
-    mass it sends across a tile border as a ``kind == 1`` row keyed by the
-    receiving cell (x_row, x_col).  Each round runs ONE solve over the
-    cells with the previous round's inflow table left-joined in (columns
-    named by ``aggs``, null = none yet), then reduces the kind-1 rows with
-    ``aggs`` per receiving cell, keeps the receivers that are cells (mass
-    leaving the grid or landing on nodata reaches no cell, which lets
-    shallow tile graphs stop a round earlier) and collects them, sorted, to
-    the driver.  That table is broadcast into every solve anyway, so it
-    must fit on the driver already.  The loop stops when no mass crosses a
-    border or the table equals the previous round's: the last solve then
-    ran on the inflows it reproduces.  Each round moves mass across one
-    tile border, so rounds = border crossings on the longest flow path
-    (a path that zigzags along a tile border crosses it again and again);
-    it relies on no monotonicity (stream_heads_mdinf switches mode per
-    cell)."""
-    spark = cells.sparkSession
-    inp, ext = cells, None
-    for _ in range(max_rounds):
-        res = tile_map(inp, ["_tr", "_tc"], kernel, schema).localCheckpoint()
-        new = (
-            res.where(F.col("kind") == 1)
-            .groupBy(F.col("x_row").alias("row"), F.col("x_col").alias("col"))
-            .agg(*aggs)
-            .join(cells.select("row", "col"), ["row", "col"], "left_semi")
-        )
-        pdf = new.toPandas().sort_values(["row", "col"]).reset_index(drop=True)
-        if len(pdf) == 0 or (ext is not None and pdf.equals(ext)):
-            return res
-        ext = pdf
-        inp = cells.join(
-            F.broadcast(spark.createDataFrame(pdf, new.schema)), ["row", "col"], "left"
-        )
-    raise RuntimeError(f"{what} did not converge; raise max_rounds")
-
-
 def _mfd_solve(tile: int, key, pdf: pd.DataFrame, resp: bool):
     """The one MFD tile solve behind fd8_accum's two passes
     (condense.solve_with_exits over the tile's weighted flow edges): the
@@ -1446,7 +1403,8 @@ def fd8_accum(tiles: DataFrame, *, tile: int = TILE, decimals: int = 4,
     the AFFINE mass-flux form a(c) = load(c) + sum w(u->c) * eff(u) *
     (a(u) - absorp(u)) (MassFluxDinf semantics — unclamped, hence still
     linear in the cross-tile inflows and solvable by the same condensed
-    border system; the CLAMPED D8 variant lives in mass_flux_d8).
+    border system; the CLAMPED D8 variant, mass_flux_d8, is not and
+    iterates raster.halo_rounds instead).
 
     The shape of flow_accum's D8 condensation (_d8_accum): MFD
     accumulation is *linear* in the cross-tile inflows, so pass 1 returns,
@@ -1625,7 +1583,17 @@ def upslope_max_length(pointers: DataFrame, *, tile: int = TILE) -> DataFrame:
 # ---------------------------------------------------------------------------
 # D8 mass flux (loading / efficiency / absorption transport)
 # ---------------------------------------------------------------------------
-def mass_flux_d8(cells: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
+def _own_target(gid: np.ndarray, t_lr, t_lc, m) -> np.ndarray:
+    """Row index of the own cell at tile-local (t_lr, t_lc) in ``gid`` (the
+    tile's row-index grid, -1 where no own cell) where ``m``, else -1."""
+    h, w = gid.shape
+    inb = m & (t_lr >= 0) & (t_lr < h) & (t_lc >= 0) & (t_lc < w)
+    t = np.full(len(t_lr), -1, dtype=np.int64)
+    t[inb] = gid[t_lr[inb], t_lc[inb]]
+    return t
+
+
+def mass_flux_d8(cells: DataFrame, *, tile: int = TILE,
                  decimals: int = 4) -> DataFrame:
     """(row, col, flux): D8 mass transport —
     HydroTools/src/plugins/MassFluxD8.java:255-300 semantics:
@@ -1635,80 +1603,62 @@ def mass_flux_d8(cells: DataFrame, *, tile: int = TILE, max_rounds: int = 64,
     cells: (row, col, code, load, eff, absorp) with code = the 2^j D8
     pointer.  Unlike flow/FD8 accumulation the per-cell transfer is
     CLAMPED at zero, so the condensed linear-response shortcut does not
-    apply; the plan is the tile-round exchange, _exchange_rounds (exact
-    tile-local Kahn solves + border mass exchange; each round moves exact
+    apply; the plan is raster.halo_rounds: each round a tile takes the
+    inflows of its halo cells' last ``acc`` (none yet while it is NaN)
+    and re-runs an exact tile-local Kahn solve.  Each round moves exact
     values across one tile border, so the float-equality convergence test
-    terminates at the fixpoint after as many rounds as the longest flow
-    path crosses borders).  Output rounds to `decimals` (sum association differs
-    across engines).
+    stops at the fixpoint after as many rounds as the longest flow path
+    crosses borders, plus two.  Output rounds to `decimals` (sum
+    association differs across engines).
     """
-    spark = cells.sparkSession
-    _scratch.release(spark, "massflux")
-    wdf = _scratch.track(spark, with_tiles(cells, tile).persist(), "massflux")
-    wdf.count()
-
-    schema = "row long, col long, acc double, x_row long, x_col long, kind int"
+    state = cells.select("row", "col", "code", "load", "eff", "absorp",
+                         F.lit(float("nan")).alias("acc"))
 
     def kernel(key, pdf):
-        tr, tc = int(key[0]), int(key[1])
-        r0, c0 = tr * tile, tc * tile
-        rr = pdf["row"].to_numpy(np.int64)
-        cc = pdf["col"].to_numpy(np.int64)
-        n = len(rr)
+        r0, c0 = int(key[0]) * tile, int(key[1]) * tile
+        ext = pdf["is_ext"].to_numpy()
+        own = ~ext
+        lr = pdf["row"].to_numpy(np.int64) - r0
+        lc = pdf["col"].to_numpy(np.int64) - c0
+        n = len(lr)
         code = pdf["code"].to_numpy(np.int64)
         load = pdf["load"].to_numpy(np.float64)
         eff = pdf["eff"].to_numpy(np.float64)
         absorp = pdf["absorp"].to_numpy(np.float64)
-        extv = (
-            pdf["ext"].fillna(0.0).to_numpy(np.float64)
-            if "ext" in pdf.columns else np.zeros(n)
-        )
-        lr, lc = rr - r0, cc - c0
-        h, w = int(lr.max()) + 1, int(lc.max()) + 1
-        gid = np.full((h, w), -1, dtype=np.int64)
-        gid[lr, lc] = np.arange(n)
+        old = pdf["acc"].to_numpy(np.float64)
+        gid = np.full((tile, tile), -1, dtype=np.int64)
+        gid[lr[own], lc[own]] = np.flatnonzero(own)
         j = np.where(code > 0, np.log2(np.maximum(code, 1)).astype(np.int64), -1)
-        t_lr = np.where(j >= 0, lr + _D8_DR[np.maximum(j, 0)], -1)
-        t_lc = np.where(j >= 0, lc + _D8_DC[np.maximum(j, 0)], -1)
-        internal = (j >= 0) & (t_lr >= 0) & (t_lr < h) & (t_lc >= 0) & (t_lc < w)
-        tgt = np.full(n, -1, dtype=np.int64)
-        tgt[internal] = gid[t_lr[internal], t_lc[internal]]
-        internal &= tgt >= 0
+        tgt = _own_target(gid, lr + _D8_DR[np.maximum(j, 0)],
+                          lc + _D8_DC[np.maximum(j, 0)], j >= 0)
+        # halo inflows from the neighbor tiles' last solve
+        hal = np.flatnonzero(ext & (tgt >= 0) & ~np.isnan(old))
+        extv = np.zeros(n)
+        np.add.at(extv, tgt[hal], np.maximum((old[hal] - absorp[hal]) * eff[hal], 0.0))
         acc = load + extv
-        indeg = np.bincount(tgt[internal & (tgt >= 0)], minlength=n)
-        frontier = np.flatnonzero(indeg == 0)
-        done = np.zeros(n, dtype=bool)
+        internal = own & (tgt >= 0)
+        indeg = np.bincount(tgt[internal], minlength=n)
+        frontier = np.flatnonzero(own & (indeg == 0))
+        done = ext.copy()
         while frontier.size:
             done[frontier] = True
             send = np.maximum((acc[frontier] - absorp[frontier]) * eff[frontier], 0.0)
             fi = internal[frontier]
             ft = tgt[frontier[fi]]
             np.add.at(acc, ft, send[fi])
-            dec = np.bincount(ft, minlength=n)
-            indeg = indeg - dec
+            indeg = indeg - np.bincount(ft, minlength=n)
             frontier = np.flatnonzero((indeg == 0) & ~done)
-        parts = [pd.DataFrame({
-            "row": rr, "col": cc, "acc": acc,
-            "x_row": np.full(n, -1, np.int64), "x_col": np.full(n, -1, np.int64),
-            "kind": np.zeros(n, np.int32),
-        })]
-        xs = np.flatnonzero((j >= 0) & ~internal)
-        if xs.size:
-            send = np.maximum((acc[xs] - absorp[xs]) * eff[xs], 0.0)
-            keep = send > 0.0
-            xs = xs[keep]
-            if xs.size:
-                parts.append(pd.DataFrame({
-                    "row": rr[xs], "col": cc[xs], "acc": send[keep],
-                    "x_row": rr[xs] + _D8_DR[j[xs]],
-                    "x_col": cc[xs] + _D8_DC[j[xs]],
-                    "kind": np.ones(xs.size, np.int32),
-                }))
-        return pd.concat(parts, ignore_index=True)
+        return pd.DataFrame({
+            "row": lr[own] + r0, "col": lc[own] + c0, "code": code[own],
+            "load": load[own], "eff": eff[own], "absorp": absorp[own],
+            "acc": acc[own], "changed": (acc[own] != old[own]).astype(np.int32),
+        })
 
-    out = _exchange_rounds(wdf, kernel, schema, [F.sum("acc").alias("ext")],
-                           max_rounds=max_rounds, what="mass_flux_d8")
-    return out.where(F.col("kind") == 0).select(
+    out = halo_rounds(
+        state, kernel, "row long, col long, code long, load double, eff double, "
+        "absorp double, acc double, changed int", tile=tile, what="mass_flux_d8",
+    )
+    return out.select(
         "row", "col", F.round("acc", decimals).cast("double").alias("flux")
     )
 
@@ -2300,7 +2250,7 @@ def branch_length(pointers: DataFrame, *, levels: int = 12,
 # MDInf stream heads (truncated-accumulation creek initiation)
 # ---------------------------------------------------------------------------
 def stream_heads_mdinf(tiles: DataFrame, *, threshold: float = 30.0,
-                       tile: int = TILE, max_rounds: int = 64) -> DataFrame:
+                       tile: int = TILE) -> DataFrame:
     """(row, col, head): StreamHeadsMDInf —
     WhiteboxGIS/.../StreamHeadsMDInf.java:330-540 semantics.  MDInf
     accumulation runs only while a cell's area a <= threshold; a crossing
@@ -2315,64 +2265,48 @@ def stream_heads_mdinf(tiles: DataFrame, *, threshold: float = 30.0,
     the oracle.
 
     Distributed shape: the truncated transport is NONLINEAR (per-cell mode
-    switch), so like the clamped D8 mass flux it runs as the tile-round
-    exchange, _exchange_rounds — exact in-tile Kahn solves, cross-tile
-    (mass, creek-marker) exchange, one border crossing per round."""
-    from .raster import explode_cells
-
-    spark = tiles.sparkSession
-    _scratch.release(spark, "shmdinf")
-    z = explode_cells(tiles).where(F.col("value") != NODATA) \
-        .withColumnRenamed("value", "z")
-    base = (
+    switch), so like the clamped D8 mass flux it runs on raster.halo_rounds
+    — each round a tile takes its halo cells' last (mass, creek-marker)
+    sends and re-runs an exact in-tile Kahn solve, one border crossing per
+    round."""
+    state = (
         mdinf_weights(tiles)
-        .join(flow_pointer_d8(tiles).select("row", "col", "code"),
-              ["row", "col"])
-        .join(z, ["row", "col"])
+        .join(flow_pointer_d8(tiles).select("row", "col", "code"), ["row", "col"])
+        .select("row", "col", "ws", "code", F.lit(float("nan")).alias("acc"),
+                F.lit(0).alias("fed"), F.lit(0).alias("crossed"))
     )
-    wdf = _scratch.track(spark, with_tiles(base, tile).persist(), "shmdinf")
-    wdf.count()
     T = float(threshold)
 
-    schema = ("row long, col long, acc double, fed int, crossed int, "
-              "x_row long, x_col long, kind int")
-
     def kernel(key, pdf):
-        tr, tc = int(key[0]), int(key[1])
-        r0, c0 = tr * tile, tc * tile
-        rr = pdf["row"].to_numpy(np.int64)
-        cc = pdf["col"].to_numpy(np.int64)
-        n = len(rr)
+        r0, c0 = int(key[0]) * tile, int(key[1]) * tile
+        ext = pdf["is_ext"].to_numpy()
+        own = ~ext
+        lr = pdf["row"].to_numpy(np.int64) - r0
+        lc = pdf["col"].to_numpy(np.int64) - c0
+        n = len(lr)
         ws = np.asarray([list(x) for x in pdf["ws"]], dtype=np.float64)
         code = pdf["code"].to_numpy(np.int64)
-        extv = (pdf["ext"].fillna(0.0).to_numpy(np.float64)
-                if "ext" in pdf.columns else np.zeros(n))
-        extf = (pdf["extfed"].fillna(0).to_numpy(np.int64)
-                if "extfed" in pdf.columns else np.zeros(n, np.int64))
-        lr, lc = rr - r0, cc - c0
-        h, w = int(lr.max()) + 1, int(lc.max()) + 1
-        gid = np.full((h, w), -1, dtype=np.int64)
-        gid[lr, lc] = np.arange(n)
-        # mdinf split targets
-        tgt = np.full((n, 8), -1, dtype=np.int64)
-        xok = np.zeros((n, 8), dtype=bool)   # ws>0 but off-tile
-        for j, (dr, dc, _) in enumerate(D8_OFFS):
-            t_lr, t_lc = lr + dr, lc + dc
-            m = ws[:, j] > 0.0
-            inb = m & (t_lr >= 0) & (t_lr < h) & (t_lc >= 0) & (t_lc < w)
-            tgt[inb, j] = gid[t_lr[inb], t_lc[inb]]
-            inb &= tgt[:, j] >= 0
-            xok[:, j] = m & ~inb
-            tgt[~inb, j] = -1
-        # d8 target (creek mode)
+        old = pdf["acc"].to_numpy(np.float64)
+        gid = np.full((tile, tile), -1, dtype=np.int64)
+        gid[lr[own], lc[own]] = np.flatnonzero(own)
+        # mdinf split targets and the d8 target (creek mode)
+        tgt = np.stack([_own_target(gid, lr + dr, lc + dc, ws[:, j] > 0.0)
+                        for j, (dr, dc, _) in enumerate(D8_OFFS)], axis=1)
         jd8 = np.where(code > 0,
                        np.log2(np.maximum(code, 1)).astype(np.int64), -1)
-        d8_lr = np.where(jd8 >= 0, lr + _D8_DR[np.maximum(jd8, 0)], -1)
-        d8_lc = np.where(jd8 >= 0, lc + _D8_DC[np.maximum(jd8, 0)], -1)
-        d8in = (jd8 >= 0) & (d8_lr >= 0) & (d8_lr < h) & (d8_lc >= 0) & (d8_lc < w)
-        d8t = np.full(n, -1, dtype=np.int64)
-        d8t[d8in] = gid[d8_lr[d8in], d8_lc[d8in]]
-        d8in &= d8t >= 0
+        d8t = _own_target(gid, lr + _D8_DR[np.maximum(jd8, 0)],
+                          lc + _D8_DC[np.maximum(jd8, 0)], jd8 >= 0)
+        # halo sends from the neighbor tiles' last solve
+        sent = ext & ~np.isnan(old)
+        creek = sent & (old > T) & (d8t >= 0)
+        split = (sent & (old <= T))[:, None] & (tgt >= 0)
+        extv = np.zeros(n)
+        np.add.at(extv, d8t[creek], T)
+        np.add.at(extv, tgt[split], (ws * old[:, None])[split])
+        fed = np.zeros(n, dtype=bool)
+        fed[d8t[creek]] = True
+        tgt[ext], d8t[ext] = -1, -1
+        d8in = d8t >= 0
         # Kahn indegree over the union of potential mass edges
         indeg = np.zeros(n, dtype=np.int64)
         np.add.at(indeg, tgt[tgt >= 0], 1)
@@ -2383,11 +2317,9 @@ def stream_heads_mdinf(tiles: DataFrame, *, threshold: float = 30.0,
         add_d8 = d8in & ~dup
         np.add.at(indeg, d8t[add_d8], 1)
         acc = 1.0 + extv
-        fed = extf.astype(bool)
         crossed = np.zeros(n, dtype=bool)
-        parts_x = []   # cross-tile emissions (x_row, x_col, mass, fedflag)
-        done = np.zeros(n, dtype=bool)
-        frontier = np.flatnonzero(indeg == 0)
+        done = ext.copy()
+        frontier = np.flatnonzero((indeg == 0) & ~done)
         while frontier.size:
             done[frontier] = True
             dec = np.zeros(n, dtype=np.int64)
@@ -2397,17 +2329,10 @@ def stream_heads_mdinf(tiles: DataFrame, *, threshold: float = 30.0,
                     if d8in[u]:
                         acc[d8t[u]] += T
                         fed[d8t[u]] = True
-                    elif jd8[u] >= 0:
-                        parts_x.append((rr[u] + _D8_DR[jd8[u]],
-                                        cc[u] + _D8_DC[jd8[u]], T, 1))
                 else:
                     for j in range(8):
                         if tgt[u, j] >= 0:
                             acc[tgt[u, j]] += ws[u, j] * acc[u]
-                        elif xok[u, j]:
-                            dr, dc, _ = D8_OFFS[j]
-                            parts_x.append((rr[u] + dr, cc[u] + dc,
-                                            ws[u, j] * acc[u], 0))
                 # decrement dependency edges regardless of mode
                 for j in range(8):
                     if tgt[u, j] >= 0:
@@ -2441,44 +2366,21 @@ def stream_heads_mdinf(tiles: DataFrame, *, threshold: float = 30.0,
                 fed |= newfed
                 if delta <= 1e-12 and not fc:
                     break
-            # one-time cross-tile emissions for the converged remnant
-            for u in rem:
-                if acc[u] > T:
-                    crossed[u] = True
-                    if not d8in[u] and jd8[u] >= 0:
-                        parts_x.append((rr[u] + _D8_DR[jd8[u]],
-                                        cc[u] + _D8_DC[jd8[u]], T, 1))
-                else:
-                    for j in range(8):
-                        if xok[u, j]:
-                            dr, dc, _ = D8_OFFS[j]
-                            parts_x.append((rr[u] + dr, cc[u] + dc,
-                                            ws[u, j] * acc[u], 0))
-        out = [pd.DataFrame({
-            "row": rr, "col": cc, "acc": acc,
-            "fed": fed.astype(np.int32), "crossed": crossed.astype(np.int32),
-            "x_row": np.full(n, -1, np.int64), "x_col": np.full(n, -1, np.int64),
-            "kind": np.zeros(n, np.int32),
-        })]
-        if parts_x:
-            xr = np.array([p[0] for p in parts_x], np.int64)
-            xc = np.array([p[1] for p in parts_x], np.int64)
-            xm = np.array([p[2] for p in parts_x], np.float64)
-            xf = np.array([p[3] for p in parts_x], np.int32)
-            out.append(pd.DataFrame({
-                "row": xr, "col": xc, "acc": xm,
-                "fed": xf, "crossed": np.zeros(len(xr), np.int32),
-                "x_row": xr, "x_col": xc,
-                "kind": np.ones(len(xr), np.int32),
-            }))
-        return pd.concat(out, ignore_index=True)
+            crossed[rem] = acc[rem] > T
+        changed = (acc != old) | (fed != pdf["fed"].to_numpy().astype(bool))
+        return pd.DataFrame({
+            "row": lr[own] + r0, "col": lc[own] + c0, "ws": pdf["ws"].to_numpy()[own],
+            "code": code[own], "acc": acc[own], "fed": fed[own].astype(np.int32),
+            "crossed": crossed[own].astype(np.int32),
+            "changed": changed[own].astype(np.int32),
+        })
 
-    out = _exchange_rounds(
-        wdf, kernel, schema,
-        [F.sum("acc").alias("ext"), F.max("fed").cast("int").alias("extfed")],
-        max_rounds=max_rounds, what="stream_heads_mdinf",
+    out = halo_rounds(
+        state, kernel, "row long, col long, ws array<double>, code long, "
+        "acc double, fed int, crossed int, changed int",
+        tile=tile, what="stream_heads_mdinf",
     )
-    return out.where(F.col("kind") == 0).select(
+    return out.select(
         "row", "col",
         ((F.col("crossed") == 1) & (F.col("fed") == 0)).cast("int").alias("head"),
     )

@@ -268,27 +268,37 @@ def tile_map(df: DataFrame, keys, fn, schema: str) -> DataFrame:
             .mapInArrow(lambda batches: _map_runs(batches, keys, fn, arrow), schema))
 
 
+# halo_rounds' round cap (each round moves values across one tile border)
+HALO_ROUNDS = 64
+
+
 def halo_rounds(state: DataFrame, kernel, schema: str, *, tile: int,
-                max_rounds: int, what: str) -> DataFrame:
+                what: str) -> DataFrame:
     """Iterate tile-local solves over ``state`` (row, col and the value
     columns) to their fixpoint, exchanging a 1-cell halo across tile
-    borders each round.
+    borders each round: the one fixpoint round loop of the tile layer
+    (fill_depressions, cost.cost_distance, mass_flux_d8 and
+    stream_heads_mdinf).
 
     The state is keyed by tile (tile_key) and persisted, since round 1
     reads it twice; it is partitioned only by each round's shuffle.  Each
-    round ships every tile-border cell's current row to the tiles of
-    its off-tile 8-neighbors (``is_ext`` true; an edge cell reaches the
-    tile across that edge once per neighbor there, up to three copies,
-    which a min-style relaxation ignores), unions it with the own
-    rows (``is_ext`` false), and calls ``kernel(key, pdf)`` (tile_map: one
-    Python call per shuffle partition) once per tile holding own
-    cells.  The kernel returns its own cells with the state's value
-    columns (``schema``) and ``changed`` (1 where the estimate moved); the
-    tile key is added back here.  localCheckpoint cuts each round's
-    lineage (without it the plan nests every earlier round and the driver
-    heap grows without bound), and the loop stops at the first round that
-    changes nothing — O(tile-graph diameter) rounds for the monotone
-    relaxations that use it (fill_depressions, cost_distance)."""
+    round ships every tile-border cell's current row to the tiles of its
+    off-tile 8-neighbors (``is_ext`` true), unions it with the own rows
+    (``is_ext`` false), and calls ``kernel(key, pdf)`` (tile_map: one
+    Python call per shuffle partition) once per tile holding own cells.
+    An edge cell reaches the tile across that edge once per neighbor
+    there; ``solve`` keeps one copy, sorted by (row, col), so each halo
+    cell arrives once and in the same order every round (a summing kernel
+    counts it once and its float sums repeat exactly).  The kernel returns
+    its own cells with the state's value columns (``schema``) and
+    ``changed`` (1 where its value moved); the tile key is added back
+    here.  localCheckpoint cuts each round's lineage (without it the plan
+    nests every earlier round and the driver heap grows without bound),
+    and the loop stops at the first round that changes nothing.  It
+    relies on no monotonicity: a value crosses one tile border per round,
+    so the rounds are the border crossings on the longest dependency path
+    plus two (round 1 has no halo values yet; the last round confirms),
+    capped at HALO_ROUNDS."""
     offs = F.array(*[
         F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
         for dr, dc in _OFFS if (dr, dc) != (0, 0)
@@ -302,13 +312,15 @@ def halo_rounds(state: DataFrame, kernel, schema: str, *, tile: int,
     nkey = tile_key(tile, F.col("row") + F.col("_o.dr"), F.col("col") + F.col("_o.dc"))
 
     def solve(key, pdf):
-        if pdf["is_ext"].all():  # halo spilled onto a tile with no cells
+        ext = pdf["is_ext"].to_numpy()
+        if ext.all():  # halo spilled onto a tile with no cells
             return pd.DataFrame()
-        out = kernel(key, pdf)
+        halo = pdf[ext].drop_duplicates(["row", "col"]).sort_values(["row", "col"])
+        out = kernel(key, pd.concat([pdf[~ext], halo], ignore_index=True))
         out["_tr"], out["_tc"] = key
         return out
 
-    for _ in range(max_rounds):
+    for _ in range(HALO_ROUNDS):
         own = state.select(*vals, "_tr", "_tc", F.lit(False).alias("is_ext"))
         halo = (
             state.where(on_border)
@@ -324,7 +336,7 @@ def halo_rounds(state: DataFrame, kernel, schema: str, *, tile: int,
         state = new_state
         if n_changed == 0:
             return state
-    raise RuntimeError(f"{what} did not converge; raise max_rounds")
+    raise RuntimeError(f"{what} did not converge in {HALO_ROUNDS} rounds")
 
 
 def _halo_contributions(tiles: DataFrame) -> DataFrame:
