@@ -285,14 +285,21 @@ def test_chase_paths_tiers_equal(spark, monkeypatch):
 def test_round_state_size_estimate_stays_small(spark, monkeypatch):
     """Round checkpoints must not inherit the origin plan's size estimate:
     each self-join multiplies it, so kept across rounds its digit count
-    doubles per round and planning the estimate dominates the solve."""
+    doubles per round and planning the estimate dominates the solve.
+    The cases: both distributed loop solvers and the deepest jump table of
+    hydro's binary lifting (J_8 of the 300-node chain)."""
     monkeypatch.setattr(condense, "DRIVER_ROWS", 0)
     n = 300
     pairs = spark.range(n - 1).selectExpr("id AS plabel", "id + 1 AS nplabel")
     fwd = spark.range(n).selectExpr(
         "0L AS row", "id AS col", "IF(id < %d, 0L, -1L) AS t_row" % (n - 1),
         "id + 1 AS t_col", "1.0D AS w", "0L AS p_row", "id AS p_col")
-    for out in (condense.merge_labels(pairs), condense.chase_paths(fwd)):
+    j0 = spark.range(n - 1).selectExpr(
+        "0L AS row", "id AS col", "0L AS erow", "id + 1 AS ecol", "1.0D AS jlen")
+    jumps = hydro._lift(j0, "lift_test")
+    assert len(jumps) == 9
+    for out in (condense.merge_labels(pairs), condense.chase_paths(fwd),
+                jumps[-1]):
         size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         assert len(str(size)) <= 20, f"size estimate of {len(str(size))} digits"
 

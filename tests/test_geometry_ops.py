@@ -4,6 +4,7 @@ location predicates) against independent numpy/scipy-free checks."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -122,24 +123,83 @@ def test_location_predicates_symmetry(spark):
             assert xb <= xa and yb <= ya and Xb >= Xa and Yb >= Ya
 
 
-def test_lifting_level_invariance(spark):
-    """downslope_index and stream_relief results do not depend on the
-    (sufficient) number of lifting levels."""
-    from whitebox_geospatial_analysis_tools_spark.operators import raster as R
+def _ramp(spark, rows, cols, steep_from, gentle, steep):
+    """(cells, z): a rows x cols plane where every row drains east along
+    its own D8 path (code 16 = E, 0 at the last column), z falling by
+    ``gentle`` per cell up to column ``steep_from`` and by ``steep``
+    after it (dyadic steps, so every drop is exact)."""
+    c = np.arange(cols)
+    z = 16.0 - gentle * np.minimum(c, steep_from) \
+        - steep * np.maximum(c - steep_from, 0)
+    pdf = [(r, int(j), float(z[j]), 16 if j < cols - 1 else 0)
+           for r in range(rows) for j in c]
+    return spark.createDataFrame(pdf, "row long, col long, z double, code long"), z
+
+
+def _numpy_walk(nxt, stop):
+    """Sequential D8 walk from every cell over next-cell array ``nxt``
+    (-1 at a path's end), one hop per sweep, while ``stop(start, hop)`` is
+    false: (last cell reached, steps taken)."""
+    cur = np.arange(len(nxt))
+    steps = np.zeros(len(nxt))
+    live = np.ones(len(nxt), dtype=bool)
+    while live.any():
+        hop = nxt[cur]
+        live &= (hop >= 0)
+        live[live] = ~stop(np.flatnonzero(live), hop[live])
+        cur = np.where(live, hop, cur)
+        steps += live
+    return cur, steps
+
+
+def test_path_walks_reach_long_path_ends_and_raise_on_cycles(spark):
+    """downslope_index, stream_relief and branch_length walk each D8 path
+    to its end however long it is: a 1 x 1100 ramp that steepens past
+    column 1050 (column 0 drops d = 4 only ~1080 cells downstream, past
+    2^10 - 1) and a 2 x 4200 ramp (past 2^12 - 1 steps), each against a
+    plain numpy walk; a 2-cell code cycle raises instead of returning."""
     from whitebox_geospatial_analysis_tools_spark.operators.hydro import (
-        downslope_index, flow_pointer_d8,
+        branch_length, downslope_index, stream_relief,
     )
 
-    dem = R.synth_raster(spark, 40, 60)
-    ptr = flow_pointer_d8(dem)
-    z = (
-        R.explode_cells(dem)
-        .where(F.col("value") != R.NODATA)
-        .withColumnRenamed("value", "z")
-    )
-    cells = ptr.join(z, ["row", "col"])
-    a = downslope_index(cells, levels=8).toPandas() \
-        .sort_values(["row", "col"]).reset_index(drop=True)
-    b = downslope_index(cells, levels=11).toPandas() \
-        .sort_values(["row", "col"]).reset_index(drop=True)
-    assert a.equals(b)
+    n, d = 1100, 4.0
+    cells, z = _ramp(spark, 1, n, 1050, 2.0 ** -9, 2.0 ** -4)
+    nxt = np.append(np.arange(1, n), -1)
+    end, fl = _numpy_walk(nxt, lambda s, h: z[h] <= z[s] - d)
+    hop = nxt[end]
+    assert fl[0] > 2 ** 10
+    with np.errstate(divide="ignore", invalid="ignore"):
+        partial = (z[end] - (z - d)) / (z[end] - z[np.maximum(hop, 0)])
+        want = np.where(hop >= 0, d / (fl + partial), (z - z[end]) / fl)
+    got = downslope_index(cells, d=d).toPandas().sort_values("col")
+    assert got["col"].tolist() == list(range(n - 1))
+    assert np.abs(got["di"].to_numpy() - want[:-1]).max() < 1e-6
+
+    stream = cells.where(F.col("col") == n - 1).select("row", "col")
+    end, fl = _numpy_walk(nxt, lambda s, h: h == n - 1)
+    got = stream_relief(cells, stream).toPandas().sort_values("col")
+    assert got["col"].tolist() == list(range(n))
+    assert np.array_equal(got["dist_to_stream"].to_numpy(),
+                          np.append(fl[:-1] + 1, 0.0))
+    assert np.array_equal(got["hand"].to_numpy(), z - z[-1])
+
+    # branch_length: E pairs meet one step on, S/SE/SW pairs never meet
+    # (each row has its own terminal), so a cell's bl is its full path
+    # length
+    n = 4200
+    cells, _ = _ramp(spark, 2, n, n, 2.0 ** -10, 0.0)
+    nxt = np.append(np.arange(1, n), -1)
+    _, full = _numpy_walk(nxt, lambda s, h: np.zeros(len(s), dtype=bool))
+    got = branch_length(cells.select("row", "col", "code")).toPandas() \
+        .sort_values(["row", "col"])
+    assert len(got) == 2 * n
+    assert np.array_equal(got["bl"].to_numpy(), np.tile(full, 2))
+
+    cyc = spark.createDataFrame(
+        [(0, 0, 2.0, 16), (0, 1, 1.0, 8), (0, 2, 0.0, 0)],
+        "row long, col long, z double, code long")
+    for op in (lambda: downslope_index(cyc),
+               lambda: stream_relief(cyc, cyc.where("col = 2").select("row", "col")),
+               lambda: branch_length(cyc.select("row", "col", "code"))):
+        with pytest.raises(RuntimeError, match="cycle"):
+            op()
